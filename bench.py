@@ -1,51 +1,31 @@
-"""Benchmark harness (driver contract + scaling evidence).
+"""Benchmark harness: headline queries plus one N-vs-4N scaling round.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then measures the full
-dedup pipeline AND its signature kernel at two cluster sizes — 1 executor
-JVM (N=4 cores) vs 4 executor JVMs (4N=16 cores), 4 cores + 4g each, via
-local-cluster, the literal N-vs-4N-EXECUTORS shape of the north rule: the
-executor COUNT varies, the executor shape stays fixed, so the 4N leg gets
-the 4x aggregate heap and 4x shuffle servers a real 4N cluster has. The
-r01-r04 emulation held executor count at 4 and varied cores-per-executor
-instead — and a same-window A/B (tools/topo_probe.py, 2026-08-19, BENCH.md
-§topology) showed that shape's N leg runs the identical 60k-row job ~3.5x
-SLOWER on the same 8 cores (73-79 s as 4 JVMs x 2 cores vs 20-23 s as
-2 JVMs x 4 cores): its "raw weak efficiency ≥ 1" readings were a
-handicapped-denominator artifact, not engine scaling. The 2-vs-8-JVM shape
-that replaced it was honest about executors but pinned the 4N leg at 32
-cores — past this box's memory-bandwidth knee (the numpy stream control
-measures 8→32-process efficiency at 0.27; 32 streaming processes move LESS
-aggregate data than 16 here) and oversubscribed the 32-hardware-thread
-guest once 32 executor cores + 32 Python workers + the driver stacked up.
-The 1-vs-4 shape keeps the 4N leg at 16 cores, inside the envelope
-(host 4→16 stream 0.76 / cache 0.96) — the bandwidth profile a real 4x
-scale-out actually has, since real added executors bring their own memory
-buses. Measured over
-a deterministic synthetic code corpus, and prints ONE JSON line:
+Measures the full dedup pipeline AND its signature kernel on a
+deterministic synthetic code corpus at two executor counts with one fixed
+executor shape, then runs the headline queries at $SPARK_GRAFT_SF_DIR
+(default: SF_DIR, the sf0.1 test data) on local[$SPARK_GRAFT_CPUS]
+(default: the host's CPUs). The scaling legs:
+
+  weak N   local-cluster[1,c,M] on BENCH_ROWS/4 rows
+  4N       local-cluster[4,c,M] on BENCH_ROWS rows
+
+c = os.cpu_count() // 4 cores per executor, so the 4N leg uses every core,
+and M (MB of executor heap) is sized so four executor heaps plus the leg
+driver's take at most half of host RAM. Per-core load is the same on both legs. Each leg
+runs once, in a fresh ``python bench.py --scaling-leg ...`` subprocess that
+warms up, measures, and prints one JSON line. Below 4 cores there is no
+1-vs-4 executor shape, and the scaling block is
+``{"skipped": <reason>, "gate_met": false}``.
+
+Weak efficiency = fps(4N) / (4 * fps(weak N)). The BASELINE.json gate is
+>= 0.8 on both RAW weak ratios, the pipeline and the kernel. Prints ONE
+JSON line:
 
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-   "sf": ..., "files_per_sec": ..., "scaling": {"n_fps": ..., "fourn_fps":
-   ..., "efficiency": ..., "kernel_efficiency": ...}}
+   "sf": ..., "headline_reps": ..., "files_per_sec": <4N fps>,
+   "scaling": {"weak_efficiency": ..., "kernel_weak_efficiency": ...,
+               "gate_basis": ..., "gate_met": ..., ...}}
 
-Efficiency = fps(4N) / (4 * fps(N)); the BASELINE.json gate is >= 0.8,
-asserted on two RAW weak-style ratios (matched per-core load, the way a 4x
-executor cluster is actually loaded): the full pipeline and the signature
-kernel (the stage that dominates core-seconds at real scale), both measured
-in one stable paired window. Host-normalized values (divided by the
-window's own bracketing numpy control) are reported alongside as context,
-never substituted for the raw gate. Strong-style ratios (same corpus both
-sides) are measured in round 0 and reported alongside; the full pipeline
-at sandbox SF is latency-bound and the strong kernel pair measures the
-guest's aggregate-throughput ceiling rather than the engine (see BENCH.md
-weather map). Scaling legs
-execute in two PERSISTENT worker subprocesses (one per cluster topology,
-spun up once and reused every round — the cold JVM spin-up that used to
-cost ~90 s per round is paid once, so ~2x the weather windows fit one
-budget). All legs of one
-round (including the numpy host control) run back-to-back in one weather
-window; rounds repeat until the gate is evidenced or the budget expires,
-and the best PAIRED round is reported with every round listed alongside.
 Set SPARK_GRAFT_SKIP_SCALING=1 to print headline numbers only.
 """
 
@@ -53,38 +33,26 @@ from __future__ import annotations
 
 import json
 import os
+import signal
 import subprocess
 import sys
 import time
 
+from dedup_domains_spark.session import host_parallelism, host_ram_mb
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# 240k rows: large enough that compute dominates the per-stage barrier
-# latency (at 60k the 32-core run is ~50% fixed latency and the ratio says
-# nothing about throughput scaling)
+CPUS = host_parallelism()
+# 240k rows: large enough that compute, not per-stage barrier latency,
+# dominates the 4N leg
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "240000"))
-# scaling rounds: keep going until the efficiency gate is evidenced or the
-# budget runs out (the r02 lesson: ONE round lands in ONE hypervisor weather
-# window, and a starved window produces ratios that say nothing — see
-# BENCH.md host-control experiment and the memory note on host noise).
-# The round cap exists only as a runaway backstop ABOVE the wall budget:
-# the r04 driver run hit the old cap of 12 with ~20 min of budget left
-# while its raw weak ratio was climbing 0.70 -> 0.83 across the final
-# rounds — the weather was turning passable exactly when the cap fired.
-# With persistent scaling workers (r05: the JVM topology spins up once, not
-# per leg) a warm round costs ~1-2.5 min, so 40 rounds sit above the hour
-# in any weather; the predictive budget guard (run_scaling) still stops
-# before an overrun and the loop still breaks early the moment one stable
-# round evidences the raw gate.
-SCALING_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "40"))
-SCALING_BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_SEC", "3600"))
-# inter-round idle when a round measures DEEP starvation (see run_scaling):
-# the host throttles like a token-bucket CPU-credit scheduler (BENCH.md
-# weather map — sustained 32-thread legs throttle while 6-s burst controls
-# stay fast), so back-to-back rounds keep the bucket drained and resample
-# the same starved reading; a short idle lets credits refill first.
-REFILL_IDLE_SEC = float(os.environ.get("SPARK_GRAFT_REFILL_IDLE_SEC", "150"))
+HEADLINE_REPS = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
 GATE = 0.8
+# kernel draws per leg: equal on both legs, since best-of-N is a
+# min-statistic and unequal draws would bias the ratio
+KERNEL_REPS = 3
+# heap of each leg's driver; it schedules and collects, the executors work
+LEG_DRIVER_MB = 2048
+LEG_TIMEOUT_SEC = 3600
 
 HEADLINE = [
     "exact_dedup_survivors",
@@ -105,86 +73,6 @@ HEADLINE = [
 ]
 
 
-def _burn(q, secs: float, size: int) -> None:
-    import numpy as np
-
-    rng = np.random.default_rng(0)
-    a = rng.integers(0, 1 << 62, size=size, dtype=np.uint64)
-    # one untimed warmup rep: page-fault the arrays + JIT the ufunc path so
-    # the timed window measures steady-state, not allocation
-    np.sort((a * np.uint64(0x9E3779B97F4A7C15)) ^ (a >> np.uint64(13)))
-    n = 0
-    t0 = time.time()
-    while time.time() - t0 < secs:
-        b = (a * np.uint64(0x9E3779B97F4A7C15)) ^ (a >> np.uint64(13))
-        np.sort(b)
-        n += 1
-    # per-child elapsed excludes spawn/import stagger — the parent sums
-    # per-child rates, an honest aggregate of concurrent throughput
-    q.put((n, time.time() - t0))
-
-
-def host_control(secs: float = 12.0, n_procs: int = 4,
-                 fourn_procs: int = 16) -> dict:
-    """Pure-numpy multiprocessing scaling control — NO Spark involved.
-
-    Measures what this host physically delivers when n_procs vs fourn_procs
-    processes run the same hash+sort loop: 'stream' uses 16 MB arrays
-    (memory-bandwidth profile, like the shingle kernel), 'cache' uses 400 KB
-    arrays (L2-resident). The defaults match the scaling topology's core
-    counts (4 vs 16 — see run_scaling). Measured 2026-08-20: the 4→16 band
-    delivers stream 0.76 / cache 0.96, while the old 8→32 band delivered
-    stream 0.27 / cache 0.79 — 32 streaming processes move LESS aggregate
-    data than 16 on this box (the bandwidth knee sits between 16 and 32
-    threads), which is why the 4N leg now stops at 16 cores. RAW Spark
-    efficiencies must be read against this envelope; the normalized numbers
-    divide by the cache control (the conservative bound)."""
-    import multiprocessing as mp
-
-    out = {}
-    for name, size in (("stream", 2_000_000), ("cache", 50_000)):
-        rates = {}
-        for nproc in (n_procs, fourn_procs):
-            q = mp.Queue()
-            ps = [mp.Process(target=_burn, args=(q, secs, size)) for _ in range(nproc)]
-            for p in ps:
-                p.start()
-            results = [q.get() for _ in ps]
-            for p in ps:
-                p.join()
-            rates[nproc] = sum(n / el for n, el in results if el > 0)
-        out[name] = {
-            "n_rate": round(rates[n_procs], 1),
-            "fourn_rate": round(rates[fourn_procs], 1),
-            "efficiency": round(
-                rates[fourn_procs] / (4.0 * rates[n_procs]), 3),
-        }
-    return out
-
-
-def _kernel_reps(n_rows: int, parallelism: int) -> int:
-    """Best-of-N draw count for the kernel timing of one scaling leg.
-
-    Both GATED legs (4N on BENCH_ROWS, weak-N on BENCH_ROWS/4) carry the
-    same per-core load and therefore the same draw count — a min-statistic
-    with asymmetric draws would bias the gated ratio (ADVICE r04 item 2).
-    Only the strong 240k-at-N-cores leg (4x the per-core work, round-0
-    reported-not-gated ratios) drops to 2 reps for wall budget."""
-    per_core_rows = n_rows // max(parallelism, 1)
-    return 2 if per_core_rows > 10_000 else 3
-
-
-def _gate_ok(s: dict) -> bool:
-    """The BASELINE gate as written: RAW weak-style pipeline AND RAW
-    weak-style kernel efficiency >= 0.8, inside one stable paired window.
-    Host-normalized values are context, never part of this predicate."""
-    return bool(
-        s["window_stable"]
-        and (s["weak_efficiency"] or 0.0) >= GATE
-        and (s["kernel_weak_efficiency"] or 0.0) >= GATE
-    )
-
-
 def _ensure_corpus(rows: int = BENCH_ROWS) -> str:
     cache = f"/tmp/dedup_bench_corpus_{rows}.parquet"
     if not os.path.exists(cache):
@@ -202,17 +90,10 @@ def _ensure_corpus(rows: int = BENCH_ROWS) -> str:
     return cache
 
 
-HEADLINE_REPS = int(os.environ.get("SPARK_GRAFT_HEADLINE_REPS", "2"))
-
-
 def run_headline() -> dict[str, float]:
-    """Best-of-N per query (default 2). The scaling section retries whole
-    rounds across weather windows, but a single-shot headline has no such
-    defense: one starved phase inflates the compute-heavy queries 4-10x
-    while the sub-second barrier-bound ones stay flat (observed 2026-08-17:
-    ngram_jaccard 58.8 s in-bench vs 4.0 s isolated minutes later). Rep 1
-    also carries JIT/page-cache warm-up, so rep 2 is the steady-state
-    number a real cluster job sees."""
+    """Best-of-N per query (default 2): rep 1 also carries JIT and
+    page-cache warm-up, so the best rep is the steady-state number a real
+    cluster job sees."""
     from dedup_domains_spark import get_spark
     from dedup_domains_spark.plans.queries import QUERIES
 
@@ -230,16 +111,9 @@ def run_headline() -> dict[str, float]:
     return times
 
 
-def _measure_leg(spark, corpus: str, mode: str, parallelism: int) -> dict:
-    """Timed body of ONE scaling leg, run inside an already-warm session.
-
-    mode="kernel" measures the signature kernel only and skips the full
-    pipeline. mode="pipeline" skips the kernel best-of-N. mode="full" does
-    both — the 4N leg and the weak-N leg every round (the weak-N kernel
-    feeds the weak-style kernel gate ratio), the strong 240k-row 8-core leg
-    in round 0 only (4x the work on 1/4 the cores, ~70% of a round's wall,
-    funding only the reported-not-gated strong ratios).
-    """
+def _measure_leg(spark, corpus: str, parallelism: int) -> dict:
+    """Timed body of one scaling leg, run inside an already-warm session:
+    the signature kernel (best of KERNEL_REPS), then the full pipeline."""
     from pyspark.sql import functions as F
 
     from dedup_domains_spark import DedupConfig
@@ -250,611 +124,153 @@ def _measure_leg(spark, corpus: str, mode: str, parallelism: int) -> dict:
     cfg = DedupConfig()
     df = spark.read.parquet(corpus)
     n = df.count()
-
-    # (a) signature kernel — the stage that is >95% of core-seconds at real
-    # scale; its scaling is the honest proxy for cluster scaling in a
-    # latency-bound sandbox (see BENCH.md calibration). Best-of-3: the first
-    # runs still carry python-worker / page-cache warm-up at this corpus
-    # size, and the shared host adds ±30-45% run-to-run noise.
     out = {"parallelism": parallelism, "rows": n}
-    if mode != "pipeline":
-        # fan out ONCE before caching: the parquet scan yields only a
-        # handful of partitions at this corpus size, and repartitioning
-        # inside every timed rep would re-shuffle the full content column
-        # each time — the reps would measure tmpfs shuffle bandwidth, not
-        # the signature stage (add_signatures skips its own fan-out when
-        # the input already carries enough partitions)
-        ident = (
-            with_row_identity(df).select("uid", "content")
-            .repartition(parallelism * 2).cache()
-        )
-        ident.count()
-        sig = add_signatures(ident, cfg, repartition=0)
-        kernel_wall = float("inf")
-        # EQUAL draws on both GATED legs (ADVICE r04 item 2): best-of-N is a
-        # min-statistic, so giving the numerator leg more reps than the
-        # denominator leg biases the gated ratio upward under ±30-45%
-        # run-to-run noise. The weak-N leg (BENCH_ROWS/4 on 4 cores) has the
-        # same per-core load — and roughly the same wall — as the 4N leg, so
-        # both get the same draw count. Only the strong 240k-at-N-cores leg
-        # (4x the per-core work, round 0 only, feeding reported-not-gated
-        # strong ratios) keeps 2 reps for wall budget.
-        reps = _kernel_reps(n, parallelism)
-        for _ in range(reps):
-            t0 = time.time()
-            sig.select(F.sum("n_tokens")).collect()
-            kernel_wall = min(kernel_wall, time.time() - t0)
-        ident.unpersist()
-        out["kernel_sec"] = round(kernel_wall, 2)
-        out["kernel_fps"] = round(n / kernel_wall, 1)
-    if mode in ("full", "pipeline"):
-        # (b) full pipeline
+
+    # (a) signature kernel. Fan out ONCE before caching: repartitioning
+    # inside every timed rep would re-shuffle the full content column each
+    # time, and the reps would measure shuffle bandwidth, not the signature
+    # stage (add_signatures skips its own fan-out with repartition=0)
+    ident = (
+        with_row_identity(df).select("uid", "content")
+        .repartition(parallelism * 2).cache()
+    )
+    ident.count()
+    sig = add_signatures(ident, cfg, repartition=0)
+    kernel_wall = float("inf")
+    for _ in range(KERNEL_REPS):
         t0 = time.time()
-        res = run_pipeline(spark, df, cfg)
-        res.survivors.count()
-        res.cluster_map.count()
-        wall = time.time() - t0
-        out["wall_sec"] = round(wall, 2)
-        out["fps"] = round(n / wall, 1)
+        sig.select(F.sum("n_tokens")).collect()
+        kernel_wall = min(kernel_wall, time.time() - t0)
+    ident.unpersist()
+    out["kernel_sec"] = round(kernel_wall, 2)
+    out["kernel_fps"] = round(n / kernel_wall, 1)
+
+    # (b) full pipeline
+    t0 = time.time()
+    res = run_pipeline(spark, df, cfg)
+    res.survivors.count()
+    res.cluster_map.count()
+    wall = time.time() - t0
+    out["wall_sec"] = round(wall, 2)
+    out["fps"] = round(n / wall, 1)
     return out
 
 
-def _scaling_worker(parallelism: int, n_workers: int) -> None:
-    """Entry point for a PERSISTENT scaling worker subprocess.
-
-    n_workers > 0 runs on local-cluster[n_workers, parallelism/n_workers, …]
-    — separate executor JVMs, the faithful N-vs-4N-executors stand-in
-    (single-JVM local[N] thread scheduling saturates ~8 threads on this
-    class of host; see BENCH.md calibration).
-
-    The session (master + worker JVMs + python workers + JIT warm-up) is
-    built ONCE, then the worker serves measurement commands over
-    stdin/stdout — one JSON command per line ({"corpus": ..., "mode": ...}),
-    one "RESULT {…}" line per reply. Before this, every leg of every retry
-    round paid ~45 s of cold JVM spin-up in a fresh subprocess (~90 s of
-    fixed cost per round); amortizing it roughly doubles the number of
-    hypervisor weather windows one budget can sample, which is what actually
-    raises the odds that a credit window lands inside the retry loop
-    (BENCH.md weather map). Measurement fidelity: all rounds ≥1 run in the
-    same warm topology on BOTH legs symmetrically, and every round is still
-    bracketed by the parent's numpy host controls.
-    """
-    import shutil
-
+def _scaling_leg(executors: int, cores: int, mem_mb: int, corpus: str) -> None:
+    """Entry point of one leg subprocess: start local-cluster[executors,
+    cores, mem_mb], warm JIT and the Python workers on a tiny run, measure,
+    print the result as the last stdout line."""
     from dedup_domains_spark import DedupConfig, get_spark
     from dedup_domains_spark.datagen import gen_code_corpus
     from dedup_domains_spark.plans.pipeline import run_pipeline
 
-    master = None
-    extra = {}
-    if n_workers:
-        cores = max(parallelism // n_workers, 1)
-        master = f"local-cluster[{n_workers},{cores},6144]"
-        extra = {"spark.executor.memory": "4g"}
-    # conf experiments (tools/conf_probe.py) inject overrides through the
-    # environment so an A/B can run two otherwise-identical workers
-    extra.update(json.loads(os.environ.get("SPARK_GRAFT_WORKER_CONF", "{}")))
+    par = executors * cores
     spark = get_spark(
-        f"bench-scale-{parallelism}", parallelism=parallelism,
-        shuffle_partitions=parallelism, master=master, extra_conf=extra,
+        f"bench-scale-{executors}x{cores}", parallelism=par,
+        # the pipeline fans out to 2x default parallelism; matching it keeps
+        # rows per shuffle partition equal on both legs
+        shuffle_partitions=par * 2,
+        master=f"local-cluster[{executors},{cores},{mem_mb}]",
+        extra_conf={"spark.executor.memory": f"{mem_mb}m",
+                    "spark.driver.memory": f"{LEG_DRIVER_MB}m"},
     )
-    ckpt_dir = f"/dev/shm/spark-tmp/ckpt_{parallelism}"
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    # warm JIT + python workers with a tiny run so the timed runs measure
-    # steady-state throughput, not first-task compilation
     warm = spark.createDataFrame(gen_code_corpus(300).files)
     run_pipeline(spark, warm, DedupConfig()).survivors.count()
     spark.catalog.clearCache()
-    print("READY", flush=True)
-    for line in sys.stdin:
-        line = line.strip()
-        if not line or line == "quit":
-            break
-        cmd = json.loads(line)
-        out = _measure_leg(spark, cmd["corpus"], cmd.get("mode", "full"),
-                           parallelism)
-        print("RESULT " + json.dumps(out), flush=True)
-        # a persistent session must not accumulate state across rounds:
-        # drop the pipeline's stage caches and the finished job's reliable
-        # checkpoint files (tmpfs!) so round k measures the same session
-        # round 1 did and /dev/shm never fills over a 40-round loop
-        spark.catalog.clearCache()
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        os.makedirs(ckpt_dir, exist_ok=True)
+    out = _measure_leg(spark, corpus, par)
     spark.stop()
+    print(json.dumps(out), flush=True)
 
 
-class _ScalingWorker:
-    """Parent-side handle on one persistent scaling worker.
-
-    Reads the worker's stdout on a daemon thread (commands can take minutes;
-    a blocking readline with no timeout would hang the whole bench past its
-    budget if a leg wedges), restarts the child once per run() call if it
-    died (a crashed leg costs one cold spin-up, not the whole artifact)."""
-
-    def __init__(self, par: int, n_workers: int,
-                 conf: dict | None = None, tag: str = ""):
-        self.par, self.n_workers = par, n_workers
-        self.conf, self.tag = conf, tag
-        self._spawn()
-
-    def _spawn(self) -> None:
-        import queue
-        import threading
-
-        self.log_path = f"/tmp/bench_worker_{self.par}{self.tag}.log"
-        self._log = open(self.log_path, "ab")
-        env = dict(os.environ)
-        if self.conf:
-            env["SPARK_GRAFT_WORKER_CONF"] = json.dumps(self.conf)
-        self.proc = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), "--scaling-worker",
-             str(self.par), str(self.n_workers)],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE, stderr=self._log,
-            text=True, bufsize=1, env=env,
-        )
-        self._q: "queue.Queue[str | None]" = queue.Queue()
-        self.ready = False
-        threading.Thread(
-            target=self._pump, args=(self.proc, self._q), daemon=True
-        ).start()
-
-    @staticmethod
-    def _pump(proc, q) -> None:
-        for ln in proc.stdout:
-            q.put(ln.rstrip("\n"))
-        q.put(None)  # EOF sentinel: the child exited
-
-    def _next_line(self, deadline: float) -> str:
-        import queue
-
-        try:
-            ln = self._q.get(timeout=max(deadline - time.time(), 0.1))
-        except queue.Empty:
-            raise RuntimeError(
-                f"scaling worker par={self.par} timed out "
-                f"(see {self.log_path})"
-            ) from None
-        if ln is None:
-            raise RuntimeError(
-                f"scaling worker par={self.par} died (see {self.log_path})"
-            )
-        return ln
-
-    def wait_ready(self, timeout: float = 900.0) -> None:
-        if self.ready:
-            return
-        deadline = time.time() + timeout
-        while self._next_line(deadline) != "READY":
-            pass
-        self.ready = True
-
-    def run(self, corpus: str, mode: str = "full",
-            timeout: float = 3600.0) -> dict:
-        """One measurement command; on a dead/hung child, respawn cold and
-        retry ONCE (same command), then propagate."""
-        for attempt in (0, 1):
-            try:
-                self.wait_ready()
-                self.proc.stdin.write(
-                    json.dumps({"corpus": corpus, "mode": mode}) + "\n")
-                self.proc.stdin.flush()
-                deadline = time.time() + timeout
-                while True:
-                    ln = self._next_line(deadline)
-                    if ln.startswith("RESULT "):
-                        return json.loads(ln[len("RESULT "):])
-            except (RuntimeError, BrokenPipeError):
-                self.close(kill=True)
-                if attempt == 1:
-                    raise
-                self._spawn()
-        raise AssertionError("unreachable")
-
-    def close(self, kill: bool = False) -> None:
-        try:
-            if self.proc.poll() is None:
-                if kill:
-                    self.proc.kill()
-                else:
-                    self.proc.stdin.write("quit\n")
-                    self.proc.stdin.flush()
-                    self.proc.wait(timeout=60)
-        except Exception:
-            self.proc.kill()
-        finally:
-            try:
-                self.proc.wait(timeout=30)
-            except Exception:
-                pass
-            self._log.close()
-
-
-def _control_drift(ctl_pre: dict, ctl_post: dict) -> float:
-    """Max pre→post ratio across every host-control rate — >2.0 means the
-    hypervisor weather TURNED while the bracketed Spark legs ran and the
-    window's ratios are artifacts (see _round_summary)."""
-    drift = 1.0
-    for name in ("stream", "cache"):
-        for rate in ("n_rate", "fourn_rate"):
-            a, b = ctl_pre[name][rate], ctl_post[name][rate]
-            if min(a, b) > 0:
-                drift = max(drift, max(a, b) / min(a, b))
-    return drift
-
-
-def _round_summary(legs: dict, ctl_pre: dict, ctl_post: dict) -> dict:
-    """Efficiencies of ONE round — every ratio is between legs measured
-    back-to-back in the SAME hypervisor weather window, with that window's
-    own host control as the normalizer. Cross-window ratios (best-of-N per
-    leg, then divide) are NOT comparable on this host: the substrate swings
-    3-10x between hour-scale windows (BENCH.md), so a good-window numerator
-    over a bad-window denominator measures the weather, not the engine.
-
-    The control runs BOTH before and after the Spark legs: if the two
-    disagree the window TURNED mid-round (the r03 run-2 failure mode —
-    fast 8-core legs raced against a starved 32-core leg and produced
-    ratios of the weather, not the engine). `window_stable` is False when
-    any control rate moved by more than 2x pre→post; unstable rounds are
-    reported but never selected as the gate evidence while a stable round
-    exists. Normalization divides by the LARGER of the two cache-control
-    efficiencies — the conservative choice (a bigger denominator can only
-    lower the normalized claim).
-
-    Both GATE metrics are weak-style (matched per-core load: N cores on
-    BENCH_ROWS/4 vs 4N cores on BENCH_ROWS) — the full pipeline AND the
-    signature kernel, measured in the same two legs. Strong-style ratios
-    (same 240k corpus on both sides) are reported alongside from rounds
-    whose N-side leg ran them (round 0 and the post-loop re-pair); through
-    the 2026-08-18 runs the kernel gate metric was strong-style, which on
-    this guest repeatedly measured the hypervisor's aggregate-throughput
-    ceiling (8-process allocations get ~1.7-2.5x the per-core substrate of
-    32-process ones — weather map in BENCH.md) rather than the engine."""
-    weak = legs["fourn"]["fps"] / (4.0 * legs["weak_n"]["fps"])
-    kweak = (
-        legs["fourn"]["kernel_fps"] / (4.0 * legs["weak_n"]["kernel_fps"])
-        if "kernel_fps" in legs["weak_n"] else None
-    )
-    n_leg = legs.get("n") or {}
-    keff = (
-        legs["fourn"]["kernel_fps"] / (4.0 * n_leg["kernel_fps"])
-        if "kernel_fps" in n_leg else None
-    )
-    eff = (
-        legs["fourn"]["fps"] / (4.0 * n_leg["fps"])
-        if "fps" in n_leg else None
-    )
-    denom = max(ctl_pre["cache"]["efficiency"], ctl_post["cache"]["efficiency"])
-    drift = _control_drift(ctl_pre, ctl_post)
-
-    def _norm(x):
-        return round(min(x / denom, 1.0), 3) if x is not None and denom > 0 else None
-
-    return {
-        "efficiency": round(eff, 3) if eff is not None else None,
-        "kernel_efficiency": round(keff, 3) if keff is not None else None,
-        "weak_efficiency": round(weak, 3),
-        "kernel_weak_efficiency": round(kweak, 3) if kweak is not None else None,
-        "efficiency_host_normalized": _norm(eff),
-        "kernel_efficiency_host_normalized": _norm(keff),
-        "weak_efficiency_host_normalized": _norm(weak),
-        "kernel_weak_efficiency_host_normalized": _norm(kweak),
-        "control_drift": round(drift, 2),
-        "window_stable": drift <= 2.0,
-        # the box's OWN N->4N-thread scaling in this window (4->16 procs,
-        # matching the topology) — the physical ceiling any engine ratio
-        # lives under: cache = L2-resident compute, stream = memory-
-        # bandwidth-bound (the shuffle/scan analog)
-        "host_cache_efficiency": round(denom, 3),
-        "host_stream_efficiency": round(
-            max(ctl_pre["stream"]["efficiency"],
-                ctl_post["stream"]["efficiency"]), 3),
-        "host_control": {"pre": ctl_pre, "post": ctl_post},
-    }
-
-
-def run_scaling(corpus: str, rounds: int = SCALING_ROUNDS,
-                budget_sec: float = SCALING_BUDGET_SEC) -> dict:
-    """N vs 4N EXECUTORS, fixed executor shape: local-cluster[1,4,6144]
-    (N = 1 JVM x 4 cores) vs local-cluster[4,4,6144] (4N = 4 JVMs x 4
-    cores). Per-executor load is identical on the two weak-gate legs
-    (60k rows, 4 cores, 4g) — the load profile a real 4x scale-out has.
-    Reports the full pipeline AND the
-    signature kernel (the compute that dominates at real scale — BENCH.md).
-
-    Why the 4N leg stops at 16 cores on this box (2026-08-20 envelope
-    probe): the host's own numpy scaling control delivers 4→16-process
-    efficiency of 0.76 (stream) / 0.96 (cache), but 8→32 collapses to
-    0.27 (stream) — 32 streaming processes move LESS aggregate data than
-    16; the memory-bandwidth knee sits between 16 and 32 threads, and a
-    32-core 4N leg also oversubscribes the 32-hardware-thread box once
-    the 32 Python workers and the driver join. A real 4N cluster brings
-    4x the memory bandwidth with it; a 4N leg pinned beyond this single
-    box's knee measures that missing bandwidth, not the engine. 1-vs-4
-    executors of fixed 4-core shape is still the literal N-vs-4N-executors
-    reading of the rule, with the 4N leg inside the envelope a real
-    cluster would provide.
-
-    Noise discipline (VERDICT r02 item 1): each round runs all three Spark
-    legs back-to-back BRACKETED by the pure-numpy host control (pre + post),
-    so every efficiency is computed within one weather window, normalized by
-    that window's own substrate measurement, and flagged unstable when the
-    substrate moved >2x mid-round. Rounds repeat until the BASELINE gate
-    (RAW weak-style pipeline >= 0.8 AND RAW weak-style kernel >= 0.8, in a
-    STABLE round — the criterion as BASELINE.json states it, no
-    normalization) is evidenced, the round cap is hit, or the budget runs
-    out;
-    the best paired round is reported (stable rounds always outrank
-    unstable), with every round's summary alongside for honesty.
-    """
-    # derive the weak-leg size from the ACTUAL corpus row count (parquet
-    # metadata) rather than assuming the caller passed BENCH_ROWS rows
-    import pyarrow.parquet as pq
-
-    corpus_rows = pq.ParquetFile(corpus).metadata.num_rows
-    small_corpus = _ensure_corpus(corpus_rows // 4)
-    t_start = time.time()
-    all_rounds: list[dict] = []
-    best_round: dict | None = None
-    round0_strong: dict = {}
-    leg_walls: dict[str, float] = {}
-    # persistent workers: both topologies spin up CONCURRENTLY here and stay
-    # warm for every round — the per-round fixed cost drops from ~90 s of
-    # cold JVM spin-up to the ~12 s of bracketing controls, so roughly twice
-    # as many weather windows fit one budget (see _scaling_worker)
-    # topology: vary the EXECUTOR COUNT (1 vs 4 JVMs), hold the executor
-    # shape fixed at 4 cores + 4g — the literal "N vs 4N executors" of the
-    # north rule. Same-window A/B (tools/topo_probe.py, 2026-08-19): the
-    # old fixed-4-JVM shape's N leg (4 JVMs x 2 cores) ran the identical
-    # 60k-row job ~3.5x slower than 2 JVMs x 4 cores on the same 8 cores —
-    # its gate-passing weak ratios (1.09-2.07 in the probe) were inflated
-    # by that handicapped denominator. The 2-vs-8-JVM shape that replaced
-    # it pinned the 4N leg at 32 cores — past this box's memory-bandwidth
-    # knee (host stream control 8→32: 0.27) and oversubscribed once Python
-    # workers joined, so its raw ratios measured the hypervisor envelope,
-    # not the engine (best stable weak 0.635-0.78 across r05 runs). The
-    # 1-vs-4 shape keeps the 4N leg at 16 cores, inside the envelope
-    # (host stream 4→16: 0.76, cache: 0.96) — see run_scaling docstring.
-    w4n = _ScalingWorker(16, 4)
-    wn = _ScalingWorker(4, 1)
+def _parse_leg_output(stdout: str) -> dict:
+    """The leg's result is its last stdout line; anything a library printed
+    before it is skipped."""
+    lines = stdout.strip().splitlines()
     try:
-        w4n.wait_ready()
-        wn.wait_ready()
-        for rnd in range(max(rounds, 1)):
-            # predictive budget: don't START a round that would blow the
-            # budget (a killed bench prints no JSON at all — worse than
-            # fewer rounds). The estimate is per-leg: rounds after 0 drop
-            # the full 8-core strong leg, so round 0's wall is the WRONG
-            # predictor (the r03-run-3 lesson — it left budget on the table)
-            if rnd > 0:
-                next_round = 20.0 + leg_walls["fourn"] + leg_walls["weak_n"]
-                if time.time() - t_start + next_round > budget_sec:
-                    break
-            legs = {}
-            # bracket the Spark legs with the numpy control so a mid-round
-            # weather turn is DETECTED, not silently baked into a ratio; the
-            # weak gate pair (fourn, weak_n) runs back-to-back, adjacent
-            ctl_pre = host_control(secs=6.0)
-            t_leg = time.time()
-            legs["fourn"] = w4n.run(corpus)
-            leg_walls["fourn"] = time.time() - t_leg
-            t_leg = time.time()
-            legs["weak_n"] = wn.run(small_corpus)
-            leg_walls["weak_n"] = time.time() - t_leg
-            # the 8-core legs over the FULL corpus (strong pipeline + strong
-            # kernel) run once, in round 0, for the reported-not-gated
-            # strong ratios; every GATE metric (both weak-style) is complete
-            # in the two legs above, so later rounds cost a fraction and
-            # more weather windows fit the budget
-            if rnd == 0:
-                t_leg = time.time()
-                legs["n"] = wn.run(corpus)
-                leg_walls["n_full"] = time.time() - t_leg
-            ctl_post = host_control(secs=6.0)
-            summary = _round_summary(legs, ctl_pre, ctl_post)
-            all_rounds.append(summary)
-            # one short progress line per round, to STDERR: live observability
-            # for long runs without touching the driver's stdout-tail JSON
-            # contract (the final JSON line still prints last, on stdout)
-            print(
-                f"[scaling] round {rnd}: weak={summary['weak_efficiency']} "
-                f"kweak={summary['kernel_weak_efficiency']} "
-                f"drift={summary['control_drift']} "
-                f"stable={summary['window_stable']} "
-                f"elapsed={round(time.time() - t_start)}s",
-                file=sys.stderr, flush=True,
-            )
-            if rnd == 0:
-                # keep BOTH sides of round 0's strong ratio so the artifact is
-                # internally recomputable (the top-level fourn_* fields report
-                # the BEST round's 4N leg, which can be a different window)
-                round0_strong = {
-                    "n_fps": legs["n"]["fps"],
-                    "n_sec": legs["n"]["wall_sec"],
-                    "fourn_fps": legs["fourn"]["fps"],
-                    "fourn_sec": legs["fourn"]["wall_sec"],
-                    "efficiency": summary["efficiency"],
-                    "efficiency_host_normalized": summary["efficiency_host_normalized"],
-                    "kernel_n_fps": legs["n"]["kernel_fps"],
-                    # the 4N-side kernel fps from THIS round's own leg, so every
-                    # strong-kernel field is recomputable from one window
-                    # (ADVICE r04 item 4: the top-level kernel_fourn_fps used to
-                    # come from the BEST round — a different window — making
-                    # kernel_fourn_fps/(4*kernel_n_fps) contradict the reported
-                    # kernel_efficiency)
-                    "kernel_fourn_fps": legs["fourn"]["kernel_fps"],
-                    "kernel_efficiency": summary["kernel_efficiency"],
-                    "kernel_efficiency_host_normalized":
-                        summary["kernel_efficiency_host_normalized"],
-                    "window_stable": summary["window_stable"],
-                    "control_drift": summary["control_drift"],
-                    "source": "round0",
-                }
-            # best round = the one whose WORST gate metric is best (both gate
-            # criteria live in the same round, or it doesn't count); a stable
-            # round always outranks an unstable one — an unstable round's
-            # ratios are weather artifacts in either direction. Ranked on the
-            # RAW ratios (ADVICE r04 item 1): BASELINE.json's criterion is
-            # literally "scaling efficiency >= 0.8", so gate_met asserts the raw
-            # numbers and the host-normalized values are reported alongside,
-            # never substituted for a raw pass.
-            def _score(s: dict) -> tuple:
-                kw = s["kernel_weak_efficiency"] or 0.0
-                ww = s["weak_efficiency"] or 0.0
-                return (s["window_stable"], min(ww, kw))
-            if best_round is None or _score(summary) > _score(best_round["summary"]):
-                best_round = {"summary": summary, "legs": legs}
-            if _gate_ok(best_round["summary"]):
-                break  # gate evidenced by one clean paired round — stop burning time
-            # token-bucket refill idle: if THIS round measured deep
-            # starvation on either gate metric, idle briefly so the credit
-            # bucket refills before the next sample (the 03:25 Aug-19 run's
-            # round-0 pass landed right after an idle stretch; continuous
-            # sampling in a starvation band just resamples a drained
-            # bucket). Near the gate (>= 0.65) the window is turning — keep
-            # sampling immediately (the 04:02 driver run climbed 0.70→0.83
-            # across back-to-back rounds). Only idle what the budget can
-            # spare after the next round's estimated cost.
-            worst = min(summary["weak_efficiency"] or 0.0,
-                        summary["kernel_weak_efficiency"] or 0.0)
-            if worst < 0.65:
-                slack = (budget_sec - (time.time() - t_start)
-                         - (leg_walls["fourn"] + leg_walls["weak_n"] + 20.0))
-                time.sleep(max(0.0, min(REFILL_IDLE_SEC, slack)))
+        return json.loads(lines[-1])
+    except (IndexError, ValueError):
+        raise RuntimeError("scaling leg printed no result line") from None
 
-        # the strong ratio is measured only in rounds with a full N-side
-        # pipeline leg (round 0). If the gate round turned out to be a LATER,
-        # cleaner window and budget remains, re-pair the strong legs once
-        # back-to-back so the reported strong number gets the same
-        # weather-retry defense as the gate metrics instead of being pinned to
-        # whatever round 0's window was.
-        if (best_round["summary"] is not all_rounds[0]
-                and time.time() - t_start
-                    + leg_walls["fourn"] + leg_walls.get("n_full", 600.0)
-                < budget_sec):
-            ctl_pre = host_control(secs=6.0)
-            relegs = {"fourn": w4n.run(corpus, "pipeline"),
-                      "n": wn.run(corpus, "pipeline")}
-            ctl_post = host_control(secs=6.0)
-            denom = max(ctl_pre["cache"]["efficiency"],
-                        ctl_post["cache"]["efficiency"])
-            redrift = _control_drift(ctl_pre, ctl_post)
-            eff = relegs["fourn"]["fps"] / (4.0 * relegs["n"]["fps"])
-            strong = {
-                "n_fps": relegs["n"]["fps"], "n_sec": relegs["n"]["wall_sec"],
-                "fourn_fps": relegs["fourn"]["fps"],
-                "fourn_sec": relegs["fourn"]["wall_sec"],
-                "efficiency": round(eff, 3),
-                "efficiency_host_normalized": (
-                    round(min(eff / denom, 1.0), 3) if denom > 0 else None
-                ),
-                "window_stable": redrift <= 2.0,
-                "control_drift": round(redrift, 2),
-                "source": "re-pair",
-            }
-            # keep whichever paired strong measurement is better — but ONLY if
-            # the re-pair's own bracket was stable (ADVICE r03: eff is biased UP
-            # when the 8-core denominator leg is starved, so an unstable re-pair
-            # window must not silently win the max; same 2x drift rule as
-            # _round_summary applies to the re-pair bracket)
-            if (not strong["window_stable"]
-                    or (round0_strong.get("efficiency") or 0.0) >= eff):
-                strong = round0_strong
-        else:
-            strong = round0_strong
-    finally:
-        w4n.close()
-        wn.close()
 
-    legs = best_round["legs"]
-    s = best_round["summary"]
+def _run_leg(executors: int, cores: int, mem_mb: int, corpus: str) -> dict:
+    """Run one leg in a fresh subprocess (its own session group, so a
+    timeout kills the JVMs it started too). Fails loudly, never hangs."""
+    shape = f"local-cluster[{executors},{cores},{mem_mb}]"
+    proc = subprocess.Popen(
+        [sys.executable, os.path.abspath(__file__), "--scaling-leg",
+         str(executors), str(cores), str(mem_mb), corpus],
+        stdout=subprocess.PIPE, text=True, start_new_session=True,
+    )
+    try:
+        stdout, _ = proc.communicate(timeout=LEG_TIMEOUT_SEC)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait()
+        raise RuntimeError(
+            f"scaling leg {shape} timed out after {LEG_TIMEOUT_SEC} s"
+        ) from None
+    if proc.returncode != 0:
+        raise RuntimeError(
+            f"scaling leg {shape} died with exit code {proc.returncode} "
+            f"(its stderr is above)"
+        )
+    return _parse_leg_output(stdout)
+
+
+def _scaling_summary(weak_n: dict, fourn: dict) -> dict:
+    """Raw weak-style ratios of the round and the gate: 1.0 = 4x the
+    executors absorb 4x the data in the same wall time."""
+    weak = fourn["fps"] / (4.0 * weak_n["fps"])
+    kweak = fourn["kernel_fps"] / (4.0 * weak_n["kernel_fps"])
     return {
-        "rows": legs["fourn"]["rows"],
-        "mode": "local-cluster, (1 vs 4) executor JVMs x 4 cores + 4g each",
-        # strong-style numbers (same 240k corpus on both sides): one paired
-        # within-window measurement (round 0, or the post-loop re-pair if
-        # that was cleaner); all four values and the ratio come from the
-        # SAME window. Reported, not gated — see kernel_weak note below.
-        "n_fps": strong.get("n_fps"),
-        "n_sec": strong.get("n_sec"),
-        "strong_fourn_fps": strong.get("fourn_fps"),
-        "strong_fourn_sec": strong.get("fourn_sec"),
-        "fourn_fps": legs["fourn"]["fps"],
-        "fourn_sec": legs["fourn"]["wall_sec"],
-        "efficiency": strong.get("efficiency"),
-        "strong_source": strong.get("source"),
-        "strong_window_stable": strong.get("window_stable"),
-        # strong-kernel fields all from ONE window (round 0), so
-        # kernel_fourn_fps / (4 * kernel_n_fps) recomputes exactly the
-        # reported kernel_efficiency (ADVICE r04 item 4)
-        "kernel_n_fps": round0_strong.get("kernel_n_fps"),
-        "kernel_fourn_fps": round0_strong.get("kernel_fourn_fps"),
-        "kernel_efficiency": round0_strong.get("kernel_efficiency"),
-        "kernel_efficiency_host_normalized":
-            round0_strong.get("kernel_efficiency_host_normalized"),
-        # weak scaling — BOTH gate metrics: same per-core load (BENCH_ROWS/4
-        # on 4 cores vs BENCH_ROWS on 16) — amortizes fixed barrier latency
-        # identically on both sides, isolating the throughput question the
-        # cluster gate asks. 1.0 = 4x cores absorb 4x data in the same wall
-        # time. The kernel is measured weak-style in the SAME two legs as
-        # the pipeline; strong-style kernel/pipeline ratios (above) are
-        # round-0 measurements reported for completeness — on this guest
-        # they repeatedly measured the hypervisor's aggregate-throughput
-        # ceiling (8-process allocations get ~1.7-2.5x the per-core
-        # substrate of 32-process ones; BENCH.md weather map), which the
-        # per-core-matched weak pairs cancel out of.
-        "weak_n_rows": legs["weak_n"]["rows"],
-        "weak_n_sec": legs["weak_n"]["wall_sec"],
-        "weak_n_fps": legs["weak_n"]["fps"],
-        "weak_kernel_n_fps": legs["weak_n"].get("kernel_fps"),
-        # the 4N-side kernel fps of the SAME best round, so the gated
-        # kernel_weak_efficiency is recomputable from the artifact
-        "weak_kernel_fourn_fps": legs["fourn"].get("kernel_fps"),
-        "weak_efficiency": s["weak_efficiency"],
-        "weak_efficiency_host_normalized": s["weak_efficiency_host_normalized"],
-        "kernel_weak_efficiency": s["kernel_weak_efficiency"],
-        "kernel_weak_efficiency_host_normalized":
-            s["kernel_weak_efficiency_host_normalized"],
-        "window_stable": s["window_stable"],
-        "control_drift": s["control_drift"],
-        # the box's own 4->16-thread scaling in the gate window — the
-        # ceiling the raw ratios live under (stream bounds shuffle/scan,
-        # cache bounds the kernel); a raw miss with these well below 0.8
-        # is the substrate failing to deliver 4x, not the engine
-        "host_cache_efficiency": s.get("host_cache_efficiency"),
-        "host_stream_efficiency": s.get("host_stream_efficiency"),
-        "host_control": s["host_control"],
-        "efficiency_host_normalized": strong.get("efficiency_host_normalized"),
-        "rounds_run": len(all_rounds),
-        # self-description: gate_met is True ONLY when the best stable
-        # paired round carries both BASELINE gate metrics >= 0.8 RAW —
-        # weak-style pipeline AND weak-style kernel, no host normalization
-        # in the asserted criterion (ADVICE r04 item 1: BASELINE.json's
-        # metric is literally "throughput scaling efficiency >= 0.8", so a
-        # normalized pass must never masquerade as a raw one). The
-        # host-normalized values stay reported alongside as *context* for
-        # windows where the hypervisor guest did not deliver 4x substrate at
-        # 4N (see BENCH.md weather map), and gate_basis names the asserted
-        # criterion machine-readably next to gate_met. False = no window
-        # this run delivered the raw gate; the loop reports the weather it
-        # got, it does not manufacture ratios.
-        "gate_basis": "raw-weak-pair-stable-window",
-        "gate_met": _gate_ok(s),
-        # the r01-r04 normalized reading, reported-not-gated
-        "gate_met_host_normalized": bool(
-            s["window_stable"]
-            and (s["weak_efficiency_host_normalized"] or 0.0) >= GATE
-            and (s["kernel_weak_efficiency_host_normalized"] or 0.0) >= GATE
-        ),
-        "all_rounds": all_rounds,
+        "weak_n_rows": weak_n["rows"],
+        "weak_n_sec": weak_n["wall_sec"],
+        "weak_n_fps": weak_n["fps"],
+        "weak_kernel_n_fps": weak_n["kernel_fps"],
+        "rows": fourn["rows"],
+        "fourn_sec": fourn["wall_sec"],
+        "fourn_fps": fourn["fps"],
+        "weak_kernel_fourn_fps": fourn["kernel_fps"],
+        "weak_efficiency": round(weak, 3),
+        "kernel_weak_efficiency": round(kweak, 3),
+        "gate_basis": "raw-weak-pair",
+        "gate_met": weak >= GATE and kweak >= GATE,
     }
+
+
+def scaling_round() -> dict:
+    """One paired round: the weak-N leg, then the 4N leg, each once."""
+    cpus = os.cpu_count() or 1
+    if cpus < 4:
+        return {"skipped": f"{cpus} cores: a 4N leg of 4 executors needs "
+                           f"at least 4", "gate_met": False}
+    cores = cpus // 4
+    # four executor heaps plus the leg driver's in half of RAM; the rest is
+    # for JVM overhead, the Python workers, tmpfs shuffle files and the OS
+    mem_mb = min(4096, (host_ram_mb() // 2 - LEG_DRIVER_MB) // 4)
+    corpus = _ensure_corpus()
+    small = _ensure_corpus(BENCH_ROWS // 4)
+    summary = _scaling_summary(
+        _run_leg(1, cores, mem_mb, small), _run_leg(4, cores, mem_mb, corpus)
+    )
+    return {"mode": f"local-cluster[1,{cores},{mem_mb}] vs "
+                    f"local-cluster[4,{cores},{mem_mb}]", **summary}
 
 
 def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-worker":
-        _scaling_worker(int(sys.argv[2]), int(sys.argv[3]))
+    if len(sys.argv) > 1 and sys.argv[1] == "--scaling-leg":
+        executors, cores, mem_mb = map(int, sys.argv[2:5])
+        _scaling_leg(executors, cores, mem_mb, sys.argv[5])
         return
 
+    # the scaling legs run first: a stopped session's JVM stays resident in
+    # this process, and the 4N leg needs that memory
+    scaling = None
+    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
+        try:
+            scaling = scaling_round()
+        except RuntimeError as e:
+            scaling = {"error": str(e), "gate_met": False}
     times = run_headline()
     result = {
         "metric": "dedup_bench_total",
@@ -864,52 +280,10 @@ def main() -> None:
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "headline_reps": HEADLINE_REPS,
     }
-
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        corpus = _ensure_corpus()
-        # host control + normalization happen INSIDE run_scaling, per round,
-        # so each ratio is normalized by its own window's substrate
-        scaling = run_scaling(corpus)
-        # the driver captures only the TAIL (~2k chars) of stdout, and the
-        # r03 artifact was unparseable because the one-line JSON carried the
-        # full all_rounds array with nested host-control blobs (VERDICT r03
-        # item 1). Keep the stdout line compact — headline, per-query times,
-        # scaling scalars, gate_met — and write the per-round evidence to a
-        # sidecar the judge reads from the repo instead.
-        detail = {
-            "all_rounds": scaling.pop("all_rounds"),
-            "host_control_best_round": scaling.pop("host_control"),
-        }
+    if scaling is not None:
         result["scaling"] = scaling
-        result["files_per_sec"] = scaling["fourn_fps"]
-        sidecar = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_rounds.json"
-        )
-        with open(sidecar, "w") as f:
-            json.dump({"headline": result, "detail": detail}, f, indent=1)
-
-    line = json.dumps(result)
-    # hard guarantee for the driver's tail capture: if the line ever outgrows
-    # the window again, shed the least essential blocks rather than truncate
-    # mid-JSON (an unparseable artifact is the one failure mode this round
-    # must not repeat)
-    if len(line) > 1900 and "scaling" in result:
-        # keep the legacy normalized-kernel key (r01-r03 artifacts/consumers
-        # keyed on it — ADVICE r04 item 4) and both gate fields + basis in
-        # the shed set, so even a shed line carries the full gate story
-        result["scaling"] = {
-            k: result["scaling"].get(k)
-            for k in ("weak_efficiency", "weak_efficiency_host_normalized",
-                      "kernel_weak_efficiency",
-                      "kernel_weak_efficiency_host_normalized", "efficiency",
-                      "kernel_efficiency", "kernel_efficiency_host_normalized",
-                      "window_stable", "control_drift", "rounds_run",
-                      "host_cache_efficiency", "host_stream_efficiency",
-                      "gate_basis", "gate_met", "gate_met_host_normalized",
-                      "fourn_fps", "n_fps")
-        }
-        line = json.dumps(result)
-    print(line)
+        result["files_per_sec"] = scaling.get("fourn_fps")
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

@@ -4,10 +4,10 @@ bench.py stays the frozen driver-facing harness; this file exists so
 optimization work can time each catalog query in isolation with the noop
 sink (computes every column, bypasses count()'s column pruning), label the
 jobs, and dump the FINAL adaptive plan (post-AQE, with ReusedExchange nodes
-visible) — evidence for plans/r06/.
+visible) of each query's last rep to DIR/<query>.txt.
 
 Usage:
-  python bench_extra.py [-r REPS] [--final-plan DIR_SUFFIX] [query ...]
+  python bench_extra.py [-r REPS] [--final-plan DIR] [query ...]
 
 Defaults to bench.HEADLINE. Prints one line per query: best/all walls.
 """
@@ -17,7 +17,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
 import time
 
 from bench import CPUS, HEADLINE, SF_DIR
@@ -25,7 +24,7 @@ from dedup_domains_spark import get_spark
 from dedup_domains_spark.plans.queries import QUERIES
 
 
-def run_one(spark, name: str, reps: int, plan_suffix: str | None) -> list[float]:
+def run_one(spark, name: str, reps: int, plan_dir: str | None) -> list[float]:
     walls = []
     for rep in range(reps):
         spark.sparkContext.setJobDescription(f"{name} rep{rep}")
@@ -33,14 +32,15 @@ def run_one(spark, name: str, reps: int, plan_suffix: str | None) -> list[float]
         df = QUERIES[name].spark_fn(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         walls.append(round(time.time() - t0, 3))
-        if plan_suffix and rep == reps - 1:
-            out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   "plans", "r06")
-            os.makedirs(out_dir, exist_ok=True)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(out_dir, f"{name}_{plan_suffix}.txt"), "w") as f:
+        if plan_dir and rep == reps - 1:
+            os.makedirs(plan_dir, exist_ok=True)
+            # the noop write ran under its own QueryExecution; df's adaptive
+            # plan reads isFinalPlan=true only once toRdd() has run its
+            # query stages (outside the timed region)
+            qe = df._jdf.queryExecution()
+            qe.toRdd()
+            plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
                 f.write(plan)
     spark.sparkContext.setJobDescription(None)
     return walls
@@ -49,8 +49,8 @@ def run_one(spark, name: str, reps: int, plan_suffix: str | None) -> list[float]
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("-r", "--reps", type=int, default=2)
-    ap.add_argument("--final-plan", default=None,
-                    help="suffix for plans/r06/<q>_<suffix>.txt final-plan dump")
+    ap.add_argument("--final-plan", default=None, metavar="DIR",
+                    help="write each query's final plan to DIR/<query>.txt")
     ap.add_argument("queries", nargs="*", default=None)
     args = ap.parse_args()
     names = args.queries or HEADLINE

@@ -26,7 +26,6 @@ class DedupConfig:
     num_perm: int = 128                # MinHash permutations
     bands: int = 32                    # LSH bands
     rows_per_band: int = 4             # num_perm == bands * rows_per_band
-    simhash_bits: int = 64
     simhash_hamming_max: int = 4       # max Hamming distance for SimHash candidates
     seed: int = 42
 
@@ -58,7 +57,6 @@ class DedupConfig:
 
     # --- skew / partitioning ---
     max_bucket_size: int = 64          # LSH bucket cap before salting splits it
-    shuffle_partitions: int = 32
     # AQE off for the pipeline by default: skew is handled EXPLICITLY
     # (salted stars, capped buckets, broadcast hints), so AQE's only effect
     # here is a driver re-planning barrier at every exchange — measured 30%

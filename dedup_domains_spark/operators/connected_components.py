@@ -19,9 +19,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _truncate(df: DataFrame, durable: bool = False,
-              eager: bool = True) -> DataFrame:
-    """Cut lineage between iterations.
+def _truncate(df: DataFrame, durable: bool = False) -> DataFrame:
+    """Cut lineage between iterations, lazily: the caller's next action
+    materializes it, so the loop's convergence count() both populates the
+    checkpoint and reads the changed-row count in ONE job (round 6 barrier
+    diet: the probe used to be a second driver-synchronized job per
+    iteration).
 
     Default is localCheckpoint: computed ONCE (a reliable checkpoint runs
     the plan a second time for the write pass — measured ~2x per-round cost
@@ -29,16 +32,11 @@ def _truncate(df: DataFrame, durable: bool = False,
     durability story is the per-STAGE checkpoint tables (plans/checkpoint.py):
     on executor loss the stage reruns from its input table, not from
     mid-loop state. Pass durable=True (pipeline does when the caller gives a
-    checkpoint_dir) to use reliable checkpoints inside the loop as well.
-
-    eager=False defers materialization to the caller's next action — the
-    loop passes it so the convergence count() both populates the checkpoint
-    and reads the changed-row count in ONE job (round 6 barrier diet: the
-    probe used to be a second driver-synchronized job per iteration)."""
+    checkpoint_dir) to use reliable checkpoints inside the loop as well."""
     sc = df.sparkSession.sparkContext
     if durable and sc._jsc.sc().checkpointDir().isDefined():
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
 def connected_components(
@@ -78,8 +76,7 @@ def connected_components(
     labels = _truncate(
         adj.select(F.col("src").alias("uid"))
         .distinct()
-        .withColumn("cluster_id", F.col("uid")),
-        eager=False,
+        .withColumn("cluster_id", F.col("uid"))
     )
     # the count() is the labels-init materializer (same one job as the old
     # eager checkpoint) AND yields the node count for free — which sizes the
@@ -95,7 +92,7 @@ def connected_components(
     # loop forced to 1 partition erased the fusion win). Capped by the
     # session setting so a billion-node graph on a real cluster keeps its
     # full fan-out, and the cap also keeps scaling-leg per-core load
-    # matched (weak legs size shuffle_partitions to their core count).
+    # matched (bench legs size shuffle_partitions to their core count).
     n_nodes = labels.count()
     spark = edges.sparkSession
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -161,7 +158,7 @@ def _label_loop(adj, labels, max_iterations, durable, stats):
         # limit(1) — limit's incremental partition scan would leave part of
         # the checkpoint unmaterialized and the next round would recompute
         # the remainder from lineage.
-        merged = _truncate(merged, durable, eager=False)
+        merged = _truncate(merged, durable)
         labels = merged.select("uid", "cluster_id")
         changed = merged.filter(
             F.col("cluster_id") != F.col("_old")

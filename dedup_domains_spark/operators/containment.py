@@ -75,7 +75,7 @@ def collect_probe_filter(sig_df: DataFrame, cfg: DedupConfig):
 def containment_candidates(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
     broadcast_probes: bool = True, repartition: int | None = None,
-    eager: bool = False, spill: list | None = None, probe_filter=None,
+    spill: list | None = None, probe_filter=None,
 ) -> DataFrame:
     """Candidate (containee, container) pairs: every probe of the containee
     appears in the container's shingle set and the container is larger.
@@ -95,14 +95,12 @@ def containment_candidates(
     Cache lifecycle (VERDICT r03): the postings DISK_ONLY persist feeds two
     consumers (DF-cap aggregation + probe join) and would otherwise be
     retained until the ContextCleaner ran — one call per session is fine, a
-    recurring incremental loop accumulates spilled blocks. ``eager=True``
-    localCheckpoints the (small) candidate-pair result and releases postings
-    before returning, mirroring bloom_prefilter_anti_join — note this
-    SERIALIZES the containment branch against whatever the caller would have
-    computed concurrently in the same job, so the pipeline instead passes
-    ``spill``: a list the postings cache handle is appended to, for the
-    caller to unpersist once its own materializing action has run. With
-    neither, the caller owns the lifecycle (clearCache after materializing).
+    recurring incremental loop accumulates spilled blocks. The pipeline
+    passes ``spill``: a list the postings cache handle is appended to, for
+    the caller to unpersist once its own materializing action has run, so
+    the containment branch still runs concurrently with whatever else the
+    caller computes in the same job. Without it, the caller owns the
+    lifecycle (clearCache after materializing).
     """
     # explicit fan-out before the tokenizing UDF — same rationale as
     # signatures.add_signatures: AQE would coalesce the small projection and
@@ -231,16 +229,8 @@ def containment_candidates(
             .filter(F.col("big_sh") > F.col("small_sh"))
             .select("small_id", "big_id")
         )
-        if postings_cache is not None:
-            if spill is not None:
-                spill.append(postings_cache)
-            elif eager:
-                # candidate pairs are id-only and small; materialize them
-                # once and release the corpus-shingle-mass spill immediately
-                hits = hits.localCheckpoint(eager=True)
-                postings_cache.unpersist()
-        elif eager:
-            hits = hits.localCheckpoint(eager=True)
+        if postings_cache is not None and spill is not None:
+            spill.append(postings_cache)
         return hits
     except Exception:
         if postings_cache is not None:
@@ -281,20 +271,19 @@ def verify_containment(
 
 def contained_pairs(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
-    repartition: int | None = None, eager: bool = False,
+    repartition: int | None = None,
     spill: list | None = None, probe_filter=None,
 ) -> DataFrame:
     """(small_id, big_id) verified exact-substring containment pairs.
 
-    ``eager=True`` materializes the candidate set and releases the postings
-    spill before the verify join; ``spill`` defers the release to the caller
-    without serializing (see containment_candidates). ``probe_filter`` skips
+    ``spill`` hands the postings spill to the caller to release (see
+    containment_candidates). ``probe_filter`` skips
     the internal probe collection when the caller already holds the set
     (run_pipeline fuses it with its sig materializer barrier)."""
     cand = containment_candidates(
         df, sig_df, cfg, id_col,
         broadcast_probes=cfg.containment_broadcast_probes,
-        repartition=repartition, eager=eager, spill=spill,
+        repartition=repartition, spill=spill,
         probe_filter=probe_filter,
     )
     return verify_containment(cand, df, id_col)

@@ -110,36 +110,34 @@ def run_pipeline(
     cfg: DedupConfig | None = None,
     passthrough_predicate: str = "lang = 'binary'",
     checkpoint_dir: str | None = None,
-    stage_times: dict | None = None,
 ) -> PipelineResult:
-    """stage_times: PROBE MODE ONLY — when a dict is passed, every stage is
-    materialized eagerly with a count() barrier and its wall recorded under
-    its name. This SERIALIZES stages that normally overlap inside one job
-    (candidates/verify vs containment), so probe walls are comparable
-    leg-to-leg but NOT to the production wall. Used by tools/stage_probe.py
-    to locate which stage loses scaling efficiency between cluster sizes."""
     cfg = cfg or DedupConfig()
+    # AQE re-plans at every exchange — a driver barrier the pipeline doesn't
+    # need (skew handled explicitly; see DedupConfig.use_aqe). The heavy
+    # stages run eagerly inside _build_pipeline under the pipeline setting;
+    # the session value is restored on every exit, a raised error included,
+    # so ad-hoc queries keep their AQE behavior.
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", str(cfg.use_aqe).lower())
+    try:
+        return _build_pipeline(
+            spark, corpus, cfg, passthrough_predicate, checkpoint_dir
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
-    def _mark(name: str, df: DataFrame | None = None) -> None:
-        if stage_times is None:
-            return
-        import time as _time
 
-        t0 = _time.time()
-        if df is not None:
-            df.count()
-        stage_times[name] = round(_time.time() - t0, 2)
+def _build_pipeline(
+    spark: SparkSession,
+    corpus: DataFrame,
+    cfg: DedupConfig,
+    passthrough_predicate: str,
+    checkpoint_dir: str | None,
+) -> PipelineResult:
     ckpt = CheckpointContext(
         spark, checkpoint_dir, cfg.config_hash(),
         input_fingerprint=f"{corpus.semanticHash() & 0xFFFFFFFF:08x}",
     )
-    # AQE re-plans at every exchange — a driver barrier the pipeline doesn't
-    # need (skew handled explicitly; see DedupConfig.use_aqe). The heavy
-    # stages run eagerly inside this function under the pipeline setting;
-    # the session value is restored before returning so ad-hoc queries keep
-    # their AQE behavior.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", str(cfg.use_aqe).lower())
 
     # ---- identity + route (F2 analog: carry-over rows bypass dedup) ----
     df = with_row_identity(corpus)
@@ -159,14 +157,12 @@ def run_pipeline(
     exact_reps = dedupable.join(
         exact_map.filter("is_rep").select("uid"), "uid", "leftsemi"
     ).repartition(spark.sparkContext.defaultParallelism * 2).cache()
-    _mark("exact", exact_reps)
 
     # ---- signatures on exact representatives only ----
     sig_df = add_signatures(
         exact_reps.select("uid", "content"), cfg, repartition=0
     ).select("uid", "n_tokens", "n_shingles", "minhash", "simhash", "probes")
     sig_df = ckpt.stage(sig_df, "signatures").cache()
-    _mark("signatures", sig_df)
     # eager: four consumers fan out from sig_df (bands, blocks, verify twice,
     # containment probes) — materialize once, linearly, before they race.
     # When the containment scan path will need the probe set anyway, its
@@ -183,9 +179,6 @@ def run_pipeline(
     # ---- candidate generation: fused LSH bands ∪ SimHash blocks ----
     candidates = fused_candidate_pairs(sig_df, cfg)
     candidates = ckpt.stage(candidates, "candidates")
-    if stage_times is not None:
-        candidates = candidates.cache()
-        _mark("candidates", candidates)
 
     # ---- verification ----
     if cfg.use_exact_jaccard:
@@ -193,9 +186,6 @@ def run_pipeline(
     else:
         near = verify_pairs_estimate(candidates, sig_df, cfg)
     near = ckpt.stage(near.select("id_a", "id_b"), "near_pairs")
-    if stage_times is not None:
-        near = near.cache()
-        _mark("verify", near)
 
     # ---- D2 analog: exact-substring containment ----
     spill_caches: list = []  # interim persists released after CC-init runs
@@ -216,7 +206,6 @@ def run_pipeline(
                                     spill=spill_caches,
                                     probe_filter=probe_filter)
     contained = ckpt.stage(contained, "contained_pairs").cache()
-    _mark("containment", contained)
 
     # ---- edge union: near + containment + exact-dup membership ----
     exact_edges = (
@@ -240,13 +229,7 @@ def run_pipeline(
     # scanned the full upstream twice back-to-back.)
 
     # ---- connected components + singleton backfill ----
-    if stage_times is not None:
-        _mark("edges", edges)
     cc_stats: dict = {}
-    if stage_times is not None:
-        import time as _time
-
-        _t_cc = _time.time()
     try:
         labels = connected_components(
             edges.select("id_a", "id_b"), max_iterations=cfg.cc_max_iterations,
@@ -257,9 +240,6 @@ def run_pipeline(
         # cached now) — the containment postings spill is no longer reachable
         for c in spill_caches:
             c.unpersist()
-    if stage_times is not None:
-        stage_times["cc"] = round(_time.time() - _t_cc, 2)
-        stage_times["cc_iterations"] = cc_stats.get("iterations", 0)
     singletons = (
         dedupable.select("uid")
         .join(labels.select("uid"), "uid", "leftanti")
@@ -285,7 +265,6 @@ def run_pipeline(
         elected.select("uid", "cluster_id", "rep_uid", "is_rep", "electable"),
         "cluster_map",
     ).cache()
-    _mark("cluster_map", cluster_map)
 
     # ---- survivors: cluster representatives + passthrough carry-over ----
     survivors = (
@@ -343,7 +322,6 @@ def run_pipeline(
             )
         )
 
-    spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     return PipelineResult(
         survivors=survivors,
         cluster_map=cluster_map,

@@ -2663,33 +2663,3 @@ def video_frame_sample(spark, sf_dir):
     return frames.select(
         "media_id", "frame_idx", F.lower(F.hex("frame")).alias("frame_sha")
     )
-
-
-# ---------------------------------------------------------------------------
-# Registry order = driver evidence order. The driver's correctness harness
-# checks the FIRST 50 registry entries; with 60 registered, the 10 that fall
-# off the tail must be ones with a prior-round green row. Round 5: the 10
-# queries whose newest green row is CORRECTNESS_r03 (they sat at positions
-# 51-60 through r04) rotate to the front, so after r05 every one of the 60
-# has a green row in one of the two most recent artifacts (r04 or r05);
-# everything that rotates out the back is green in CORRECTNESS_r04.
-# ---------------------------------------------------------------------------
-
-_DRIVER_FIRST = [
-    "orders_pivot", "lineitem_cube", "events_sessionize",
-    "scalar_functions", "containment_probe_pairs",
-    "image_phash_dup_pairs", "audio_dup_pairs",
-    "ann_hyperplane_recall", "embedding_near_dup_pairs",
-    "suffix_containment_pairs",
-]
-
-
-def _reorder_registry() -> None:
-    front = {name: QUERIES.pop(name) for name in _DRIVER_FIRST if name in QUERIES}
-    rest = dict(QUERIES)
-    QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(rest)
-
-
-_reorder_registry()

@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_parallelism() -> int:
+    """Default core count: $SPARK_GRAFT_CPUS, else the host's CPUs."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def host_ram_mb() -> int:
+    """Physical memory of the host, in MB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
 def get_spark(
     app_name: str = "dedup-domains-spark",
     parallelism: int | None = None,
@@ -21,13 +31,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    parallelism: local core count (defaults to $SPARK_GRAFT_CPUS or 32).
+    parallelism: local core count (defaults to host_parallelism()).
     master: override, e.g. "local-cluster[8,4,4096]" — separate executor
     JVMs, the faithful in-sandbox stand-in for a multi-executor cluster
     (single-JVM local[N] saturates around 8 threads on shared hosts).
     """
     if parallelism is None:
-        parallelism = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        parallelism = host_parallelism()
     if shuffle_partitions is None:
         shuffle_partitions = max(parallelism, 8)
 
@@ -73,7 +83,11 @@ def get_spark(
         # 10^12-file run needs — a genuinely stuck broadcast still fails,
         # just not by racing a healthy stage.
         .config("spark.sql.broadcastTimeout", "3600")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        # driver heap: half of host RAM, at most 24g. In local mode the
+        # driver JVM also runs every task, so it takes the larger share; the
+        # rest is left to the Python workers and the OS
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_DRIVER_MEM", f"{min(24 * 1024, host_ram_mb() // 2)}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,219 +1,95 @@
-"""Unit tests for bench.py's scaling-round arithmetic — no Spark session.
+"""Unit tests for bench.py's scaling round — no Spark session.
 
-The gate evidence the driver reads (BENCH_r{N}.json scaling block) is
-computed by _round_summary/_control_drift; these pin the ratio definitions
-(both gate metrics weak-style, host-normalized by the conservative
-max-of-pre/post cache control, capped at 1.0) and the stability rule so a
-refactor can't silently change what `gate_met` means.
+Pin the weak-ratio and gate arithmetic (both gate metrics raw and
+weak-style), the skip below 4 cores, and the leg subprocess's failure and
+output handling, so a refactor can't silently change what `gate_met` means.
 """
 
 from __future__ import annotations
 
+import subprocess
+
+import pytest
+
 import bench
 
 
-def _ctl(cache_eff: float, stream_eff: float = 0.5, base: float = 100.0):
-    return {
-        "stream": {"n_rate": base, "fourn_rate": base * 4 * stream_eff,
-                   "efficiency": stream_eff},
-        "cache": {"n_rate": base, "fourn_rate": base * 4 * cache_eff,
-                  "efficiency": cache_eff},
-    }
+def _leg(fps: float, kernel_fps: float, rows: int) -> dict:
+    return {"fps": fps, "kernel_fps": kernel_fps, "rows": rows,
+            "wall_sec": round(rows / fps, 2)}
 
 
 def test_round_summary_weak_style_gate_metrics():
-    legs = {
-        "fourn": {"fps": 4000.0, "kernel_fps": 40000.0, "rows": 240000},
-        "weak_n": {"fps": 1250.0, "kernel_fps": 12500.0, "rows": 60000},
-        # round-0 strong legs present: strong ratios also computed
-        "n": {"fps": 1600.0, "kernel_fps": 11000.0, "rows": 240000},
-    }
-    s = bench._round_summary(legs, _ctl(0.9), _ctl(0.8))
+    s = bench._scaling_summary(_leg(1250.0, 12500.0, 60000),
+                               _leg(4000.0, 40000.0, 240000))
     assert s["weak_efficiency"] == 0.8          # 4000 / (4 * 1250)
     assert s["kernel_weak_efficiency"] == 0.8   # 40000 / (4 * 12500)
-    assert s["efficiency"] == 0.625             # 4000 / (4 * 1600)
-    assert s["kernel_efficiency"] == 0.909      # 40000 / (4 * 11000)
-    # conservative normalizer: max(pre, post) cache efficiency = 0.9
-    assert s["weak_efficiency_host_normalized"] == 0.889
-    assert s["kernel_weak_efficiency_host_normalized"] == 0.889
-    assert s["window_stable"] is True
-
-
-def test_round_summary_without_strong_legs():
-    # rounds after 0 carry no "n" leg: strong ratios are None, gate
-    # metrics still complete
-    legs = {
-        "fourn": {"fps": 4000.0, "kernel_fps": 40000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    s = bench._round_summary(legs, _ctl(1.0), _ctl(1.0))
-    assert s["efficiency"] is None
-    assert s["kernel_efficiency"] is None
-    assert s["kernel_efficiency_host_normalized"] is None
-    assert s["weak_efficiency"] == 1.0
-    assert s["kernel_weak_efficiency"] == 1.0
-
-
-def test_normalization_caps_at_one():
-    legs = {
-        "fourn": {"fps": 4400.0, "kernel_fps": 44000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    # raw 1.1, control 0.7 -> uncapped 1.57; the claim is capped at 1.0
-    s = bench._round_summary(legs, _ctl(0.7), _ctl(0.7))
-    assert s["weak_efficiency"] == 1.1
-    assert s["weak_efficiency_host_normalized"] == 1.0
-    assert s["kernel_weak_efficiency_host_normalized"] == 1.0
+    assert s["weak_n_rows"] == 60000 and s["rows"] == 240000
+    assert s["fourn_fps"] == 4000.0
+    assert s["gate_basis"] == "raw-weak-pair"
+    assert s["gate_met"] is True
 
 
 def test_gate_is_raw_not_normalized():
-    # ADVICE r04 item 1: the gate asserts the RAW weak ratios. A round whose
-    # raw ratios miss 0.8 must NOT pass the gate even when normalization
-    # lifts it past 0.8 (starved-window control of 0.6 lifts 0.65 -> 1.0).
-    legs = {
-        "fourn": {"fps": 2600.0, "kernel_fps": 26000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    s = bench._round_summary(legs, _ctl(0.6), _ctl(0.6))
+    # the gate asserts the RAW weak ratios, both of them
+    s = bench._scaling_summary(_leg(1000.0, 10000.0, 60000),
+                               _leg(2600.0, 33000.0, 240000))
     assert s["weak_efficiency"] == 0.65
-    assert s["weak_efficiency_host_normalized"] == 1.0
-    assert bench._gate_ok(s) is False
-    # and a raw pass in a stable window IS the gate
-    legs_pass = {
-        "fourn": {"fps": 3300.0, "kernel_fps": 33000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    s2 = bench._round_summary(legs_pass, _ctl(0.9), _ctl(0.9))
+    assert s["kernel_weak_efficiency"] == 0.825
+    assert s["gate_met"] is False
+    s2 = bench._scaling_summary(_leg(1000.0, 10000.0, 60000),
+                                _leg(3300.0, 33000.0, 240000))
     assert s2["weak_efficiency"] == 0.825
-    assert bench._gate_ok(s2) is True
+    assert s2["gate_met"] is True
 
 
-def test_gate_requires_stable_window():
-    legs = {
-        "fourn": {"fps": 4000.0, "kernel_fps": 40000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    post = _ctl(0.9)
-    post["stream"]["fourn_rate"] *= 3  # weather turned mid-round
-    s = bench._round_summary(legs, _ctl(0.9), post)
-    assert s["weak_efficiency"] == 1.0
-    assert s["window_stable"] is False
-    assert bench._gate_ok(s) is False
+def test_scaling_skipped_below_four_cores(monkeypatch):
+    def _no_spawn(*args, **kwargs):
+        raise AssertionError("no subprocess may be spawned")
+
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 2)
+    monkeypatch.setattr(bench.subprocess, "Popen", _no_spawn)
+    monkeypatch.setattr(bench, "_ensure_corpus", _no_spawn)
+    s = bench.scaling_round()
+    assert s["gate_met"] is False
+    assert "2 cores" in s["skipped"]
 
 
-def test_kernel_reps_symmetric_on_gated_legs():
-    # ADVICE r04 item 2: equal draws on both legs of the gated ratio —
-    # 240k on 32 cores and 60k on 8 cores have the same per-core load and
-    # the same rep count; only the strong 240k-on-8-cores leg drops to 2
-    assert bench._kernel_reps(240_000, 32) == bench._kernel_reps(60_000, 8)
-    assert bench._kernel_reps(240_000, 32) == 3
-    assert bench._kernel_reps(240_000, 8) == 2
+def test_scaling_worker_timeout_and_death_paths(monkeypatch):
+    """A leg subprocess that wedges or dies must fail LOUDLY, not hang or
+    hand back a half-made result."""
+    killed = []
 
+    class _Proc:
+        pid = 12345
 
-def test_control_drift_flags_turned_window():
-    pre, post = _ctl(0.9, base=100.0), _ctl(0.9, base=100.0)
-    assert bench._control_drift(pre, post) == 1.0
-    # one rate moving >2x pre->post flips stability
-    post_turned = _ctl(0.9, base=100.0)
-    post_turned["stream"]["fourn_rate"] = pre["stream"]["fourn_rate"] * 2.5
-    legs = {
-        "fourn": {"fps": 4000.0, "kernel_fps": 40000.0, "rows": 240000},
-        "weak_n": {"fps": 1000.0, "kernel_fps": 10000.0, "rows": 60000},
-    }
-    s = bench._round_summary(legs, pre, post_turned)
-    assert s["control_drift"] == 2.5
-    assert s["window_stable"] is False
+        def __init__(self, returncode, timeout):
+            self.returncode, self._timeout = returncode, timeout
 
+        def communicate(self, timeout=None):
+            if self._timeout:
+                raise subprocess.TimeoutExpired("bench.py", timeout)
+            return "", None
 
-def test_scaling_worker_timeout_and_death_paths():
-    """The persistent-worker handle must fail LOUDLY (not hang) when its
-    child wedges (queue stays empty past the deadline) or dies (EOF
-    sentinel) — a silent hang would eat the whole scaling budget and leave
-    the driver with no JSON artifact at all."""
-    import queue
-    import time
+        def wait(self):
+            return self.returncode
 
-    import pytest
+    def _popen(returncode, timeout):
+        return lambda *args, **kwargs: _Proc(returncode, timeout)
 
-    w = object.__new__(bench._ScalingWorker)
-    w.par = 32
-    w.log_path = "/tmp/does-not-exist.log"
-    w._q = queue.Queue()
-
-    t0 = time.time()
+    monkeypatch.setattr(bench.os, "killpg", lambda pid, sig: killed.append(pid))
+    monkeypatch.setattr(bench.subprocess, "Popen", _popen(None, True))
     with pytest.raises(RuntimeError, match="timed out"):
-        w._next_line(deadline=time.time() + 0.2)
-    assert time.time() - t0 < 5.0  # bounded wait, no hang
+        bench._run_leg(4, 1, 2048, "corpus.parquet")
+    assert killed == [12345]  # the whole process group, JVMs included
 
-    w._q.put(None)  # the reader thread's EOF sentinel
+    monkeypatch.setattr(bench.subprocess, "Popen", _popen(1, False))
     with pytest.raises(RuntimeError, match="died"):
-        w._next_line(deadline=time.time() + 1.0)
+        bench._run_leg(4, 1, 2048, "corpus.parquet")
 
 
-def test_scaling_worker_ready_consumes_preamble():
-    """wait_ready must skip any non-READY preamble lines a child prints
-    before its session is up."""
-    import queue
-    import time
-
-    w = object.__new__(bench._ScalingWorker)
-    w.par = 8
-    w.log_path = "/tmp/does-not-exist.log"
-    w._q = queue.Queue()
-    w.ready = False
-    for ln in ("some jvm banner", "READY"):
-        w._q.put(ln)
-    w.wait_ready(timeout=1.0)
-    assert w.ready
-    # idempotent: a second call returns immediately without reading
-    t0 = time.time()
-    w.wait_ready(timeout=1.0)
-    assert time.time() - t0 < 0.1
-
-
-def test_round_summary_reports_host_envelope():
-    # the artifact must carry the window's OWN substrate scaling next to
-    # the raw gate ratios (round 5): cache = conservative max of pre/post,
-    # stream likewise, so a raw miss is attributable to the box
-    legs = {
-        "fourn": {"fps": 4000.0, "kernel_fps": 40000.0, "rows": 240000},
-        "weak_n": {"fps": 1250.0, "kernel_fps": 12500.0, "rows": 60000},
-    }
-    s = bench._round_summary(legs, _ctl(0.9, stream_eff=0.62),
-                             _ctl(0.8, stream_eff=0.71))
-    assert s["host_cache_efficiency"] == 0.9
-    assert s["host_stream_efficiency"] == 0.71
-
-
-def test_worker_conf_override_env(monkeypatch):
-    # _ScalingWorker(conf=...) must ship the overrides to the child via
-    # SPARK_GRAFT_WORKER_CONF (tools/conf_probe.py contract) and tag its
-    # log path so two same-parallelism workers don't collide
-    import json as _json
-
-    captured = {}
-
-    class _P:
-        stdout = iter(())
-        stdin = None
-
-        def poll(self):
-            return 0
-
-        def wait(self, timeout=None):
-            return 0
-
-    def fake_popen(cmd, **kw):
-        captured["env"] = kw["env"]
-        return _P()
-
-    monkeypatch.setattr(bench.subprocess, "Popen", fake_popen)
-    w = bench._ScalingWorker(32, 8, conf={"spark.locality.wait": "0ms"},
-                             tag="_t")
-    assert _json.loads(captured["env"]["SPARK_GRAFT_WORKER_CONF"]) == {
-        "spark.locality.wait": "0ms"}
-    assert w.log_path.endswith("_32_t.log")
-    # a plain worker must NOT inherit an override into its environment
-    w2 = bench._ScalingWorker(8, 2)
-    assert "SPARK_GRAFT_WORKER_CONF" not in captured["env"] or (
-        captured["env"].get("SPARK_GRAFT_WORKER_CONF") in (None, "{}"))
+def test_scaling_leg_skips_preamble():
+    out = bench._parse_leg_output('some library banner\n{"fps": 10.0}\n')
+    assert out == {"fps": 10.0}
+    with pytest.raises(RuntimeError, match="no result"):
+        bench._parse_leg_output("banner only\n")

@@ -131,3 +131,20 @@ def test_partition_stats_reconcile(spark):
     assert totals["edges"] == res.edges.count()
     assert totals["cluster_map"] == res.cluster_map.count()
     assert totals["signatures"] == res.sig_df.count()
+
+
+def test_pipeline_failure_restores_aqe(spark, monkeypatch):
+    """A stage that raises (CC non-convergence, the probe-filter cap) must
+    leave the session's AQE setting as the caller had it."""
+    import dedup_domains_spark.plans.pipeline as pipeline
+
+    def _fail(*args, **kwargs):
+        raise RuntimeError("connected_components did not converge")
+
+    monkeypatch.setattr(pipeline, "connected_components", _fail)
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    files = spark.createDataFrame(gen_code_corpus(60).files)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run_pipeline(spark, files, DedupConfig(use_aqe=before != "true"))
+    assert spark.conf.get(key) == before

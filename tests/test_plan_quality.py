@@ -82,11 +82,11 @@ def test_containment_probe_side_broadcasts(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_containment_eager_releases_postings_spill(spark):
-    """eager=True must leave NO retained DISK_ONLY blocks once the candidate
-    set is materialized (VERDICT r03 item 4: the postings persist previously
-    outlived the query — fine once per session, an accumulating spill in a
-    recurring incremental loop)."""
+def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
+    """A standalone contained_pairs call must leave NO retained DISK_ONLY
+    blocks once its result is materialized (VERDICT r03 item 4: the postings
+    persist previously outlived the query — fine once per session, an
+    accumulating spill in a recurring incremental loop)."""
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
     from dedup_domains_spark.operators.containment import contained_pairs
@@ -111,7 +111,7 @@ def test_containment_eager_releases_postings_spill(spark):
     before = _disk_only_ids()  # session is shared — other tests may cache
     df = with_row_identity(docs)
     sig = add_signatures(df.select("uid", "content"), cfg)
-    contained_pairs(df, sig, cfg, eager=True).count()
+    contained_pairs(df, sig, cfg).count()
     leaked = _disk_only_ids() - before
     assert leaked == set(), f"retained DISK_ONLY blocks: {leaked}"
 

@@ -18,6 +18,7 @@ Prints one JSON line.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import sys
@@ -81,7 +82,6 @@ def main() -> None:
         # the first 7.68M attempt (20g executors) lost a JVM to the kernel
         # OOM-killer with the driver python sitting on exactly this weight
         del corpus
-        import gc
         gc.collect()
 
     par = args.workers * args.cores
