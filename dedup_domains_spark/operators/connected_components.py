@@ -1,42 +1,139 @@
-"""Iterative connected components (union-find by min-label propagation) —
-the transitive closure of duplicate-pair edges into clusters (SURVEY.md §2.3;
-the reference's analog is the implicit duplicate-cluster graph its trie
-collapses eagerly).
+"""Connected components (min-uid labels) — the transitive closure of
+duplicate-pair edges into clusters (SURVEY.md §2.3; the reference's analog
+is the implicit duplicate-cluster graph its trie collapses eagerly).
 
-Catalyst cannot express fixpoints, so the loop lives on the driver
-(SURVEY.md §4 item 2): each round joins the current label table with the
-edge list, takes the min label over each node's neighborhood (including
-itself), and checks convergence by counting changed labels. Lineage is
-truncated every round with ``localCheckpoint`` — without it the plan doubles
-per iteration and the job dies at scale. Candidate edges come from salted
-stars around bucket minima (buckets.py), so component diameters are small
-and the loop converges in O(log diameter)-ish rounds, not O(n).
+Contract, then finish on the driver (the load-balanced union-find line of
+BTS, ICDE 2024). The state is a label per node and the *contracted edge
+list*: distinct ``(label(a), label(b))`` pairs with ``label(a) != label(b)``.
+While every node is its own label that list is just the adjacency, so the
+first job scans the edges once (which materializes a cached edge DAG) and
+counts it. A list of at most ``driver_edge_budget`` rows is collected and a
+vectorized numpy union-find finishes the labels.
+
+Graphs over the budget first run distributed rounds: each joins the label
+table with the adjacency, takes the min label over each node's
+neighborhood, pointer-jumps one hop, and truncates lineage with a lazy
+``localCheckpoint``. The round's one job counts the contracted edges of the
+new labels. That count materializes the checkpoint, tests convergence (zero
+contracted edges is the fixpoint: each component carries one label, its min
+uid) and tells the driver when the residual fits the budget.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# the contracted edge list may take 1/16 of the driver heap at 16 bytes per
+# (long, long) edge: about 12M edges on a 3g heap
+_HEAP_SHARE = 16
+_EDGE_BYTES = 16
+_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def driver_edge_budget(spark) -> int:
+    """Largest contracted edge list collected to the driver, from
+    ``spark.driver.memory`` (a bare number is MiB, as in Spark)."""
+    mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    mem = mem.strip().lower().rstrip("b")
+    if mem[-1] in _UNITS:
+        heap = int(float(mem[:-1]) * _UNITS[mem[-1]])
+    else:
+        heap = int(mem) * _UNITS["m"]
+    return heap // (_HEAP_SHARE * _EDGE_BYTES)
+
+
+def min_uid_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find over the edges ``a[i] - b[i]``: returns every endpoint and
+    the min uid of its component.
+
+    Each round hooks every root onto the smallest root it shares an edge
+    with (a parent is always smaller than its child, so no cycles), then
+    pointer-jumps until every node points at its root, then contracts the
+    edge list to the edges that still join two roots."""
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = np.arange(len(nodes))
+    ea, eb = idx[: len(a)], idx[len(a):]
+    while len(ea):
+        ra, rb = parent[ea], parent[eb]
+        cross = ra != rb
+        ea, eb = np.minimum(ra, rb)[cross], np.maximum(ra, rb)[cross]
+        np.minimum.at(parent, eb, ea)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    # nodes are sorted, so the smallest index of a component is its min uid
+    return nodes, nodes[parent]
 
 
 def _truncate(df: DataFrame, durable: bool = False) -> DataFrame:
-    """Cut lineage between iterations, lazily: the caller's next action
-    materializes it, so the loop's convergence count() both populates the
-    checkpoint and reads the changed-row count in ONE job (round 6 barrier
-    diet: the probe used to be a second driver-synchronized job per
-    iteration).
+    """Cut lineage between rounds, lazily: the round's count materializes it.
 
-    Default is localCheckpoint: computed ONCE (a reliable checkpoint runs
-    the plan a second time for the write pass — measured ~2x per-round cost
-    in the loop). Its blocks die with an executor, but the pipeline's
-    durability story is the per-STAGE checkpoint tables (plans/checkpoint.py):
-    on executor loss the stage reruns from its input table, not from
-    mid-loop state. Pass durable=True (pipeline does when the caller gives a
-    checkpoint_dir) to use reliable checkpoints inside the loop as well."""
+    Default is localCheckpoint, computed once (a reliable checkpoint runs
+    the plan a second time for its write pass). Its blocks die with an
+    executor, but the pipeline's durability story is the per-STAGE
+    checkpoint tables (plans/checkpoint.py). Pass durable=True (the
+    pipeline does when the caller gives a checkpoint_dir) to use reliable
+    checkpoints inside the loop as well."""
     sc = df.sparkSession.sparkContext
     if durable and sc._jsc.sc().checkpointDir().isDefined():
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)
+
+
+def _step(adj: DataFrame, labels: DataFrame) -> DataFrame:
+    """One distributed round: min label over each node's neighborhood, then
+    one pointer jump (labels map node→label and every label IS a node, so
+    composing the map halves the residual chain depth)."""
+    neighbor_min = (
+        adj.join(labels, adj["dst"] == labels["uid"])
+        .groupBy("src")
+        .agg(F.min("cluster_id").alias("_nmin"))
+    )
+    stepped = labels.join(neighbor_min, labels["uid"] == neighbor_min["src"]).select(
+        "uid", F.least("cluster_id", "_nmin").alias("cluster_id")
+    )
+    jmp = stepped.select(F.col("uid").alias("_juid"), F.col("cluster_id").alias("_jcid"))
+    return stepped.join(jmp, stepped["cluster_id"] == jmp["_juid"]).select(
+        "uid", F.least("cluster_id", "_jcid").alias("cluster_id")
+    )
+
+
+def _contract(pairs: DataFrame, labels: DataFrame) -> DataFrame:
+    """The edge list contracted to the current labels."""
+    la = labels.select(F.col("uid").alias("a"), F.col("cluster_id").alias("_la"))
+    lb = labels.select(F.col("uid").alias("b"), F.col("cluster_id").alias("_lb"))
+    return (
+        pairs.join(la, "a").join(lb, "b")
+        .select(F.least("_la", "_lb").alias("a"), F.greatest("_la", "_lb").alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _finish_on_driver(contracted: DataFrame, labels: DataFrame | None, dtype) -> DataFrame:
+    """Collect the contracted edges, union-find them, and map the result
+    back onto the label table (or return it: with no label table every
+    node is its own label)."""
+    pdf = contracted.toPandas()
+    nodes, roots = min_uid_labels(
+        pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64)
+    )
+    schema = StructType([StructField("uid", dtype), StructField("cluster_id", dtype)])
+    found = contracted.sparkSession.createDataFrame(
+        pd.DataFrame({"uid": nodes, "cluster_id": roots}), schema
+    )
+    if labels is None:
+        return found
+    root = found.select(F.col("uid").alias("_label"), F.col("cluster_id").alias("_root"))
+    return labels.join(F.broadcast(root), labels["cluster_id"] == root["_label"], "left").select(
+        "uid", F.coalesce("_root", "cluster_id").alias("cluster_id")
+    )
 
 
 def connected_components(
@@ -46,134 +143,50 @@ def connected_components(
     """edges(id_a, id_b) -> (uid, cluster_id) for every endpoint.
 
     cluster_id is the min uid reachable; isolated nodes are absent (callers
-    union them back as singletons). If the fixpoint is NOT reached within
-    max_iterations the function raises — partially-propagated labels are
-    silently wrong clusters (ADVICE r01). ``stats['iterations']`` reports
-    the rounds used (surfaced in pipeline metrics).
+    union them back as singletons). If the contracted edges still exceed the
+    driver budget after max_iterations distributed rounds the function
+    raises — partially-propagated labels are silently wrong clusters
+    (ADVICE r01). ``stats['iterations']`` reports the distributed rounds
+    run (0 when the first contracted list fits the driver) and
+    ``stats['contracted_edges']`` the contracted-edge count before each.
     """
-    # symmetric adjacency, self-loop so a node keeps its own label in the min.
-    # Built with ONE scan of edges (explode of both directions) rather than a
-    # self-union: the union's two branches read the edges plan independently,
-    # so when the caller hands an unpopulated cached edges frame, the first
-    # adj job would compute the whole upstream (candidates + verify +
-    # containment) TWICE concurrently. Single-scan adj makes the labels-init
-    # job below a safe linear materializer for the caller's edges cache —
-    # which lets the pipeline drop its separate edges.count() barrier.
-    adj = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.src", "_e.dst")
-        .distinct()
-    ).cache()  # static across rounds — cache, don't checkpoint (a reliable
-    # checkpoint computes its input twice: once for the job, once for the
-    # write pass; the loop's LABELS need lineage truncation, adj doesn't)
-    labels = _truncate(
-        adj.select(F.col("src").alias("uid"))
-        .distinct()
-        .withColumn("cluster_id", F.col("uid"))
-    )
-    # the count() is the labels-init materializer (same one job as the old
-    # eager checkpoint) AND yields the node count for free — which sizes the
-    # loop's shuffle partitions ADAPTIVELY: label/adjacency tables are
-    # (long, long) rows, so the session's scan-sized shuffle-partition
-    # setting leaves most loop partitions empty at small component counts
-    # while every empty partition still costs a task per exchange per
-    # round (guide §2.2 — fewer, larger reduce partitions). Target ~16k
-    # rows/partition: the loop is latency-bound, so the target balances
-    # per-task scheduling overhead (~5-10 ms) against per-partition join
-    # work of the same order — far below it tasks are pure overhead, far
-    # above it the loop serializes while cores idle (measured: a 240k-node
-    # loop forced to 1 partition erased the fusion win). Capped by the
-    # session setting so a billion-node graph on a real cluster keeps its
-    # full fan-out, and the cap also keeps scaling-leg per-core load
-    # matched (bench legs size shuffle_partitions to their core count).
-    n_nodes = labels.count()
-    spark = edges.sparkSession
-    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(1, min(sess_parts, -(-n_nodes // 16_384)))
-    # snap to the session width once the estimate is within 2x of it: a
-    # 13-of-16-partition loop leaves cores idle every round for no overhead
-    # win — the shrink only pays when it removes MOST of the empty tasks
-    if loop_parts * 2 >= sess_parts:
-        loop_parts = sess_parts
-
+    dtype = edges.schema["id_a"].dataType
+    budget = driver_edge_budget(edges.sparkSession)
+    # the contracted list while every node is its own label: one row per
+    # undirected pair. Self-loops stay, so an endpoint with no other edge
+    # still gets its own label.
+    pairs = edges.select(
+        F.least("id_a", "id_b").alias("a"), F.greatest("id_a", "id_b").alias("b")
+    ).distinct().cache()
+    contracted, adj, labels, counts = pairs, None, None, []
     try:
-        if loop_parts != sess_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        return _label_loop(adj, labels, max_iterations, durable, stats)
+        while True:
+            counts.append(contracted.count())
+            if counts[-1] == 0 and labels is not None:
+                return labels
+            if counts[-1] <= budget:
+                return _finish_on_driver(contracted, labels, dtype)
+            if len(counts) > max_iterations:
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iterations} "
+                    f"iterations; raise cc_max_iterations ({counts[-1]} contracted "
+                    f"edges left, driver budget {budget})"
+                )
+            if adj is None:
+                adj = pairs.select(F.explode(F.array(
+                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+                )).alias("_e")).select("_e.src", "_e.dst").cache()
+                labels = adj.select(F.col("src").alias("uid")).distinct().withColumn(
+                    "cluster_id", F.col("uid"))
+            labels = _truncate(_step(adj, labels), durable)
+            if contracted is not pairs:
+                contracted.unpersist()
+            contracted = _contract(pairs, labels).cache()
     finally:
-        if loop_parts != sess_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-
-
-def _label_loop(adj, labels, max_iterations, durable, stats):
-    converged = False
-    iterations = 0
-    for it in range(max_iterations):
-        iterations = it + 1
-        # min label over each node's neighborhood
-        neighbor_min = (
-            adj.join(labels, adj["dst"] == labels["uid"], "inner")
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("_nmin"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels["uid"] == neighbor_min["src"], "left")
-            .select(
-                "uid",
-                F.col("cluster_id").alias("_old"),
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("_nmin"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        )
-        # pointer jump: follow the label one hop (labels map node→label and
-        # every label IS a node id, so composing the map halves the residual
-        # chain depth — O(log d) rounds instead of O(d); hub-star edges keep
-        # d small, but the bucket-overlap tail was costing 3-4 extra
-        # driver-synchronized rounds at 60k rows)
-        jmp = stepped.select(
-            F.col("uid").alias("_juid"), F.col("cluster_id").alias("_jcid")
-        )
-        merged = (
-            stepped.join(jmp, stepped["cluster_id"] == jmp["_juid"], "left")
-            .select(
-                "uid", "_old",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("_jcid"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        )
-        # LAZY truncation + full count in one action: the count() is the
-        # checkpoint's materializing job (every partition is computed and
-        # its blocks stored) AND the convergence probe — 1 job/iteration
-        # where r05 paid 2 (eager checkpoint job + limit(1).count probe;
-        # VERDICT r05 next-round item 4). The count is full rather than
-        # limit(1) — limit's incremental partition scan would leave part of
-        # the checkpoint unmaterialized and the next round would recompute
-        # the remainder from lineage.
-        merged = _truncate(merged, durable)
-        labels = merged.select("uid", "cluster_id")
-        changed = merged.filter(
-            F.col("cluster_id") != F.col("_old")
-        ).count()
-        if changed == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["iterations"] = iterations
-        stats["converged"] = converged
-    if not converged and iterations == max_iterations:
-        # an inter-bucket chain longer than the budget would yield silently
-        # wrong clusters — fail loudly instead (ADVICE r01)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            f"iterations; raise cc_max_iterations (labels still changing)"
-        )
-    return labels
+        if stats is not None:
+            stats["iterations"] = len(counts) - 1
+            stats["contracted_edges"] = counts
+        for df in (pairs, adj, contracted):
+            if df is not None:
+                df.unpersist()

@@ -2,7 +2,7 @@
 per-stage checkpoints with per-partition lineage and metrics tables').
 
 Each stage writes an idempotent parquet table keyed by (stage name, config
-hash). A rerun with the same config finds the table and reads it back
+hash, input fingerprint). A rerun with the same config and input finds the table and reads it back
 instead of recomputing — the reference has no analog (it reruns from
 scratch); this is mandated new capability. In production the same layout is
 an Iceberg table per stage; parquet is the sandbox stand-in.
@@ -10,10 +10,26 @@ an Iceberg table per stage; parquet is the sandbox stand-in.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """Fingerprint of a source DataFrame: its plan hash plus the path, size
+    and modification time of every input file (read through the Hadoop
+    FileSystem). The plan hash alone names the source, not its data, so an
+    in-place overwrite at the same path would resume stale stage tables."""
+    sc = df.sparkSession.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    h = hashlib.sha256(str(df.semanticHash()).encode())
+    for f in sorted(df.inputFiles()):
+        p = jvm.org.apache.hadoop.fs.Path(f)
+        st = p.getFileSystem(conf).getFileStatus(p)
+        h.update(f"\n{f}\0{st.getLen()}\0{st.getModificationTime()}".encode())
+    return h.hexdigest()[:16]
 
 
 @dataclass
@@ -21,11 +37,9 @@ class CheckpointContext:
     spark: SparkSession
     base_dir: str | None      # None -> checkpointing disabled
     config_hash: str
-    # fingerprint of the INPUT (plan-derived, e.g. semanticHash of the source
-    # DataFrame): a rerun over a different corpus must not reuse stage tables
-    # computed for the old one (ADVICE r01). Note the limit: data overwritten
-    # IN PLACE at the same path keeps the same plan hash — pass an explicit
-    # content-derived fingerprint for mutable sources.
+    # fingerprint of the INPUT (see input_fingerprint): a rerun over a
+    # different corpus must not reuse stage tables computed for the old one
+    # (ADVICE r01)
     input_fingerprint: str = ""
 
     def path(self, stage: str) -> str:

@@ -23,9 +23,10 @@ Scale shape:
     sweep into ONE bucket-pair pass (operators/lsh.fused_candidate_pairs) —
     the stage was barrier-bound, not compute-bound.
   * each stage is checkpointable (plans/checkpoint.py, keyed by config hash
-    AND an input fingerprint) and contributes a metrics row; lineage records
-    why every dropped row died — the distributed replacement for the
-    reference's per-file counters (pfb_dnsbl_prune.py:233-241).
+    AND a fingerprint of the input files); lineage records why every
+    dropped row died and the sink's metrics table counts every stage — the
+    distributed replacement for the reference's per-file counters
+    (pfb_dnsbl_prune.py:233-241).
 """
 
 from __future__ import annotations
@@ -44,26 +45,25 @@ from dedup_domains_spark.operators.lsh import fused_candidate_pairs
 from dedup_domains_spark.operators.representative import elect_representatives
 from dedup_domains_spark.operators.verify import verify_pairs_estimate, verify_pairs_exact
 from dedup_domains_spark.functions.signatures import add_signatures
-from dedup_domains_spark.plans.checkpoint import CheckpointContext
+from dedup_domains_spark.plans.checkpoint import CheckpointContext, input_fingerprint
 from dedup_domains_spark.sources.code_corpus import with_row_identity
 
 
 @dataclass
 class PipelineResult:
-    """Pipeline outputs. The DIAGNOSTIC frames (lineage, metrics,
-    partition_stats) are built lazily on first attribute access: every
-    classic-mode DataFrame operation pays eager JVM analysis of its plan
-    tree, and building these three (~20 operations over the pipeline's
-    large cached plans) cost measurable driver wall in callers that only
-    consume survivors/cluster_map — the bench legs and the headline query
-    among them (r06; guide §7.3 driver-side planning). Values are
-    identical — only construction time moves to the first consumer."""
+    """Pipeline outputs. The DIAGNOSTIC frames (lineage, partition_stats)
+    are built lazily on first attribute access: every classic-mode
+    DataFrame operation pays eager JVM analysis of its plan tree, and
+    callers that only consume survivors/cluster_map (the bench legs and the
+    headline query among them) never need them (r06; guide §7.3
+    driver-side planning). The metrics table is built by the sink
+    (sources/sinks.write_results) from counts observed while it writes."""
 
     survivors: DataFrame     # representative rows + passthrough (full columns)
     cluster_map: DataFrame   # uid, cluster_id, rep_uid, is_rep, electable
     edges: DataFrame         # id_a, id_b, edge_kind — the duplicate graph
+    cc_stats: dict           # connected_components stats: iterations, contracted_edges
     _lineage_fn: Callable[[], DataFrame] = None    # uid, action, reason
-    _metrics_fn: Callable[[], DataFrame] = None    # stage, count
     _partition_stats_fn: Callable[[], DataFrame] = None
     sig_df: DataFrame | None = None
 
@@ -72,12 +72,6 @@ class PipelineResult:
         if "_lineage" not in self.__dict__:
             self.__dict__["_lineage"] = self._lineage_fn()
         return self.__dict__["_lineage"]
-
-    @property
-    def metrics(self) -> DataFrame:
-        if "_metrics" not in self.__dict__:
-            self.__dict__["_metrics"] = self._metrics_fn()
-        return self.__dict__["_metrics"]
 
     @property
     def partition_stats(self) -> DataFrame:
@@ -136,7 +130,7 @@ def _build_pipeline(
 ) -> PipelineResult:
     ckpt = CheckpointContext(
         spark, checkpoint_dir, cfg.config_hash(),
-        input_fingerprint=f"{corpus.semanticHash() & 0xFFFFFFFF:08x}",
+        input_fingerprint=input_fingerprint(corpus) if checkpoint_dir else "",
     )
 
     # ---- identity + route (F2 analog: carry-over rows bypass dedup) ----
@@ -223,10 +217,10 @@ def _build_pipeline(
     )
     edges = ckpt.stage(edges, "edges").cache()
     # no edges.count() barrier here (VERDICT r03 item 3): connected_components
-    # builds its adjacency with a SINGLE scan of edges, so its labels-init
-    # job is a linear materializer for this cache — metrics and electability
-    # read the populated blocks afterwards. (The old count() + CC-init pair
-    # scanned the full upstream twice back-to-back.)
+    # counts its contracted edge list from a SINGLE scan of edges, so that
+    # first job is a linear materializer for this cache — electability and
+    # the sink's edge counts read the populated blocks afterwards. (The old
+    # count() + CC-init pair scanned the full upstream twice back-to-back.)
 
     # ---- connected components + singleton backfill ----
     cc_stats: dict = {}
@@ -236,7 +230,7 @@ def _build_pipeline(
             stats=cc_stats, durable=checkpoint_dir is not None,
         )
     finally:
-        # CC's init job has materialized the full edge DAG (contained is
+        # CC's first job has materialized the full edge DAG (contained is
         # cached now) — the containment postings spill is no longer reachable
         for c in spill_caches:
             c.unpersist()
@@ -273,9 +267,9 @@ def _build_pipeline(
     )
     survivors = ckpt.stage(survivors, "survivors")
 
-    # ---- lineage / metrics / partition_stats: LAZY (see PipelineResult —
-    # these ~20 DataFrame operations over large cached plans are eager JVM
-    # analysis the survivors-only callers never need) ----
+    # ---- lineage / partition_stats: LAZY (see PipelineResult — DataFrame
+    # operations over large cached plans are eager JVM analysis the
+    # survivors-only callers never need) ----
     def _lineage() -> DataFrame:
         # why every row lived or died (M1 analog)
         return (
@@ -295,39 +289,12 @@ def _build_pipeline(
             )
         )
 
-    def _metrics() -> DataFrame:
-        # three single-pass aggregations over cached frames (the r01
-        # version rescanned via nine unioned groupBy-counts, VERDICT item 3)
-        is_pt = F.expr(passthrough_predicate).cast("long")
-        base = df.agg(
-            F.count(F.lit(1)).alias("_input"), F.sum(is_pt).alias("_pt")
-        )
-        cm = cluster_map.agg(
-            F.sum(F.col("is_rep").cast("long")).alias("_clusters")
-        )
-        reps = exact_map.agg(F.sum(F.col("is_rep").cast("long")).alias("_reps"))
-        onerow = base.crossJoin(cm).crossJoin(reps)
-        return onerow.selectExpr(
-            "stack(6, 'input', _input, 'passthrough', _pt, "
-            "'dedupable', _input - _pt, 'exact_reps', _reps, "
-            "'clusters', _clusters, 'survivors', _clusters + _pt) as (stage, count)"
-        ).unionByName(
-            edges.groupBy(
-                F.concat(F.lit("edges_"), F.col("edge_kind")).alias("stage")
-            ).count()
-        ).unionByName(
-            spark.createDataFrame(
-                [("cc_iterations", cc_stats.get("iterations", 0))],
-                "stage string, count long",
-            )
-        )
-
     return PipelineResult(
         survivors=survivors,
         cluster_map=cluster_map,
         edges=edges,
+        cc_stats=cc_stats,
         _lineage_fn=_lineage,
-        _metrics_fn=_metrics,
         _partition_stats_fn=lambda: _partition_stats(
             {"signatures": sig_df, "edges": edges, "cluster_map": cluster_map}
         ),

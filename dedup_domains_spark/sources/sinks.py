@@ -13,6 +13,7 @@ import json
 import os
 import time
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from dedup_domains_spark.plans.pipeline import PipelineResult
@@ -109,33 +110,61 @@ def write_results(
     Iceberg partition spec) and sorted within partitions by (repo, path) so
     downstream scans are clustered; cluster_map/lineage/metrics are plain
     tables keyed by uid.
-    """
+
+    Five actions, none a rescan: the survivors and cluster_map writes carry their row counts
+    (and the survivors' sha256 invariant) as observed metrics, one
+    aggregation counts the cached edges by kind, then the lineage write and
+    the write of the metrics rows built here on the driver."""
     os.makedirs(out_dir, exist_ok=True)
 
-    surv = result.survivors.sortWithinPartitions("repo", "path")
+    surv_obs, cm_obs = Observation("survivors"), Observation("cluster_map")
+    bad_sha = F.sha2(F.col("content"), 256) != F.col("content_sha256")
+    surv = result.survivors.observe(
+        surv_obs, F.count(F.lit(1)).alias("rows"),
+        F.sum(bad_sha.cast("long")).alias("violations"),
+    ).sortWithinPartitions("repo", "path")
     w = surv.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(partition_by)
     w.parquet(f"{out_dir}/survivors")
 
-    result.cluster_map.write.mode("overwrite").parquet(f"{out_dir}/cluster_map")
-    result.lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
-    result.metrics.write.mode("overwrite").parquet(f"{out_dir}/metrics")
-
-    metrics = {
-        r.stage: r["count"] for r in result.metrics.collect()
+    result.cluster_map.observe(
+        cm_obs, F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("is_rep").cast("long")).alias("reps"),
+    ).write.mode("overwrite").parquet(f"{out_dir}/cluster_map")
+    edges = {
+        f"edges_{r.edge_kind}": r["count"]
+        for r in result.edges.groupBy("edge_kind").count().collect()
     }
+    result.lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
+
+    # every dedupable row has one cluster_map row and every cluster one
+    # representative; each exact duplicate is one exact edge to its rep
+    surv_m, cm_m = surv_obs.get, cm_obs.get
+    survivors, dedupable, clusters = surv_m["rows"], cm_m["rows"], cm_m["reps"] or 0
+    passthrough = survivors - clusters
+    metrics = {
+        "input": dedupable + passthrough,
+        "passthrough": passthrough,
+        "dedupable": dedupable,
+        "exact_reps": dedupable - edges.get("edges_exact", 0),
+        "clusters": clusters,
+        "survivors": survivors,
+        **edges,
+        "cc_iterations": result.cc_stats["iterations"],
+    }
+    spark = result.survivors.sparkSession
+    spark.createDataFrame(
+        list(metrics.items()), "stage string, count long"
+    ).write.mode("overwrite").parquet(f"{out_dir}/metrics")
+
     manifest = {
         "written_at": time.time(),
         "config_hash": config_hash,
         "tables": ["survivors", "cluster_map", "lineage", "metrics"],
         "partition_by": partition_by,
         "metrics": metrics,
-        "sha256_invariant_violations": int(
-            result.survivors.filter(
-                F.sha2(F.col("content"), 256) != F.col("content_sha256")
-            ).count()
-        ),
+        "sha256_invariant_violations": surv_m["violations"] or 0,
     }
     with open(f"{out_dir}/manifest.json", "w") as f:
         json.dump(manifest, f, indent=2)

@@ -147,3 +147,62 @@ def test_distributed_text_sink(spark, tmp_path):
     with open(f"{ref}/E2ETestInput_1.fulle2e") as f:
         want = [l for l in f.read().split("\n") if l]
     assert got == want
+
+
+def _code_result(spark, n_rows: int):
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.plans.pipeline import run_pipeline
+
+    files = spark.createDataFrame(gen_code_corpus(n_rows).files)
+    return files, run_pipeline(spark, files, DedupConfig())
+
+
+def test_manifest_counts_planted_sha_violation(spark, tmp_path):
+    """One survivor whose content_sha256 does not match its content is
+    exactly one invariant violation in the manifest."""
+    import dataclasses
+
+    from pyspark.sql import functions as F
+
+    from dedup_domains_spark.sources.sinks import write_results
+
+    _, res = _code_result(spark, 100)
+    victim = res.survivors.agg(F.min("uid")).first()[0]
+    planted = res.survivors.withColumn(
+        "content_sha256",
+        F.when(F.col("uid") == victim, F.lit("0" * 64)).otherwise(F.col("content_sha256")),
+    )
+    manifest = write_results(dataclasses.replace(res, survivors=planted),
+                             str(tmp_path / "out"))
+    assert manifest["sha256_invariant_violations"] == 1
+
+
+def test_manifest_metrics_recompute_from_written_tables(spark, tmp_path):
+    """Every manifest metric, recomputed from the written tables (the input
+    rows for exact_reps; the result's edges for edges_*), and the on-disk
+    metrics table both equal the manifest."""
+    from dedup_domains_spark.sources.code_corpus import with_row_identity
+    from dedup_domains_spark.sources.sinks import write_results
+
+    files, res = _code_result(spark, 200)
+    out = str(tmp_path / "out")
+    manifest = write_results(res, out)
+    cmap = spark.read.parquet(f"{out}/cluster_map")
+    lineage = spark.read.parquet(f"{out}/lineage")
+    dedupable = lineage.filter("action != 'passthrough'").select("uid")
+    want = {
+        "input": lineage.count(),
+        "passthrough": lineage.filter("action = 'passthrough'").count(),
+        "dedupable": cmap.count(),
+        "exact_reps": with_row_identity(files).join(dedupable, "uid")
+        .select("content_sha256").distinct().count(),
+        "clusters": cmap.select("cluster_id").distinct().count(),
+        "survivors": spark.read.parquet(f"{out}/survivors").count(),
+        **{f"edges_{r.edge_kind}": r["count"]
+           for r in res.edges.groupBy("edge_kind").count().collect()},
+        "cc_iterations": res.cc_stats["iterations"],
+    }
+    assert manifest["metrics"] == want
+    assert want["input"] == 200 and want["edges_exact"] > 0
+    on_disk = {r.stage: r["count"] for r in spark.read.parquet(f"{out}/metrics").collect()}
+    assert on_disk == manifest["metrics"]

@@ -105,6 +105,25 @@ def test_checkpoint_resume(spark, tmp_path):
     assert s1 == s2
 
 
+def test_checkpoint_resume_sees_in_place_overwrite(spark, tmp_path):
+    """Overwriting the input parquet in place with different rows must not
+    resume the stage tables computed for the old rows."""
+    src, d = str(tmp_path / "corpus.parquet"), str(tmp_path / "ckpt")
+    cfg = DedupConfig()
+
+    def survivors(**kw):
+        res = run_pipeline(spark, spark.read.parquet(src), cfg, **kw)
+        return {(r.uid, r.content_sha256) for r in
+                res.survivors.select("uid", "content_sha256").collect()}
+
+    gen_code_corpus(100).files.to_parquet(src)
+    old = survivors(checkpoint_dir=d)
+    gen_code_corpus(60, seed=7).files.to_parquet(src)
+    rerun = survivors(checkpoint_dir=d)
+    assert rerun == survivors()
+    assert rerun != old
+
+
 def test_suffix_verify_pipeline_matches_scan(spark):
     """containment_verify='suffix_array' must yield the same survivor set as
     the default scan verify — the two verify paths are interchangeable."""

@@ -152,8 +152,9 @@ def test_pipeline_job_budget(spark):
     corpus-size-dependent — so the budget is iteration-aware: BASE covers
     everything outside the loop (22 measured post-diet:
     identity/exact/signature-materialization — the probe collection
-    doubling as the sig materializer — the CC labels-init scan that
-    doubles as the edges materializer, election, survivors, cluster_map)
+    doubling as the sig materializer — the CC contracted-edge count that
+    doubles as the edges materializer and its driver collect, election,
+    survivors, cluster_map)
     plus 1 x cc_iterations, plus 2 headroom for Spark scheduling
     differences. If this fails after an intentional change, re-measure and
     move BASE WITH a BENCH.md note."""
@@ -171,11 +172,7 @@ def test_pipeline_job_budget(spark):
     finally:
         sc._jsc.clearJobGroup()
     jobs = sc.statusTracker().getJobIdsForGroup("pipeline-job-budget")
-    # metrics.collect() runs OUTSIDE the job group — reading the iteration
-    # count must not inflate the number it calibrates
-    cc_iters = {r["stage"]: r["count"] for r in res.metrics.collect()}[
-        "cc_iterations"
-    ]
+    cc_iters = res.cc_stats["iterations"]
     budget = 22 + cc_iters + 2
     assert 0 < len(jobs) <= budget, (
         f"pipeline ran {len(jobs)} jobs at cc_iterations={cc_iters} — "

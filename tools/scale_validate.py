@@ -158,8 +158,7 @@ def main() -> None:
         },
         "pairs_checked": tot_n, "pairs_planted": n_pairs,
         "sha_violations": sha_violations,
-        "cc_iterations": res.metrics_dict.get("cc_iterations")
-        if hasattr(res, "metrics_dict") else None,
+        "cc_iterations": res.cc_stats["iterations"],
         "mode": f"local-cluster[{args.workers},{args.cores}] "
                 f"broadcast_probes={args.broadcast_probes} "
                 f"shuffle_partitions={shuffle}",
