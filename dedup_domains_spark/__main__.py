@@ -47,9 +47,6 @@ def main(argv: list[str] | None = None) -> int:
                     default="scan",
                     help="substring verify strategy: per-pair scan or "
                          "per-container suffix array")
-    pc.add_argument("--shuffle-probes", action="store_true",
-                    help="shuffle-join the containment probe table instead "
-                         "of broadcasting it (the >10^6-doc regime)")
     _add_spark_args(pc)
 
     pd_ = sub.add_parser("dnsbl", help="reference-parity domain mode")
@@ -107,7 +104,6 @@ def main(argv: list[str] | None = None) -> int:
             jaccard_threshold=args.jaccard,
             use_exact_jaccard=args.exact_jaccard,
             containment_verify=args.containment_verify,
-            containment_broadcast_probes=not args.shuffle_probes,
         )
         corpus = load_code_corpus(spark, args.input)
         res = run_pipeline(

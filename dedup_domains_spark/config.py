@@ -39,7 +39,7 @@ class DedupConfig:
 
     # --- containment (parent-domain subsumption analog, D2) ---
     containment_probe_shingles: int = 8    # bottom-s sketch probes per doc
-    containment_max_doc_freq: int = 1000   # drop inverted-index postings above this DF
+    containment_max_doc_freq: int = 1000   # keep postings whose DF is at most this
     min_containee_tokens: int = 32         # don't bother subsuming tiny docs
     # verify strategy for candidate (containee, container) pairs:
     #   "scan"         — independent C-level substring scan per pair
@@ -47,13 +47,6 @@ class DedupConfig:
     #                    containee (wins when many candidates share a
     #                    container, e.g. boilerplate/license carriers)
     containment_verify: str = "scan"
-    # probe-table placement for the containment inverted-index join:
-    # True broadcasts the (docs x s x 16B) probe table so the corpus shingle
-    # mass never shuffles — right up to ~10^6 docs per job; False degrades
-    # to a shuffle join (AQE skew-split) for corpora whose probe table
-    # exceeds broadcast size. BENCH.md (960k-row validation) quantifies the
-    # crossover.
-    containment_broadcast_probes: bool = True
 
     # --- skew / partitioning ---
     max_bucket_size: int = 64          # LSH bucket cap before salting splits it

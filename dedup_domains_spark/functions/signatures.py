@@ -342,8 +342,8 @@ def explode_shingles_udf(cfg: DedupConfig, keep_only: np.ndarray | None = None):
     keep_only: optional sorted int64 array (the distinct containment-probe
     shingles); when given, only matching hashes are emitted, shrinking the
     posting mass executor-side before any shuffle. The array ships in the
-    UDF closure — valid exactly in the broadcast-probes regime where the
-    probe set is driver-sized by definition."""
+    UDF closure — the broadcast regime, where the probe set is
+    driver-sized by definition (operators/containment.collect_probe_filter)."""
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf(ArrayType(LongType()))

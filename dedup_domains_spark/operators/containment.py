@@ -19,14 +19,15 @@ LSH can't find containment: if small A is embedded in large B, Jaccard(A,B)
 
 At 100 TB the postings explode is the big cost: it's linear in corpus
 shingle mass, shuffles (shingle_hash, uid) longs only, and the DF cap is
-applied *before* the join (aggregate + semi-join), which also removes skew
-from the join key.
+applied *before* the join as a count window on the shingle key, which
+removes skew from the join key (a boilerplate shingle's postings still
+meet in one window task before the cap drops them).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
@@ -34,74 +35,66 @@ from dedup_domains_spark.config import DedupConfig
 from dedup_domains_spark.functions.signatures import explode_shingles_udf
 
 
-# Hard ceiling on the collected probe-filter set: ~30M int64s ≈ 240 MB on
-# the driver plus one broadcast copy per executor. Above this the broadcast
-# regime is the wrong tool — fail loudly (VERDICT r05 nit 2) instead of
-# letting toPandas OOM the driver.
-MAX_PROBE_FILTER_ROWS = 30_000_000
+# Regime switch, read off the distinct probe count collect_probe_filter
+# takes anyway. Up to this many distinct probes the set is collected (about
+# 240 MB of int64 on the driver, one copy per executor in the explode
+# closure) and the broadcast regime runs; past it the shuffle-join regime
+# runs. It is the driver-safety ceiling the broadcast regime always had, so
+# every corpus that broadcast before still does, and the shuffle regime
+# takes only corpora the broadcast regime could not hold. Where the two
+# regimes cross is not measured: BENCH.md's one 960k-doc comparison
+# (shuffle 659.8 s vs broadcast 682.5 s) predates the DF-cap window.
+SHUFFLE_ABOVE_PROBES = 30_000_000
+
+_COLLECT = object()  # containment_candidates collects the probe filter itself
 
 
 def collect_probe_filter(sig_df: DataFrame, cfg: DedupConfig):
-    """The distinct probe-shingle set as a sorted int64 numpy array — pushed
-    into the posting explode so executors emit only postings that can ever
-    match a probe (driver-sized by definition in the broadcast regime).
+    """The distinct probe-shingle set as a sorted int64 numpy array, or None
+    when it holds more than SHUFFLE_ABOVE_PROBES shingles (shuffle regime).
 
-    This collection SCANS every partition of sig_df (the containee filter
-    sits above the scan), so when sig_df is an unpopulated cache the call
-    doubles as its materializing action — run_pipeline exploits that to fuse
-    its sig_df.count() barrier with this collection into one job.
-
-    Guarded: collects at most MAX_PROBE_FILTER_ROWS + 1 rows (the limit
-    returns the complete set whenever it is under the cap) and raises with
-    a use-the-shuffle-regime message when the cap is hit, so a misconfigured
-    caller fails loudly instead of OOMing the driver."""
+    The array selects the broadcast regime: it ships in the posting explode
+    so executors emit only postings that can ever match a probe, and the
+    probe table broadcasts. The collection scans every partition of sig_df
+    (the distinct's partial aggregate sits below the limit), so when sig_df
+    is an unpopulated cache the call doubles as its materializing action —
+    run_pipeline relies on that for its one sig_df barrier."""
     import numpy as np
 
     probe_rows = (
         sig_df.filter(F.col("n_tokens") >= cfg.min_containee_tokens)
         .select(F.explode("probes").alias("s")).distinct()
-        .limit(MAX_PROBE_FILTER_ROWS + 1).toPandas()
+        .limit(SHUFFLE_ABOVE_PROBES + 1).toPandas()
     )
-    if len(probe_rows) > MAX_PROBE_FILTER_ROWS:
-        raise RuntimeError(
-            f"containment probe-filter set exceeds {MAX_PROBE_FILTER_ROWS} "
-            f"distinct shingles — the broadcast-probes regime would OOM the "
-            f"driver; run with containment_broadcast_probes=False (shuffle "
-            f"join regime) for corpora this large"
-        )
+    if len(probe_rows) > SHUFFLE_ABOVE_PROBES:
+        return None
     return np.sort(probe_rows["s"].to_numpy(dtype=np.int64))
 
 
 def containment_candidates(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
-    broadcast_probes: bool = True, repartition: int | None = None,
-    spill: list | None = None, probe_filter=None,
+    repartition: int | None = None, probe_filter=_COLLECT,
 ) -> DataFrame:
-    """Candidate (containee, container) pairs: every probe of the containee
-    appears in the container's shingle set and the container is larger.
+    """Candidate (containee, container) pairs: every surviving probe of the
+    containee appears in the container's shingle set and the container is
+    larger.
 
     df carries (uid, content); sig_df carries (uid, n_tokens, n_shingles,
-    probes). Postings are derived map-side from content (explode UDF) and
-    flow straight into the join — never materialized, never cached (caching
-    the full shingle mass costs more in heap pressure than one extra
-    tokenize pass, see signatures.py).
+    probes). ``probe_filter`` is collect_probe_filter's result when the
+    caller already holds it; by default it is collected here. Postings are
+    derived map-side from content (explode UDF) and consumed once: the
+    DF-cap window and the probe join sit on the same partitioning by
+    shingle, so the UDF runs in one pass with no persist or checkpoint.
 
-    Join shape: postings (corpus shingle mass, the huge side) stay where they
-    are; the probe table (docs x s rows of 16 bytes) broadcasts, so the big
-    side is never shuffled. With ``broadcast_probes=False`` (probe side too
-    large to broadcast, e.g. >10^8 docs) it degrades to a shuffle join that
-    AQE skew-splits.
-
-    Cache lifecycle (VERDICT r03): the postings DISK_ONLY persist feeds two
-    consumers (DF-cap aggregation + probe join) and would otherwise be
-    retained until the ContextCleaner ran — one call per session is fine, a
-    recurring incremental loop accumulates spilled blocks. The pipeline
-    passes ``spill``: a list the postings cache handle is appended to, for
-    the caller to unpersist once its own materializing action has run, so
-    the containment branch still runs concurrently with whatever else the
-    caller computes in the same job. Without it, the caller owns the
-    lifecycle (clearCache after materializing).
+    Join shape: with a probe filter the probe table broadcasts and the
+    pruned postings shuffle once, for the window. Without one (shuffle
+    regime) the full postings shuffle for the window and the sort-merge
+    probe join reuses that exchange on shingle.
     """
+    if probe_filter is _COLLECT:
+        probe_filter = collect_probe_filter(sig_df, cfg)
+    broadcast = probe_filter is not None
+
     # explicit fan-out before the tokenizing UDF — same rationale as
     # signatures.add_signatures: AQE would coalesce the small projection and
     # serialize the compute-bound stage onto a few cores. Pass
@@ -112,88 +105,37 @@ def containment_candidates(
         df.sparkSession.sparkContext.defaultParallelism * 2
         if repartition is None else repartition
     )
-
-    # In the broadcast-probes regime the distinct probe-shingle set is by
-    # definition driver-sized (it gets broadcast anyway) — push it INTO the
-    # posting explode so executors emit only postings that can ever match a
-    # probe. The corpus shingle mass (~500/doc) shrinks to the probe-hit
-    # subset (~10-30x fewer rows) before it touches a shuffle; DF counts on
-    # the filtered postings are still exact for every surviving shingle,
-    # because a shingle in the probe set keeps ALL its postings. The
-    # shuffle-join path (broadcast_probes=False, >10^8 docs) keeps the full
-    # explode.
-    if probe_filter is None and broadcast_probes:
-        probe_filter = collect_probe_filter(sig_df, cfg)
-    elif not broadcast_probes:
-        probe_filter = None
-
     src = df.select(id_col, "content")
     if fanout:
         src = src.repartition(fanout)
+    # With a probe filter the corpus shingle mass (~500/doc) shrinks to the
+    # probe-hit subset (~10-30x fewer rows) before it touches a shuffle; DF
+    # counts stay exact for every surviving shingle, because a shingle in
+    # the probe set keeps ALL its postings.
     postings = src.select(
         F.col(id_col).alias("big_id"),
         F.explode(
             explode_shingles_udf(cfg, keep_only=probe_filter)(F.col("content"))
         ).alias("shingle"),
     )
-    # The DF-cap aggregation and the probe join both consume postings —
-    # unprotected, the tokenize UDF runs once per consumer (and the
-    # broadcast-build jobs in between re-run it again). Protection choices
-    # (measured r06, same-window A/Bs):
-    # * shuffle regime (full corpus shingle mass): DISK_ONLY persist —
-    #   off-heap of the block cache, explicitly released (unchanged).
-    # * broadcast regime, pipeline caller (spill list given): DISK_ONLY
-    #   persist when the probe set says the corpus is big enough that a
-    #   re-pass beats persist machinery (~200k probes ≈ 25k docs: at 240k
-    #   docs persist wins 7 s vs 11-14 s, at 5k docs it loses ~1.5 s) —
-    #   keeps the pipeline's explicit release lifecycle.
-    # * broadcast regime, standalone query: LAZY localCheckpoint — the
-    #   frequent-set broadcast build is the materializing job and every
-    #   later consumer reads blocks; one UDF pass at every size with no
-    #   persist machinery (3.7 -> 3.1 s at sf0.1). Blocks are pruned
-    #   postings only and are freed by the ContextCleaner.
-    # The lazy checkpoint is for STANDALONE callers only: inside the
-    # pipeline's fused job (spill list given) the containment branch runs
-    # concurrently with candidates/verify, and a lazily-checkpointed RDD
-    # raced by the frequent-set broadcast build and the main stages is
-    # computed redundantly under contention (measured r06: pipeline query
-    # 4.9 -> 9.1 s with the checkpoint in the fused job) — there the
-    # pruned re-pass (small corpora) or the explicit DISK_ONLY spill
-    # (large) stays the right tool.
-    postings_cache = None
-    if not broadcast_probes or (
-        spill is not None
-        and probe_filter is not None and len(probe_filter) > 200_000
-    ):
-        from pyspark.storagelevel import StorageLevel
-
-        postings_cache = postings.persist(StorageLevel.DISK_ONLY)
-        postings = postings_cache
-    elif broadcast_probes and spill is None:
-        postings = postings.localCheckpoint(eager=False)
-
-    # document-frequency cap: the FREQUENT set is tiny (boilerplate shingles)
-    # — broadcast anti-join instead of re-shuffling the postings
-    frequent = (
-        postings.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > cfg.containment_max_doc_freq)
-        .select("shingle")
+    # document-frequency cap: boilerplate shingles carry no containment
+    # signal and would otherwise be the join's mega-bucket. A window, not an
+    # aggregate plus anti-join, so the postings are read once.
+    postings = (
+        postings.withColumn(
+            "_df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+        )
+        .filter(F.col("_df") <= cfg.containment_max_doc_freq)
+        .drop("_df")
     )
-    postings = postings.join(F.broadcast(frequent), "shingle", "leftanti")
 
     # probe symmetry (ADVICE r01): frequent shingles carry no containment
-    # signal on EITHER side. A containee whose bottom-s probes include a
-    # boilerplate shingle could never hit all s postings (they were capped
-    # away), so the full-house test must count only the SURVIVING probes.
-    # r06 restructure: the probe table itself needs NO frequent anti-join
-    # and NO n_probes window — every probe of a doc is one of its own
-    # shingles, so the doc's SELF-row (small_id == big_id) survives the
-    # posting join exactly once per surviving probe, and its _hits count IS
-    # n_probes. The old shape paid an extra Exchange (window over small_id)
-    # + an anti-join for a number the join already knew. Floor-1 semantics
-    # are preserved: a doc whose every probe is boilerplate has no self-row
-    # and is skipped, as before.
+    # signal on EITHER side, so the full-house test counts only the
+    # SURVIVING probes. Every probe of a doc is one of its own shingles, so
+    # the doc's SELF-row (small_id == big_id) survives the posting join
+    # exactly once per surviving probe, and its _hits count IS n_probes. A
+    # doc whose every probe is boilerplate has no self-row (n_probes null)
+    # and is skipped.
     probes = (
         sig_df.filter(F.col("n_tokens") >= cfg.min_containee_tokens)
         .select(
@@ -202,40 +144,29 @@ def containment_candidates(
             F.explode("probes").alias("shingle"),
         )
     )
-
     sizes = sig_df.select(F.col(id_col).alias("big_id"), F.col("n_shingles").alias("big_sh"))
 
-    probe_side = F.broadcast(probes) if broadcast_probes else probes
-    try:
-        counts = (
-            postings.join(probe_side, "shingle")
-            .groupBy("small_id", "big_id", "small_sh")
-            .agg(F.count(F.lit(1)).alias("_hits"))
-        )
-        # n_probes from the self-rows; both branches sit above the SAME
-        # groupBy Exchange, so the shuffle is computed once and reused.
-        # Broadcast only in the broadcast regime — n_probes is one row per
-        # containee, driver-sized exactly when the probe table is.
-        n_probes = (
-            counts.filter(F.col("small_id") == F.col("big_id"))
-            .select("small_id", F.col("_hits").alias("n_probes"))
-        )
-        n_probes_side = F.broadcast(n_probes) if broadcast_probes else n_probes
-        hits = (
-            counts.filter(F.col("small_id") != F.col("big_id"))
-            .join(n_probes_side, "small_id")
-            .filter(F.col("_hits") == F.col("n_probes"))
-            .join(sizes, "big_id")
-            .filter(F.col("big_sh") > F.col("small_sh"))
-            .select("small_id", "big_id")
-        )
-        if postings_cache is not None and spill is not None:
-            spill.append(postings_cache)
-        return hits
-    except Exception:
-        if postings_cache is not None:
-            postings_cache.unpersist()
-        raise
+    probe_side = F.broadcast(probes) if broadcast else probes.hint("shuffle_merge")
+    counts = (
+        postings.join(probe_side, "shingle")
+        .groupBy("small_id", "big_id", "small_sh")
+        .agg(F.count(F.lit(1)).alias("_hits"))
+    )
+    # n_probes reaches every row of its containee through a window on
+    # small_id, not a self-join of counts: the id test then stays above the
+    # aggregate, so the posting join and its aggregate run once. A
+    # containee's rows are at most n_probes * max_doc_freq.
+    n_probes = F.max(
+        F.when(F.col("small_id") == F.col("big_id"), F.col("_hits"))
+    ).over(Window.partitionBy("small_id"))
+    return (
+        counts.withColumn("n_probes", n_probes)
+        .filter((F.col("small_id") != F.col("big_id"))
+                & (F.col("_hits") == F.col("n_probes")))
+        .join(sizes, "big_id")
+        .filter(F.col("big_sh") > F.col("small_sh"))
+        .select("small_id", "big_id")
+    )
 
 
 def join_pair_contents(
@@ -271,19 +202,14 @@ def verify_containment(
 
 def contained_pairs(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
-    repartition: int | None = None,
-    spill: list | None = None, probe_filter=None,
+    repartition: int | None = None, probe_filter=_COLLECT,
 ) -> DataFrame:
     """(small_id, big_id) verified exact-substring containment pairs.
-
-    ``spill`` hands the postings spill to the caller to release (see
-    containment_candidates). ``probe_filter`` skips
-    the internal probe collection when the caller already holds the set
-    (run_pipeline fuses it with its sig materializer barrier)."""
+    ``probe_filter`` skips the internal probe collection when the caller
+    already holds its result (run_pipeline fuses it with its sig_df
+    materializer barrier)."""
     cand = containment_candidates(
-        df, sig_df, cfg, id_col,
-        broadcast_probes=cfg.containment_broadcast_probes,
-        repartition=repartition, spill=spill,
+        df, sig_df, cfg, id_col, repartition=repartition,
         probe_filter=probe_filter,
     )
     return verify_containment(cand, df, id_col)

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
+from dedup_domains_spark.operators.containment import _COLLECT
+
 
 def build_suffix_array(data: bytes) -> np.ndarray:
     """Suffix array of ``data`` (indices of suffixes in lexicographic order),
@@ -165,15 +167,17 @@ def suffix_verify_containment(
 
 
 def suffix_contained_pairs(
-    df: DataFrame, sig_df: DataFrame, cfg, id_col: str = "uid"
+    df: DataFrame, sig_df: DataFrame, cfg, id_col: str = "uid",
+    repartition: int | None = None, probe_filter=_COLLECT,
 ) -> DataFrame:
     """Probe-index candidates (operators/containment.containment_candidates)
     verified by per-container suffix arrays: the full D2-analog containment
-    operator with the suffix-array verify path."""
+    operator with the suffix-array verify path. ``repartition`` and
+    ``probe_filter`` mean what they mean for contained_pairs."""
     from dedup_domains_spark.operators.containment import containment_candidates
 
     cand = containment_candidates(
-        df, sig_df, cfg, id_col,
-        broadcast_probes=cfg.containment_broadcast_probes,
+        df, sig_df, cfg, id_col, repartition=repartition,
+        probe_filter=probe_filter,
     )
     return suffix_verify_containment(cand, df, id_col)

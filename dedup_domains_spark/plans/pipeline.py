@@ -7,9 +7,10 @@ reference's single pass (main.c:110-183):
   survivors + cluster map + lineage + metrics.
 
 Scale shape:
-  * ``content`` is touched by exactly three stages (signature UDF, exact
-    containment verify, final survivor join); every wide shuffle carries
-    (uid, hashes, signature) only — SURVEY.md §4's shuffle-volume rule.
+  * ``content`` is touched by exactly four stages (signature UDF,
+    containment postings explode, exact containment verify, final survivor
+    join); every wide shuffle carries (uid, hashes, signature) only —
+    SURVEY.md §4's shuffle-volume rule.
   * near-dup stages run on exact-dedup representatives, not raw rows: at
     web scale exact dups are the bulk of the mass and collapse first
     (reference rule D1 runs before everything else for the same reason).
@@ -43,6 +44,7 @@ from dedup_domains_spark.operators.containment import contained_pairs
 from dedup_domains_spark.operators.exact_dedup import exact_dedup
 from dedup_domains_spark.operators.lsh import fused_candidate_pairs
 from dedup_domains_spark.operators.representative import elect_representatives
+from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
 from dedup_domains_spark.operators.verify import verify_pairs_estimate, verify_pairs_exact
 from dedup_domains_spark.functions.signatures import add_signatures
 from dedup_domains_spark.plans.checkpoint import CheckpointContext, input_fingerprint
@@ -159,16 +161,12 @@ def _build_pipeline(
     sig_df = ckpt.stage(sig_df, "signatures").cache()
     # eager: four consumers fan out from sig_df (bands, blocks, verify twice,
     # containment probes) — materialize once, linearly, before they race.
-    # When the containment scan path will need the probe set anyway, its
-    # collection IS the materializing action (it scans every sig_df
-    # partition, collect_probe_filter) — one driver barrier instead of two.
-    probe_filter = None
-    if cfg.containment_verify == "scan" and cfg.containment_broadcast_probes:
-        from dedup_domains_spark.operators.containment import collect_probe_filter
+    # The containment probe collection IS the materializing action (it scans
+    # every sig_df partition) — one driver barrier instead of two. Imported
+    # here, at call time, so a traced run can wrap it in its own module.
+    from dedup_domains_spark.operators.containment import collect_probe_filter
 
-        probe_filter = collect_probe_filter(sig_df, cfg)
-    else:
-        sig_df.count()
+    probe_filter = collect_probe_filter(sig_df, cfg)
 
     # ---- candidate generation: fused LSH bands ∪ SimHash blocks ----
     candidates = fused_candidate_pairs(sig_df, cfg)
@@ -182,23 +180,14 @@ def _build_pipeline(
     near = ckpt.stage(near.select("id_a", "id_b"), "near_pairs")
 
     # ---- D2 analog: exact-substring containment ----
-    spill_caches: list = []  # interim persists released after CC-init runs
-    if cfg.containment_verify == "suffix_array":
-        from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
-
-        contained = suffix_contained_pairs(exact_reps, sig_df, cfg)
-    else:
-        # repartition=0: exact_reps is already balanced (repartitioned at
-        # creation above) — skip the operator's defensive content shuffle.
-        # spill hand-off: the postings DISK_ONLY cache is released right
-        # after CC's init job materializes the edge DAG (VERDICT r03 item 4)
-        # — NOT via eager mode, which would materialize the containment
-        # branch synchronously and forfeit its concurrency with the
-        # candidates/verify stages inside that job (measured 42 -> 81 s at
-        # 240k rows when serialized).
-        contained = contained_pairs(exact_reps, sig_df, cfg, repartition=0,
-                                    spill=spill_caches,
-                                    probe_filter=probe_filter)
+    # repartition=0: exact_reps is already balanced (repartitioned at
+    # creation above) — skip the operator's defensive content shuffle.
+    pairs_fn = (
+        suffix_contained_pairs if cfg.containment_verify == "suffix_array"
+        else contained_pairs
+    )
+    contained = pairs_fn(exact_reps, sig_df, cfg, repartition=0,
+                         probe_filter=probe_filter)
     contained = ckpt.stage(contained, "contained_pairs").cache()
 
     # ---- edge union: near + containment + exact-dup membership ----
@@ -224,16 +213,10 @@ def _build_pipeline(
 
     # ---- connected components + singleton backfill ----
     cc_stats: dict = {}
-    try:
-        labels = connected_components(
-            edges.select("id_a", "id_b"), max_iterations=cfg.cc_max_iterations,
-            stats=cc_stats, durable=checkpoint_dir is not None,
-        )
-    finally:
-        # CC's first job has materialized the full edge DAG (contained is
-        # cached now) — the containment postings spill is no longer reachable
-        for c in spill_caches:
-            c.unpersist()
+    labels = connected_components(
+        edges.select("id_a", "id_b"), max_iterations=cfg.cc_max_iterations,
+        stats=cc_stats, durable=checkpoint_dir is not None,
+    )
     singletons = (
         dedupable.select("uid")
         .join(labels.select("uid"), "uid", "leftanti")

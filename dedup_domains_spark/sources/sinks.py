@@ -57,45 +57,45 @@ def write_survivor_text_files(
     RENAMES each part to ``<base><out_ext>`` (reference naming,
     pfb_prune.c outputfilename / pfb_dnsbl_prune.py:331-333) and creates
     empty outputs for feeds with no survivors. No row ever passes through
-    the driver. Returns the survivor line count.
+    the driver. Returns the survivor line count, observed during the write.
     """
     import shutil
 
     os.makedirs(out_dir, exist_ok=True)
     tmp = os.path.join(out_dir, "._dnsbl_text_tmp")
+    lines = Observation("dnsbl_text")
     sel = (
         survivors.select("file_order", *order_cols,
                          F.col("raw_line").alias("value"))
         .repartition("file_order")
         .sortWithinPartitions("file_order", *order_cols)
+        # observed after the shuffle, where tasks run even for an empty
+        # input (on the map side, an all-empty input left it unset)
+        .observe(lines, F.count(F.lit(1)).alias("rows"))
         .select("file_order", "value")
     )
     sel.write.mode("overwrite").partitionBy("file_order").text(tmp)
 
-    total = 0
     for order, src in enumerate(inputs):
         base = os.path.splitext(os.path.basename(src))[0]
         dest = os.path.join(out_dir, base + out_ext)
         part_dir = os.path.join(tmp, f"file_order={order}")
         parts = (
-            sorted(
-                os.path.join(part_dir, f)
-                for f in os.listdir(part_dir)
-                if f.startswith("part-")
-            )
-            if os.path.isdir(part_dir)
-            else []
+            [f for f in os.listdir(part_dir) if f.startswith("part-")]
+            if os.path.isdir(part_dir) else []
         )
-        # repartition("file_order") puts a key in exactly one task, so one
-        # part per feed; the loop tolerates a multi-part layout anyway
-        with open(dest, "wb") as out:
-            for p in parts:
-                with open(p, "rb") as f:
-                    data = f.read()
-                total += data.count(b"\n")
-                out.write(data)
+        # repartition("file_order") puts a key in exactly one task, and no
+        # maxRecordsPerFile is set, so a feed has at most one part
+        if len(parts) > 1:
+            raise RuntimeError(
+                f"feed {src} was written as {len(parts)} parts, expected one"
+            )
+        if parts:
+            os.replace(os.path.join(part_dir, parts[0]), dest)
+        else:
+            open(dest, "wb").close()
     shutil.rmtree(tmp, ignore_errors=True)
-    return total
+    return lines.get["rows"]
 
 
 def write_results(

@@ -149,6 +149,33 @@ def test_distributed_text_sink(spark, tmp_path):
     assert got == want
 
 
+def test_dnsbl_text_sink_renames_parts_and_observes_count(spark, tmp_path):
+    """write_survivor_text_files moves each feed's one part into place,
+    writes empty outputs for feeds without survivors, and returns the line
+    count observed during the write — also when no feed has a survivor."""
+    from dedup_domains_spark.operators.domain_mode import dedup_dnsbl
+    from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
+    from dedup_domains_spark.sources.sinks import write_survivor_text_files
+
+    rows = [",a.example.com,,0,list,group,1", ",b.example.com,,0,list,group,1"]
+    feeds = {"a.fat": rows, "b.fat": rows[:1], "c.fat": []}
+    for name, lines in feeds.items():
+        (tmp_path / name).write_text("".join(l + "\n" for l in lines))
+    paths = [str(tmp_path / n) for n in feeds]
+
+    def sink(inputs, out):
+        res = dedup_dnsbl(load_dnsbl_files(spark, inputs))
+        return write_survivor_text_files(res.survivors, inputs, str(out), ".pruned")
+
+    assert sink(paths, tmp_path / "out") == 2
+    assert (tmp_path / "out/a.pruned").read_text().splitlines() == rows
+    assert (tmp_path / "out/b.pruned").read_text() == ""
+    assert (tmp_path / "out/c.pruned").read_text() == ""
+    assert sorted(os.listdir(tmp_path / "out")) == ["a.pruned", "b.pruned", "c.pruned"]
+    assert sink(paths[2:], tmp_path / "empty") == 0
+    assert (tmp_path / "empty/c.pruned").read_text() == ""
+
+
 def _code_result(spark, n_rows: int):
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.plans.pipeline import run_pipeline

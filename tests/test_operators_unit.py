@@ -228,24 +228,107 @@ def test_bloom_prefilter_anti_join_is_exact(spark):
     assert got == list(range(300, 500))
 
 
-def test_probe_filter_collection_fails_loudly_past_cap(spark, monkeypatch):
-    """collect_probe_filter must raise (pointing at the shuffle regime)
-    instead of OOMing the driver when the distinct probe set exceeds the
-    broadcast-regime ceiling (VERDICT r05 nit 2)."""
-    import pytest
-    from pyspark.sql import functions as F
-    from dedup_domains_spark import operators
-    from dedup_domains_spark.config import DedupConfig
+def _containment_docs(spark):
+    """Docs around two shared 40-token blocks, with cap 3: X sits in exactly
+    3 docs (its shingles' DF == cap) and Y in 5 (DF > cap). The X and Y docs
+    are containees of their wrappers; G = Y + W is contained in H and shares
+    W with I."""
+    from itertools import count
+
+    ids = count()
+
+    def words(n):
+        return [f"t{next(ids)}" for _ in range(n)]
+
+    X, Y, W = words(40), words(40), words(40)
+    texts = [X, *[words(5) + X + words(5) for _ in range(2)],
+             Y, *[words(5) + Y + words(5) for _ in range(4)],
+             Y + W, words(5) + Y + W + words(5), words(5) + W + words(5),
+             *[words(60) for _ in range(5)]]
+    return spark.createDataFrame(
+        pd.DataFrame({"uid": range(len(texts)),
+                      "content": [" ".join(t) for t in texts]})
+    )
+
+
+@pytest.mark.parametrize("regime", ["broadcast", "shuffle"])
+def test_containment_df_cap_matches_python_twin(spark, monkeypatch, regime):
+    """containment_candidates against a pure-Python twin of its rule:
+    postings with DF above containment_max_doc_freq are dropped, and a
+    containee needs every surviving probe in a larger container. The corpus
+    makes the twin differ when the cap is removed or written as ``<``."""
+    from dedup_domains_spark.functions.signatures import (
+        add_signatures, explode_shingles_udf,
+    )
+    from dedup_domains_spark.operators import containment
+
+    if regime == "shuffle":
+        monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 0)
+    cfg = DedupConfig(containment_max_doc_freq=3)
+    docs = _containment_docs(spark)
+    sig = add_signatures(docs, cfg, probes_only=True, repartition=4).localCheckpoint()
+    got = {(r.small_id, r.big_id)
+           for r in containment.containment_candidates(docs, sig, cfg).collect()}
+
+    rows = {r.uid: r for r in sig.collect()}
+    shingles = {
+        r.uid: set(r.sh) for r in docs.select(
+            "uid", explode_shingles_udf(cfg)(F.col("content")).alias("sh")
+        ).collect()
+    }
+    df = {}
+    for sh in shingles.values():
+        for s in sh:
+            df[s] = df.get(s, 0) + 1
+
+    def twin(keep):
+        out = set()
+        for a, ra in rows.items():
+            if ra.n_tokens < cfg.min_containee_tokens:
+                continue
+            probes = {p for p in ra.probes if keep(df[p])}
+            out |= {(a, b) for b, rb in rows.items()
+                    if probes and b != a and probes <= shingles[b]
+                    and rb.n_shingles > ra.n_shingles}
+        return out
+
+    cap = cfg.containment_max_doc_freq
+    want = twin(lambda d: d <= cap)
+    assert want != twin(lambda d: True)            # the cap matters here
+    assert want != twin(lambda d: d < cap)         # and so does "<="
+    assert got == want
+
+
+def test_containment_regime_switch_plans_shuffle_join(spark, monkeypatch):
+    """Past SHUFFLE_ABOVE_PROBES distinct probes, contained_pairs plans a
+    shuffle join on shingle (no probe-side BroadcastHashJoin) and returns
+    the same pairs as the broadcast regime. Either regime joins postings
+    to probes once."""
+    import re
+
     from dedup_domains_spark.functions.signatures import add_signatures
     from dedup_domains_spark.operators import containment
 
-    docs = spark.range(0, 50).select(
-        F.col("id").alias("uid"),
-        F.concat_ws(
-            " ", *[F.concat(F.lit(f"w{i}x"), F.col("id")) for i in range(40)]
-        ).alias("content"),
-    )
-    sig = add_signatures(docs, DedupConfig(), probes_only=True, repartition=4)
-    monkeypatch.setattr(containment, "MAX_PROBE_FILTER_ROWS", 10)
-    with pytest.raises(RuntimeError, match="broadcast-probes regime"):
-        containment.collect_probe_filter(sig, DedupConfig())
+    def shingle_joins(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        return [b.split("\n", 1)[0] for b in plan.split("\n\n")
+                if re.search(r"Left keys \[\d+\]: \[[^]]*\bshingle#", b)]
+
+    cfg = DedupConfig(min_containee_tokens=8)
+    docs = _containment_docs(spark)
+    sig = add_signatures(docs, cfg, probes_only=True, repartition=4).localCheckpoint()
+    broadcast = containment.contained_pairs(docs, sig, cfg)
+    joins = shingle_joins(broadcast)
+    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], joins
+    monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 10)
+    assert containment.collect_probe_filter(sig, cfg) is None
+    shuffled = containment.contained_pairs(docs, sig, cfg)
+    joins = shingle_joins(shuffled)
+    assert len(joins) == 1 and "SortMergeJoin" in joins[0], joins
+
+    def pairs(df):
+        return {(r.small_id, r.big_id) for r in df.collect()}
+
+    want = pairs(broadcast)
+    assert want and pairs(shuffled) == want

@@ -77,9 +77,34 @@ def test_containment_probe_side_broadcasts(spark):
     sig = add_signatures(df.select("uid", "content"), cfg)
     cand = containment_candidates(df, sig, cfg)
     plan = _formatted(cand)
-    # probes broadcast; postings (the huge side) must not appear under an
-    # Exchange hashpartitioning on 'shingle'
+    # probes broadcast to the postings (the huge side)
     assert "BroadcastHashJoin" in plan, plan
+
+
+def test_containment_postings_read_in_one_udf_pass(spark):
+    """The DF-cap window and the probe join consume the postings once: the
+    containment_candidates plan (AQE off, as run_pipeline runs it) holds
+    exactly one ArrowEvalPython node — the postings explode — and no cached
+    relation."""
+    import re
+
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.functions.signatures import add_signatures
+    from dedup_domains_spark.operators.containment import containment_candidates
+
+    cfg = DedupConfig()
+    df = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").alias("uid"), F.col("text").alias("content")
+    )
+    sig = add_signatures(df, cfg, probes_only=True).localCheckpoint()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = _formatted(containment_candidates(df, sig, cfg))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
@@ -125,8 +150,8 @@ def test_udf_fanout_queries_materialize_signatures(spark):
 
     containment_probe_pairs is excluded: its plan legitimately carries ONE
     ArrowEvalPython — the postings shingle-explode over content, a separate
-    single-pass UDF behind the DISK_ONLY postings persist — so a zero-node
-    assertion can't distinguish that from a signature leak."""
+    UDF pass read once by the DF-cap window and the probe join — so a
+    zero-node assertion can't distinguish that from a signature leak."""
     from dedup_domains_spark.plans.queries import QUERIES
 
     for name in ("minhash_lsh_pairs", "simhash_pairs"):

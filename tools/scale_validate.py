@@ -5,7 +5,7 @@ the BENCH.md "Scale validation" table's reproduction script.
 
 Usage:
     PYTHONPATH=/root/repo python tools/scale_validate.py [--rows 960000]
-        [--workers 4] [--cores 8] [--broadcast-probes]
+        [--workers 4] [--cores 8]
 
 Recall is computed DISTRIBUTED (joins of the planted-pair table against the
 cluster map), not via a driver-side dict — the 400-row pytest does the
@@ -32,9 +32,6 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=960_000)
     ap.add_argument("--workers", type=int, default=4)
     ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--broadcast-probes", action="store_true",
-                    help="use the broadcast-probe containment regime "
-                    "(default: shuffle join, the >10^6-doc configuration)")
     ap.add_argument("--executor-mem-mb", type=int, default=4096,
                     help="executor heap; the worker allocation is sized to "
                     "fit it. The 240k-960k runs fit 4g; 1.92M rows on the "
@@ -93,7 +90,7 @@ def main() -> None:
         extra_conf={"spark.executor.memory": f"{args.executor_mem_mb}m"},
     )
     spark.sparkContext.setCheckpointDir("/dev/shm/spark-tmp/ckpt_scale")
-    cfg = DedupConfig(containment_broadcast_probes=args.broadcast_probes)
+    cfg = DedupConfig()
 
     # warm JIT/python workers so the timed run measures steady state
     warm = spark.createDataFrame(gen_code_corpus(300).files)
@@ -160,7 +157,6 @@ def main() -> None:
         "sha_violations": sha_violations,
         "cc_iterations": res.cc_stats["iterations"],
         "mode": f"local-cluster[{args.workers},{args.cores}] "
-                f"broadcast_probes={args.broadcast_probes} "
                 f"shuffle_partitions={shuffle}",
     }))
     spark.stop()
