@@ -13,7 +13,6 @@ division) vectorized with minimum.reduceat over per-doc segments; SimHash is
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -25,23 +24,10 @@ from pyspark.sql.types import (
 )
 
 from dedup_domains_spark.config import DedupConfig
-from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments
+from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments_arrow
 
 _MERSENNE31 = (1 << 31) - 1
 _P31 = np.uint64(_MERSENNE31)
-
-SIGNATURE_STRUCT = StructType([
-    StructField("n_tokens", IntegerType()),
-    StructField("n_shingles", IntegerType()),
-    # int32, not long: every MinHash value is < 2^31-1 (mod-Mersenne31
-    # universal hashing), and minhash is the fattest column crossing the
-    # candidate/verify shuffles — 128 values/doc at 4 bytes instead of 8
-    # halves the dominant shuffle payload at 10^12-file scale. probes stay
-    # int64 (they are raw 64-bit shingle hashes).
-    StructField("minhash", ArrayType(IntegerType())),
-    StructField("simhash", LongType()),
-    StructField("probes", ArrayType(LongType())),
-])
 
 # Catalyst cannot prune columns INSIDE a UDF, so a caller that used the
 # full struct would pay the 128-permutation MinHash loop and the SimHash
@@ -52,6 +38,11 @@ SIGNATURE_STRUCT = StructType([
 # band sweep needs only minhash (skips the bit transpose). Every emitted
 # field is bit-identical across variants — same tokenizer, same math.
 _FIELD_TYPES = {
+    # int32, not long: every MinHash value is < 2^31-1 (mod-Mersenne31
+    # universal hashing), and minhash is the fattest column crossing the
+    # candidate/verify shuffles — 128 values/doc at 4 bytes instead of 8
+    # halves the dominant shuffle payload at 10^12-file scale. probes stay
+    # int64 (they are raw 64-bit shingle hashes).
     "minhash": ArrayType(IntegerType()),
     "simhash": LongType(),
     "probes": ArrayType(LongType()),
@@ -69,7 +60,6 @@ def _sig_struct(fields: tuple[str, ...]) -> StructType:
     )
 
 
-PROBE_STRUCT = _sig_struct(("probes",))
 # NOTE: the full shingle set is deliberately NOT emitted/cached — materializing
 # ~500 longs/doc through Arrow and the block cache costs far more (heap
 # pressure poisons every downstream stage) than re-deriving postings with
@@ -89,22 +79,6 @@ def _mod_mersenne31(v: np.ndarray) -> np.ndarray:
     v = (v & _P31) + (v >> np.uint64(31))
     v[v >= _P31] -= _P31
     return v
-
-
-def shingle_hashes(text: str, k: int) -> np.ndarray:
-    """Distinct (sorted, uint64) shingle hashes of one document — singleton
-    wrapper over the batch path; used by tests and exact-Jaccard verify."""
-    sh, offsets, counts, _ = batch_shingle_segments([text], k)
-    return sh[offsets[0]:offsets[0] + counts[0]]
-
-
-_EMPTY_SIG = pd.DataFrame({
-    "n_tokens": pd.Series([], dtype="int32"),
-    "n_shingles": pd.Series([], dtype="int32"),
-    "minhash": pd.Series([], dtype=object),
-    "simhash": pd.Series([], dtype="int64"),
-    "probes": pd.Series([], dtype=object),
-})
 
 
 # Cache-block size for the minhash/simhash passes, in shingles. The perm
@@ -127,7 +101,7 @@ def _minhash_simhash(
     """Segmented MinHash + SimHash over doc-chunks of ~_CHUNK_SHINGLES.
 
     MinHash: one segmented min per permutation (reduceat needs non-empty
-    segments — batch_shingle_segments guarantees counts >= 1). SimHash:
+    segments — batch_shingle_segments_arrow guarantees counts >= 1). SimHash:
     per-bit ones-count per doc; strided segmented sums (reduceat axis=0 /
     cumsum axis=0) are catastrophically slow in numpy — transpose to
     contiguous rows and run 64 cheap 1-D reduceats instead.
@@ -170,38 +144,6 @@ def _minhash_simhash(
     return sig, sim.view(np.int64) if want_simhash else None
 
 
-def _batch_signatures(texts: pd.Series, cfg: DedupConfig) -> pd.DataFrame:
-    if len(texts) == 0:  # empty Arrow batch (e.g. empty partition)
-        return _EMPTY_SIG.copy()
-    a, b = _perm_params(cfg)
-    flat, offsets, counts, n_tokens = batch_shingle_segments(
-        texts.tolist(), cfg.shingle_k
-    )
-    ndocs = len(counts)
-    minhashes: list = [None] * ndocs
-    probes: list = [None] * ndocs
-
-    flat31 = flat % _P31
-    sig, simhashes = _minhash_simhash(
-        flat, flat31, offsets, counts, a, b, cfg.num_perm
-    )
-
-    signed = flat.view(np.int64)
-    s = cfg.containment_probe_shingles
-    for i in range(ndocs):
-        minhashes[i] = sig[i]
-        seg = signed[offsets[i]:offsets[i] + counts[i]]
-        probes[i] = seg[:min(s, len(seg))]  # segment already sorted unsigned
-
-    return pd.DataFrame({
-        "n_tokens": pd.Series(n_tokens, dtype="int32"),
-        "n_shingles": pd.Series(counts, dtype="int32"),
-        "minhash": minhashes,
-        "simhash": pd.Series(simhashes, dtype="int64"),
-        "probes": probes,
-    })
-
-
 def _segment_take_indices(
     offsets: np.ndarray, take: np.ndarray
 ) -> np.ndarray:
@@ -222,7 +164,6 @@ def _batch_signatures_arrow(arr, cfg: DedupConfig,
     Arrow UTF-8 buffer directly (no Python str materialization, no
     re-encode) and minhash/probes are emitted as ListArrays built from the
     flat numpy outputs (no per-row list building, no pandas assembly).
-    Hash-identical to _batch_signatures: both tokenize the same bytes.
 
     ``fields`` limits the emitted signature columns AND the arithmetic:
     without "minhash" the 128-permutation loop is skipped, without
@@ -230,10 +171,6 @@ def _batch_signatures_arrow(arr, cfg: DedupConfig,
     head-slice gather is skipped. Emitted values are bit-identical across
     variants (same tokenizer output feeds the same math)."""
     import pyarrow as pa
-
-    from dedup_domains_spark.functions.tokenize_np import (
-        batch_shingle_segments_arrow,
-    )
 
     ndocs = len(arr)
     flat, offsets, counts, n_tokens = batch_shingle_segments_arrow(
@@ -276,27 +213,17 @@ def _batch_signatures_arrow(arr, cfg: DedupConfig,
     return pa.StructArray.from_arrays(children, names=names)
 
 
-def _batch_probes_arrow(arr, cfg: DedupConfig):
-    """Probes-only Arrow batch — kept as a named entry point for tests; the
-    field-pruned kernel above does the work (no MinHash permutation loop,
-    no SimHash bit transpose; probe values BIT-IDENTICAL to the full
-    variant's: same tokenizer, same head-slice of the same segments)."""
-    return _batch_signatures_arrow(arr, cfg, fields=("probes",))
-
-
 def add_signatures(
     df: DataFrame, cfg: DedupConfig, repartition: int | None = None,
-    probes_only: bool = False, fields: tuple[str, ...] | None = None,
+    fields: tuple[str, ...] = _ALL_FIELDS,
 ) -> DataFrame:
     """Attach (n_tokens, n_shingles, minhash, simhash, probes) — or, with
     ``fields=(...)`` (subset of minhash/simhash/probes), just the named
     signature columns, with the kernel skipping the arithmetic behind the
     omitted ones: no "minhash" drops the 128-permutation loop, no
     "simhash" drops the bit transpose, no "probes" drops the head-slice.
-    ``probes_only=True`` is the legacy spelling of fields=("probes",) —
-    the containment scale path. Emitted values are bit-identical across
-    variants, so any field-pruned table is interchangeable with the full
-    one for the fields it carries.
+    Emitted values are bit-identical across variants, so any field-pruned
+    table is interchangeable with the full one for the fields it carries.
 
     Repartitions before the UDF by default: upstream can arrive arbitrarily
     unbalanced — AQE coalesces small projections, and a parquet scan of a
@@ -316,8 +243,6 @@ def add_signatures(
 
     from pyspark.sql.functions import arrow_udf
 
-    if fields is None:
-        fields = ("probes",) if probes_only else _ALL_FIELDS
     unknown = set(fields) - set(_ALL_FIELDS)
     if unknown:
         raise ValueError(f"unknown signature fields: {sorted(unknown)}")
@@ -349,10 +274,6 @@ def explode_shingles_udf(cfg: DedupConfig, keep_only: np.ndarray | None = None):
     @arrow_udf(ArrayType(LongType()))
     def _sh(texts):
         import pyarrow as pa
-
-        from dedup_domains_spark.functions.tokenize_np import (
-            batch_shingle_segments_arrow,
-        )
 
         flat, offsets, counts, _ = batch_shingle_segments_arrow(
             texts, cfg.shingle_k

@@ -50,33 +50,18 @@ def _splitmix(z: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-def batch_token_hashes(texts) -> tuple[np.ndarray, np.ndarray]:
-    """texts: iterable of str -> (token_hashes uint64 flat, doc_id int64 per
-    token). One numpy pass set over the concatenated batch."""
-    bufs = [(t or "").encode("utf-8", "surrogatepass") for t in texts]
-    ndocs = len(bufs)
-    doc_starts = np.zeros(ndocs, dtype=np.int64)
-    pos = 0
-    for i, b in enumerate(bufs):
-        doc_starts[i] = pos
-        pos += len(b) + 1  # +1 for the space separator
-    joined = b" ".join(bufs) + b" "
-    arr = np.frombuffer(joined, dtype=np.uint8)
-    return _token_hashes_joined(arr, doc_starts)
-
-
 _SEP = np.frombuffer(b" ", dtype=np.uint8)
 
 
 def _token_hashes_from_buffer(
     data: np.ndarray, off: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Same contract as batch_token_hashes, but consuming an Arrow string
-    buffer directly: ``data`` is the raw UTF-8 byte buffer, ``off`` the
+    """-> (token_hashes uint64 flat, doc index int64 per token) for one
+    Arrow string buffer: ``data`` is the raw UTF-8 byte buffer, ``off`` the
     (ndocs+1) absolute value offsets into it. Builds the space-joined batch
     with ndocs C-level slice copies — NO Python str objects, no re-encode
-    (the Arrow path's whole point; the str round trip was ~2 allocations +
-    a decode + an encode per document)."""
+    (a str round trip costs ~2 allocations + a decode + an encode per
+    document)."""
     ndocs = len(off) - 1
     parts = []
     for i in range(ndocs):
@@ -138,42 +123,19 @@ def _token_hashes_joined(
 _CHUNK_DOCS = 128
 
 
-def batch_shingle_segments(
-    texts, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """-> (shingles uint64 flat sorted-unique per doc, offsets int64 per doc,
-    counts int64 per doc, n_tokens int64 per doc).
-
-    Each doc's segment shingles[offsets[i]:offsets[i]+counts[i]] is sorted
-    ascending (unsigned). Docs with fewer than k tokens get one fallback
-    shingle (polynomial over all their tokens; empty doc -> splitmix(0)),
-    so exact duplicates always co-bucket. Large batches are processed in
-    cache-resident sub-batches of _CHUNK_DOCS docs (see note above).
-    """
-    ndocs = len(texts)
-    if ndocs > _CHUNK_DOCS:
-        if not isinstance(texts, list):
-            texts = list(texts)
-        parts = [
-            _shingle_segments_impl(texts[i:i + _CHUNK_DOCS], k)
-            for i in range(0, ndocs, _CHUNK_DOCS)
-        ]
-        sh = np.concatenate([p[0] for p in parts])
-        counts = np.concatenate([p[2] for p in parts])
-        n_tokens = np.concatenate([p[3] for p in parts])
-        offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        return sh, offsets, counts, n_tokens
-    return _shingle_segments_impl(texts, k)
-
-
 def batch_shingle_segments_arrow(
     arr, k: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Arrow-native twin of batch_shingle_segments: consumes a pyarrow
-    string Array zero-copy (offsets + raw UTF-8 data buffer), never
-    materializing Python str objects. Same output contract, bit-identical
-    hashes (both paths tokenize the same UTF-8 bytes); same cache-resident
-    _CHUNK_DOCS sub-batching."""
+    """pyarrow string Array -> (shingles uint64 flat sorted-unique per doc,
+    offsets int64 per doc, counts int64 per doc, n_tokens int64 per doc).
+
+    Reads the Arrow offsets and raw UTF-8 data buffer zero-copy, never
+    materializing Python str objects; a null entry tokenizes as "". Each
+    doc's segment shingles[offsets[i]:offsets[i]+counts[i]] is sorted
+    ascending (unsigned). Docs with fewer than k tokens get one fallback
+    shingle (polynomial over all their tokens; empty doc -> splitmix(0)),
+    so exact duplicates always co-bucket. Large batches are processed in
+    cache-resident sub-batches of _CHUNK_DOCS docs (see note above)."""
     import pyarrow as pa
 
     ndocs = len(arr)
@@ -203,17 +165,6 @@ def batch_shingle_segments_arrow(
     n_tokens = np.concatenate([p[3] for p in parts])
     offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
     return sh, offsets, counts, n_tokens
-
-
-def _shingle_segments_impl(
-    texts, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    ndocs = len(texts)
-    if ndocs == 0:
-        e64, ei = np.empty(0, np.uint64), np.empty(0, np.int64)
-        return e64, ei, ei.copy(), ei.copy()
-    th, doc_of = batch_token_hashes(texts)
-    return _shingle_segments_from_tokens(th, doc_of, ndocs, k)
 
 
 def _shingle_segments_from_tokens(

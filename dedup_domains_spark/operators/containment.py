@@ -46,8 +46,6 @@ from dedup_domains_spark.functions.signatures import explode_shingles_udf
 # (shuffle 659.8 s vs broadcast 682.5 s) predates the DF-cap window.
 SHUFFLE_ABOVE_PROBES = 30_000_000
 
-_COLLECT = object()  # containment_candidates collects the probe filter itself
-
 
 def collect_probe_filter(sig_df: DataFrame, cfg: DedupConfig):
     """The distinct probe-shingle set as a sorted int64 numpy array, or None
@@ -73,15 +71,15 @@ def collect_probe_filter(sig_df: DataFrame, cfg: DedupConfig):
 
 def containment_candidates(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
-    repartition: int | None = None, probe_filter=_COLLECT,
+    repartition: int | None = None, *, probe_filter,
 ) -> DataFrame:
     """Candidate (containee, container) pairs: every surviving probe of the
     containee appears in the container's shingle set and the container is
     larger.
 
     df carries (uid, content); sig_df carries (uid, n_tokens, n_shingles,
-    probes). ``probe_filter`` is collect_probe_filter's result when the
-    caller already holds it; by default it is collected here. Postings are
+    probes). ``probe_filter`` is collect_probe_filter(sig_df, cfg): a sorted
+    probe array (broadcast regime) or None (shuffle regime). Postings are
     derived map-side from content (explode UDF) and consumed once: the
     DF-cap window and the probe join sit on the same partitioning by
     shingle, so the UDF runs in one pass with no persist or checkpoint.
@@ -91,8 +89,6 @@ def containment_candidates(
     regime) the full postings shuffle for the window and the sort-merge
     probe join reuses that exchange on shingle.
     """
-    if probe_filter is _COLLECT:
-        probe_filter = collect_probe_filter(sig_df, cfg)
     broadcast = probe_filter is not None
 
     # explicit fan-out before the tokenizing UDF — same rationale as
@@ -202,12 +198,12 @@ def verify_containment(
 
 def contained_pairs(
     df: DataFrame, sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid",
-    repartition: int | None = None, probe_filter=_COLLECT,
+    repartition: int | None = None, *, probe_filter,
 ) -> DataFrame:
     """(small_id, big_id) verified exact-substring containment pairs.
-    ``probe_filter`` skips the internal probe collection when the caller
-    already holds its result (run_pipeline fuses it with its sig_df
-    materializer barrier)."""
+    ``probe_filter`` is collect_probe_filter(sig_df, cfg); when sig_df is an
+    unpopulated cache that call is also its materializing action, so the
+    caller chooses where that barrier sits."""
     cand = containment_candidates(
         df, sig_df, cfg, id_col, repartition=repartition,
         probe_filter=probe_filter,

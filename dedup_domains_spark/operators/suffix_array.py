@@ -32,8 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
-from dedup_domains_spark.operators.containment import _COLLECT
-
 
 def build_suffix_array(data: bytes) -> np.ndarray:
     """Suffix array of ``data`` (indices of suffixes in lexicographic order),
@@ -168,7 +166,7 @@ def suffix_verify_containment(
 
 def suffix_contained_pairs(
     df: DataFrame, sig_df: DataFrame, cfg, id_col: str = "uid",
-    repartition: int | None = None, probe_filter=_COLLECT,
+    repartition: int | None = None, *, probe_filter,
 ) -> DataFrame:
     """Probe-index candidates (operators/containment.containment_candidates)
     verified by per-container suffix arrays: the full D2-analog containment

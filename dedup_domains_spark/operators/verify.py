@@ -10,13 +10,12 @@ shingle-set Jaccard per Arrow batch.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from dedup_domains_spark.config import DedupConfig
-from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments
+from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments_arrow
 
 
 def attach_minhash_estimate(
@@ -64,8 +63,12 @@ def verify_pairs_exact(
         .join(c.withColumnRenamed("_cid", "id_b").withColumnRenamed("_ct", "_ct_b"), "id_b")
     )
 
-    @F.pandas_udf(DoubleType())
-    def _jac(a: pd.Series, b: pd.Series) -> pd.Series:
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf(DoubleType())
+    def _jac(a, b):
+        import pyarrow as pa
+
         # whole-batch numpy shingling (one tokenizer pass per column), then
         # ONE segmented intersection across all pairs at once (VERDICT r03
         # item 6: the per-pair intersect1d loop was the last Python loop on
@@ -74,8 +77,8 @@ def verify_pairs_exact(
         # its pair index and lexsorting the combined array, an intersecting
         # value appears exactly twice adjacent under (pair, value) order —
         # per-pair intersection sizes fall out of one bincount.
-        sha, _, cnta, _ = batch_shingle_segments(a.tolist(), cfg.shingle_k)
-        shb, _, cntb, _ = batch_shingle_segments(b.tolist(), cfg.shingle_k)
+        sha, _, cnta, _ = batch_shingle_segments_arrow(a, cfg.shingle_k)
+        shb, _, cntb, _ = batch_shingle_segments_arrow(b, cfg.shingle_k)
         n = len(a)
         pair_of = np.concatenate([
             np.repeat(np.arange(n, dtype=np.int64), cnta),
@@ -88,7 +91,7 @@ def verify_pairs_exact(
         inter = np.bincount(pair_s[1:][dup], minlength=n).astype(np.float64)
         union = (cnta + cntb).astype(np.float64) - inter
         out = np.where(union > 0, inter / np.maximum(union, 1.0), 1.0)
-        return pd.Series(out)
+        return pa.array(out, type=pa.float64())
 
     return (
         j.withColumn("exact_jaccard", _jac(F.col("_ct_a"), F.col("_ct_b")))

@@ -1,6 +1,9 @@
-"""Query catalog: every SURVEY.md §2 operator (and the training-data ops)
-exposed as a (Spark DataFrame builder, DuckDB oracle SQL) pair over the
-driver-provided tables at /root/testdata/sf*/.
+"""Query catalog: the dedup engine's operators — domain-mode rules, code
+dedup (exact, MinHash/LSH, SimHash, verify, containment, CC, pipeline) and
+corpus curation — plus relational breadth over the TPC-H and events
+tables, exposed as (Spark DataFrame function, DuckDB oracle SQL) pairs over
+the test-data tables (one parquet file per table in each scale-factor
+directory).
 
 Contract (README / __spark_entry__.py): each Spark builder takes
 (spark, sf_dir) and returns a DataFrame whose column NAMES and VALUES match
@@ -20,7 +23,6 @@ from pyspark.sql import functions as F
 
 from dedup_domains_spark.config import DedupConfig
 from dedup_domains_spark.functions import text as T
-from dedup_domains_spark.functions import vectors as V
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1377,31 +1379,6 @@ def events_json_extract(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Embedding similarity search
-# ---------------------------------------------------------------------------
-
-@_q(
-    "embedding_topk",
-    """
-    SELECT query_id, rank, neighbor_id FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id) AS rank
-      FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-      WHERE q.vec_id < 10) WHERE rank <= 5
-    """,
-    "similarity search: brute-force cosine top-k",
-)
-def embedding_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    )
-    return V.brute_force_topk(e.filter("vec_id < 10"), e, k=5)
-
-
-# ---------------------------------------------------------------------------
 # Signature/LSH operators — planted-truth DuckDB oracles.
 #
 # MinHash/SimHash signatures themselves are not SQL-recomputable, so these
@@ -1678,34 +1655,6 @@ def pipeline_planted_recall(spark, sf_dir):
     )
 
 
-@_q(
-    "ann_lsh_topk",
-    """
-    SELECT query_id, rank, neighbor_id FROM (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id) AS rank
-      FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-      WHERE q.vec_id < 10) WHERE rank <= 5
-    """,
-    "similarity search: LSH ANN vs exact top-k oracle",
-)
-def ann_lsh_topk_q(spark, sf_dir):
-    """Hyperplane-LSH ANN configured (2 planes × 16 tables) so its candidate
-    union provably covers the exact top-5 on this fixture — the oracle is
-    the brute-force SQL, so any ANN recall miss is a red row. At real scale
-    the same operator trades tables for recall; the fixture pins the
-    machinery (bucket join → exact rank within candidates) exactly."""
-    e = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    )
-    return V.ann_topk_lsh(
-        e.filter("vec_id < 10"), e, dim=64, k=5, n_planes=2, n_tables=16
-    )
-
-
 # ---------------------------------------------------------------------------
 # Set ops / grouping sets / scalar breadth (beyond the reference, §2.2)
 # ---------------------------------------------------------------------------
@@ -1873,7 +1822,7 @@ def scalar_functions(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Scale-path containment + multimodal plumbing (rows-only checks)
+# Scale-path containment
 # ---------------------------------------------------------------------------
 
 @_q(
@@ -1909,6 +1858,7 @@ def _containment_over_docs(spark, sf_dir, pairs_fn):
     operator only needs to be unique. The oracled path (probe sketch →
     inverted index → DF cap → full-house → substring verify) is unchanged."""
     from dedup_domains_spark.functions.signatures import add_signatures
+    from dedup_domains_spark.operators.containment import collect_probe_filter
 
     cfg = DedupConfig(min_containee_tokens=8)
     df = _t(spark, sf_dir, "documents").select(
@@ -1916,296 +1866,21 @@ def _containment_over_docs(spark, sf_dir, pairs_fn):
     )
     # fan-out node: probe collection (toPandas), probe explode, and the
     # container-size join all read sig — without materialization the
-    # signature UDF runs 3x (once per consumer). probes_only: containment
-    # never reads minhash/simhash, so the kernel skips the 128-perm loop.
-    # LAZY checkpoint (r06): the first action against sig is pairs_fn's own
-    # probe collection, which scans every partition (the distinct's partial
-    # aggregate sits below the limit), so it doubles as the materializing
-    # job — one driver barrier instead of two, the same fusion run_pipeline
-    # uses. Later consumers read the populated blocks.
+    # signature UDF runs 3x (once per consumer). fields=("probes",):
+    # containment never reads minhash/simhash, so the kernel skips the
+    # 128-perm loop. LAZY checkpoint (r06): the first action against sig is
+    # the probe collection, which scans every partition (the distinct's
+    # partial aggregate sits below the limit), so it doubles as the
+    # materializing job — one collect barrier instead of two, the same
+    # fusion run_pipeline uses. Later consumers read the populated blocks.
     sig = add_signatures(
-        df, cfg, probes_only=True,
+        df, cfg, fields=("probes",),
         repartition=spark.sparkContext.defaultParallelism,
     ).localCheckpoint(eager=False)
-    return pairs_fn(df, sig, cfg, id_col="doc_id").select("small_id", "big_id")
-
-
-def _docs_as_media(spark, sf_dir, with_twins: bool = False, kind: str = "image"):
-    docs = _t(spark, sf_dir, "documents")
-    base = docs.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.encode(F.col("text"), "utf-8").alias("data"),
-    )
-    if with_twins:
-        base = base.unionByName(
-            docs.filter("doc_id % 10 = 0").select(
-                (F.col("doc_id") + _TWIN).cast("string").alias("media_id"),
-                F.encode(F.col("text"), "utf-8").alias("data"),
-            )
-        )
-    # repartition off the single-row-group scan: the decode mapInPandas is
-    # map-side and otherwise runs the whole batch on one core (guide §2.5)
-    return base.select(
-        "media_id",
-        F.lit(kind).alias("kind"),
-        F.lit("image/png" if kind == "image" else "audio/wav").alias("mime"),
-        F.lit(64).alias("width"), F.lit(64).alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-        "data",
-    ).repartition(spark.sparkContext.defaultParallelism, "media_id")
-
-
-# (The former rows-only `image_phash_features` entry is folded into
-# `image_phash_dup_pairs` below — the planted-pair oracle drives the same
-# decode→phash chain end-to-end, so a separate unoracled registry entry
-# added no verification surface; `image_features` itself stays
-# pytest-covered in tests/test_multimodal.py.)
-
-
-@_q("image_phash_dup_pairs", _PLANTED_IDENT_SQL,
-    "multimodal: decode→phash→dup-pair planted-truth oracle")
-def image_phash_dup_pairs(spark, sf_dir):
-    """Planted byte-identical media recovered through the multimodal chain:
-    binary payload → Arrow-batched decode (deterministic stub) → 64-bit
-    perceptual hash → equality. Identical bytes MUST phash identically in
-    any batch/partition (the batch-invariance property); the oracle is the
-    planted-pair list, so a nondeterministic decode or hash turns this red."""
-    from dedup_domains_spark.functions.multimodal import image_features
-
-    feats = image_features(_docs_as_media(spark, sf_dir, with_twins=True)).select(
-        F.col("media_id").cast("long").alias("mid"), "phash"
-    )
-    a = feats.filter((F.col("mid") < _TWIN) & (F.col("mid") % 10 == 0)).select(
-        F.col("mid").alias("id_a"), F.col("phash").alias("_pa")
-    )
-    b = feats.filter(F.col("mid") >= _TWIN).select(
-        (F.col("mid") - _TWIN).alias("id_a"), F.col("phash").alias("_pb")
-    )
-    return (
-        a.join(b, "id_a")
-        .filter(F.col("_pa") == F.col("_pb"))
-        .select("id_a", (F.col("id_a") + _TWIN).alias("id_b"))
-    )
-
-
-@_q("audio_dup_pairs", _PLANTED_IDENT_SQL,
-    "multimodal: audio decode→fingerprint planted-truth oracle")
-def audio_dup_pairs(spark, sf_dir):
-    """Planted byte-identical audio payloads recovered through the audio
-    chain (binary → Arrow-batched decode stub → windowed RMS →
-    energy-delta fingerprint → equality). Same batch-invariance contract as
-    image_phash_dup_pairs, on the audio path."""
-    from dedup_domains_spark.functions.multimodal import audio_features
-
-    feats = audio_features(
-        _docs_as_media(spark, sf_dir, with_twins=True, kind="audio")
-    ).select(F.col("media_id").cast("long").alias("mid"), "afingerprint")
-    a = feats.filter((F.col("mid") < _TWIN) & (F.col("mid") % 10 == 0)).select(
-        F.col("mid").alias("id_a"), F.col("afingerprint").alias("_fa")
-    )
-    b = feats.filter(F.col("mid") >= _TWIN).select(
-        (F.col("mid") - _TWIN).alias("id_a"), F.col("afingerprint").alias("_fb")
-    )
-    return (
-        a.join(b, "id_a")
-        .filter(F.col("_fa") == F.col("_fb"))
-        .select("id_a", (F.col("id_a") + _TWIN).alias("id_b"))
-    )
-
-
-@_q(
-    "ann_hyperplane_recall",
-    """
-    SELECT vec_id AS query_id, CAST(1.0 AS DOUBLE) AS recall_at_5
-    FROM embeddings WHERE vec_id < 10
-    """,
-    "similarity search: ANN recall@5 vs brute force (full-recall oracle)",
-)
-def ann_hyperplane_recall(spark, sf_dir):
-    """Per-query recall@5 of the LSH ANN against the exact top-k, INCLUDING
-    zero-recall queries (left join from the query set — the r01 version
-    silently dropped them, biasing the metric). At 2 planes × 16 tables the
-    candidate union covers the exact top-5 for every fixture query, so the
-    oracle pins recall == 1.0 for all 10 queries; any regression in the
-    bucket machinery shows up as a sub-1.0 row."""
-    e = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    )
-    q = e.filter("vec_id < 10")
-    exact = V.brute_force_topk(q, e, k=5).select(
-        "query_id", F.col("neighbor_id").alias("_n")
-    )
-    approx = V.ann_topk_lsh(q, e, dim=64, k=5, n_planes=2, n_tables=16).select(
-        F.col("query_id").alias("_qa"), F.col("neighbor_id").alias("_n")
-    )
-    hits = (
-        exact.join(approx, (exact["query_id"] == approx["_qa"])
-                   & (exact["_n"] == approx["_n"]), "leftsemi")
-        .groupBy("query_id").agg(F.count(F.lit(1)).alias("_hits"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce(F.col("_hits"), F.lit(0)) / 5.0).alias("recall_at_5"),
-        )
-    )
-
-
-@_q(
-    "embedding_near_dup_pairs",
-    """
-    WITH allv AS (
-      SELECT vec_id, embedding FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id,
-             list_transform(embedding, x -> x * 2) AS embedding
-      FROM embeddings WHERE vec_id % 10 = 0)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_cosine_similarity(a.embedding, b.embedding), 4) AS cos_sim
-    FROM allv a JOIN allv b ON a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.9
-    """,
-    "dedup: embedding-cosine near-dup (hyperplane-bucketed scale path)",
-)
-def embedding_near_dup_pairs(spark, sf_dir):
-    """Embedding near-dup pairs via hyperplane-bucket blocking — no
-    crossJoin (the r01 scale-killer, VERDICT item 2). Planted collinear
-    twins (embedding × 2 → cosine exactly 1.0, identical hyperplane signs →
-    deterministic co-bucketing) make the result non-empty and the oracle is
-    the full brute-force SQL over the same augmented set: the bucketed path
-    must find exactly what the O(n²) twin finds."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
-    )
-    twins = e.filter("vec_id % 10 = 0").select(
-        (F.col("vec_id") + _TWIN).alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
-    )
-    allv = e.unionByName(twins)
-    return V.bucketed_near_dup_pairs(
-        allv, dim=64, threshold=0.9, n_planes=8, n_tables=2
-    )
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup: centroid-cell semantic dedup (Abbas et al. 2023, arXiv:2303.09540)
-# ---------------------------------------------------------------------------
-
-_SEMDEDUP_SQL = """
-    WITH allv AS (
-      SELECT vec_id, embedding FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id,
-             list_transform(embedding, x -> x * 2) AS embedding
-      FROM embeddings WHERE vec_id % 10 = 0),
-    cents AS (
-      SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings
-      WHERE vec_id % 50 = 0),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT v.vec_id, c.cent_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY list_cosine_similarity(v.embedding, c.cvec) DESC,
-                          c.cent_id) AS rn
-        FROM allv v, cents c) WHERE rn = 1),
-    dropped AS (
-      SELECT DISTINCT a.vec_id
-      FROM assign a
-      JOIN assign b ON b.cent_id = a.cent_id AND b.vec_id < a.vec_id
-      JOIN allv va ON va.vec_id = a.vec_id
-      JOIN allv vb ON vb.vec_id = b.vec_id
-      WHERE list_cosine_similarity(va.embedding, vb.embedding) >= 0.9)
-    SELECT a.vec_id, a.cent_id AS cell_id,
-           CAST(a.vec_id NOT IN (SELECT vec_id FROM dropped) AS BIGINT) AS kept
-    FROM assign a
-"""
-
-
-@_q(
-    "semdedup_cells",
-    _SEMDEDUP_SQL,
-    "dedup: SemDeDup — centroid-cell semantic dedup over embeddings",
-)
-def semdedup_cells(spark, sf_dir):
-    """SemDeDup-style semantic dedup (Abbas et al. 2023): assign every
-    embedding to its nearest seed centroid (deterministic seeds =
-    vec_id % 50 = 0, argmax cosine, cent_id tie-break), then WITHIN each
-    cell drop any vector that has an eps-similar (cosine >= 0.9) neighbor
-    with a smaller vec_id — the keep-first analog of the reference's
-    collapse-redundant-entries rule lifted to semantic space. Planted
-    collinear twins (embedding x 2 under vec_id + 1M -> cosine exactly 1.0,
-    identical argmax cell) guarantee a non-vacuous drop set; random 64-dim
-    vectors sit far below the 0.9 threshold, so the decision margins are
-    float-robust on both engines.
-
-    Scale shape: this is the centroid-partitioned complement of
-    embedding_near_dup_pairs' hyperplane buckets — cells become the shuffle
-    key, each vector is compared only inside its own cell, and cell size is
-    controlled by k (choose k ~ N / target_cell_size; the paper's k-means
-    plays that role — seeded assignment keeps this twin exactly
-    SQL-recomputable). At 10^12 rows a mega-cell would be capped the same
-    way the LSH path caps mega-buckets (salted split + per-cell cap),
-    per-partition skew stats flag it first. Output: one row per vector
-    (vec_id, cell_id, kept) — the survivor census, not just the pair list."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
-    )
-    twins = e.filter("vec_id % 10 = 0").select(
-        (F.col("vec_id") + _TWIN).alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x * 2).alias("embedding"),
-    )
-    allv = e.unionByName(twins)
-    cents = e.filter("vec_id % 50 = 0").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec")
-    )
-    # per-side norm precompute (same rationale as brute_force_topk): inline
-    # cosine() would recompute the vector norm once per centroid in the
-    # argmax sweep and both norms per within-cell pair; the quotient is the
-    # same expression tree, so doubles — and the argmax/tie order — are
-    # identical
-    allv = allv.withColumn("_vn", V.l2_norm(F.col("embedding")))
-    cents = cents.withColumn("_cn", V.l2_norm(F.col("cvec")))
-    scored = allv.crossJoin(F.broadcast(cents)).withColumn(
-        "_s",
-        V.dot(F.col("embedding"), F.col("cvec")) / (F.col("_vn") * F.col("_cn")),
-    )
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("_s"), "cent_id")
-    # fan-out node (3 consumers: both pair sides + the final census) — same
-    # materialization policy as the signature tables in the UDF-heavy
-    # queries; the norm rides into the checkpoint so pair scoring reuses it
-    assign = _materialize(
-        scored.withColumn("rn", F.row_number().over(aw))
-        .filter("rn = 1").select("vec_id", "cent_id", "embedding", "_vn")
-    )
-    a = assign.select(
-        "cent_id", F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("_va"), F.col("_vn").alias("_na"),
-    )
-    b = assign.select(
-        "cent_id", F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("_vb"), F.col("_vn").alias("_nb"),
-    )
-    dropped = (
-        a.join(b, "cent_id")
-        .filter(F.col("b_id") < F.col("a_id"))
-        .filter(
-            V.dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-            >= 0.9
-        )
-        .select(F.col("a_id").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        assign.select("vec_id", F.col("cent_id").alias("cell_id"))
-        .join(dropped.withColumn("_d", F.lit(True)), "vec_id", "left")
-        .withColumn("kept", F.col("_d").isNull().cast("long"))
-        .drop("_d")
-    )
+    probe_filter = collect_probe_filter(sig, cfg)
+    return pairs_fn(
+        df, sig, cfg, id_col="doc_id", probe_filter=probe_filter
+    ).select("small_id", "big_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2494,106 +2169,7 @@ def bloom_dedup_new_docs(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# IVF ANN (the centroid-partitioned scale path, exact SQL-recomputable)
-# ---------------------------------------------------------------------------
-
-_IVF_SQL = """
-    WITH cents AS (
-      SELECT vec_id AS cent_id, embedding AS cvec FROM embeddings
-      WHERE vec_id % 50 = 0),
-    assign AS (
-      SELECT vec_id, cent_id FROM (
-        SELECT v.vec_id, c.cent_id,
-               row_number() OVER (
-                 PARTITION BY v.vec_id
-                 ORDER BY list_cosine_similarity(v.embedding, c.cvec) DESC,
-                          c.cent_id) AS rn
-        FROM embeddings v, cents c) WHERE rn = 1),
-    probes AS (
-      SELECT q_id, cent_id FROM (
-        SELECT q.vec_id AS q_id, c.cent_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY list_cosine_similarity(q.embedding, c.cvec) DESC,
-                          c.cent_id) AS rn
-        FROM embeddings q, cents c WHERE q.vec_id < 10) WHERE rn <= 3),
-    cand AS (
-      SELECT DISTINCT p.q_id, a.vec_id
-      FROM probes p JOIN assign a ON a.cent_id = p.cent_id
-      WHERE a.vec_id != p.q_id)
-    SELECT query_id, rank, neighbor_id FROM (
-      SELECT c.q_id AS query_id, c.vec_id AS neighbor_id,
-             row_number() OVER (
-               PARTITION BY c.q_id
-               ORDER BY list_cosine_similarity(q.embedding, v.embedding) DESC,
-                        c.vec_id) AS rank
-      FROM cand c
-      JOIN embeddings q ON q.vec_id = c.q_id
-      JOIN embeddings v ON v.vec_id = c.vec_id)
-    WHERE rank <= 5
-"""
-
-@_q("ann_ivf_topk", _IVF_SQL,
-    "similarity search: IVF (centroid-cell) ANN, exact SQL-recomputable")
-def ann_ivf_topk(spark, sf_dir):
-    """IVF-style ANN: vectors are assigned to their nearest centroid
-    (deterministic seed centroids = vec_id % 50 = 0), queries probe their 3
-    nearest cells, and exact cosine top-5 runs only within the probed
-    cells' candidates. This is the centroid-partitioned complement of the
-    hyperplane-LSH path: cells become partition keys at scale, so each
-    query touches nprobe/ncells of the corpus. Every step (assignment,
-    probe choice, ranking) is deterministic and recomputed exactly by the
-    DuckDB oracle."""
-    e = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
-    )
-    # per-side norm precompute — same rationale (and identical doubles) as
-    # brute_force_topk / semdedup_cells
-    e = e.withColumn("_vn", V.l2_norm(F.col("embedding")))
-    cents = e.filter("vec_id % 50 = 0").select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cvec"),
-        F.col("_vn").alias("_cn"),
-    )
-    sim = V.dot(F.col("embedding"), F.col("cvec")) / (F.col("_vn") * F.col("_cn"))
-    scored = e.crossJoin(F.broadcast(cents)).withColumn("_s", sim)
-    aw = Window.partitionBy("vec_id").orderBy(F.desc("_s"), "cent_id")
-    assign = (
-        scored.withColumn("rn", F.row_number().over(aw))
-        .filter("rn = 1").select("vec_id", "cent_id")
-    )
-    probes = (
-        scored.filter("vec_id < 10")
-        .withColumn("rn", F.row_number().over(aw))
-        .filter("rn <= 3")
-        .select(F.col("vec_id").alias("q_id"), "cent_id")
-    )
-    cand = (
-        probes.join(assign, "cent_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id").distinct()
-    )
-    qv = e.filter("vec_id < 10").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("_qv"),
-        F.col("_vn").alias("_qn"),
-    )
-    cv = e.select("vec_id", F.col("embedding").alias("_cv"),
-                  F.col("_vn").alias("_cn2"))
-    rw = Window.partitionBy("q_id").orderBy(F.desc("_s"), "vec_id")
-    return (
-        cand.join(F.broadcast(qv), "q_id").join(cv, "vec_id")
-        .withColumn(
-            "_s",
-            V.dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn2")),
-        )
-        .withColumn("rank", F.row_number().over(rw))
-        .filter("rank <= 5")
-        .select(F.col("q_id").alias("query_id"), "rank", F.col("vec_id").alias("neighbor_id"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# BPE-style pretokenization + video frame sampling
+# BPE-style pretokenization
 # ---------------------------------------------------------------------------
 
 _BPE_RE = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
@@ -2621,45 +2197,4 @@ def bpe_pretokenize(spark, sf_dir):
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), F.lit(0))).alias("n_bpe_tokens"),
         F.size(F.regexp_extract_all("text", F.lit(r"\w+"), F.lit(0))).alias("n_word_tokens"),
-    )
-
-
-@_q(
-    "video_frame_sample",
-    """
-    WITH media AS (
-      SELECT CAST(doc_id AS VARCHAR) AS media_id, text,
-             doc_id % 10 + 1 AS n_frames
-      FROM documents),
-    idx AS (
-      SELECT media_id, text, CAST(u.i AS INTEGER) AS frame_idx
-      FROM media, unnest(generate_series(0, n_frames - 1)) AS u(i))
-    SELECT media_id, frame_idx,
-           sha256(text || CAST(frame_idx AS VARCHAR)) AS frame_sha
-    FROM idx
-    """,
-    "multimodal: video frame sampling (generator fan-out, SQL-recomputable)",
-)
-def video_frame_sample(spark, sf_dir):
-    """Video frame sampling through the real generator path
-    (functions/multimodal.sample_video_frames — mapInPandas fan-out, one
-    row per sampled frame, nothing collected on the driver). Durations are
-    planted as (doc_id % 10 + 1) seconds at 1 frame/s, and the stub frame
-    bytes are sha256(payload || ascii(frame_idx)), so the oracle recomputes
-    every emitted frame exactly: a fan-out miscount or a nondeterministic
-    frame turns the row red."""
-    from dedup_domains_spark.functions.multimodal import sample_video_frames
-
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").cast("string").alias("media_id"),
-        F.lit("video").alias("kind"),
-        F.lit("video/mp4").alias("mime"),
-        F.lit(64).alias("width"), F.lit(64).alias("height"),
-        ((F.col("doc_id") % 10 + 1) * 1000).cast("int").alias("duration_ms"),
-        F.encode("text", "utf-8").alias("data"),
-    )
-    frames = sample_video_frames(media, every_ms=1000)
-    return frames.select(
-        "media_id", "frame_idx", F.lower(F.hex("frame")).alias("frame_sha")
     )

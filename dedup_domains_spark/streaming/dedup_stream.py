@@ -52,14 +52,9 @@ def stream_signatures(stream_df: DataFrame, cfg: DedupConfig | None = None) -> D
     """Attach MinHash/SimHash signatures to a streaming DataFrame — the
     signature UDF is stateless, so it applies unchanged (repartition is
     skipped: a stream's partitioning is the source's)."""
-    cfg = cfg or DedupConfig()
-    from dedup_domains_spark.functions.signatures import SIGNATURE_STRUCT, _batch_signatures
+    from dedup_domains_spark.functions.signatures import add_signatures
 
-    @F.pandas_udf(SIGNATURE_STRUCT)
-    def _sig(texts: pd.Series) -> pd.DataFrame:
-        return _batch_signatures(texts, cfg)
-
-    return stream_df.withColumn("_sig", _sig(F.col("content"))).select("*", "_sig.*").drop("_sig")
+    return add_signatures(stream_df, cfg or DedupConfig(), repartition=0)
 
 
 STATE_SCHEMA = StructType([

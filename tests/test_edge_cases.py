@@ -2,19 +2,22 @@
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from dedup_domains_spark.config import DedupConfig
 from dedup_domains_spark.datagen import gen_code_corpus
-from dedup_domains_spark.functions.signatures import _batch_signatures
+from dedup_domains_spark.functions.signatures import _batch_signatures_arrow
 from dedup_domains_spark.plans.pipeline import run_pipeline
 
 
 def test_empty_batch_signatures():
-    out = _batch_signatures(pd.Series([], dtype=object), DedupConfig())
+    import pyarrow as pa
+
+    out = _batch_signatures_arrow(pa.array([], type=pa.string()), DedupConfig())
     assert len(out) == 0
-    assert list(out.columns) == ["n_tokens", "n_shingles", "minhash", "simhash", "probes"]
+    assert [f.name for f in out.type] == [
+        "n_tokens", "n_shingles", "minhash", "simhash", "probes"
+    ]
 
 
 def test_pipeline_on_empty_corpus(spark):

@@ -67,43 +67,49 @@ def test_dnsbl_gen_has_structural_cases():
 
 def test_minhash_estimate_tracks_true_jaccard():
     import numpy as np
+    import pyarrow as pa
 
-    from dedup_domains_spark.functions.signatures import (
-        _batch_signatures, shingle_hashes,
+    from dedup_domains_spark.functions.signatures import _batch_signatures_arrow
+    from dedup_domains_spark.functions.tokenize_np import (
+        batch_shingle_segments_arrow,
     )
 
     cfg = DedupConfig()
     corpus = gen_code_corpus(100)
-    f = corpus.files
-    sigs = _batch_signatures(f.content, cfg)
+    arr = pa.array(corpus.files.content.tolist(), type=pa.string())
+    minhash = _batch_signatures_arrow(arr, cfg).field("minhash").to_pylist()
+    sh, offsets, counts, _ = batch_shingle_segments_arrow(arr, cfg.shingle_k)
+
+    def shingles(i):
+        return set(sh[offsets[i]:offsets[i] + counts[i]].tolist())
+
     for a, b, kind in corpus.pairs.itertuples(index=False):
-        sa = set(shingle_hashes(f.content[a], cfg.shingle_k).tolist())
-        sb = set(shingle_hashes(f.content[b], cfg.shingle_k).tolist())
+        sa, sb = shingles(a), shingles(b)
         true_j = len(sa & sb) / len(sa | sb)
-        est = float(np.mean(np.array(sigs.minhash[a]) == np.array(sigs.minhash[b])))
+        est = float(np.mean(np.array(minhash[a]) == np.array(minhash[b])))
         assert abs(est - true_j) < 0.2, (a, b, kind, true_j, est)
 
 
 def test_probes_only_batch_matches_full_signatures():
-    """_batch_probes_arrow must be bit-identical to the full path on the
+    """The probes-only kernel must be bit-identical to the full path on the
     fields it shares (n_tokens, n_shingles, probes) — containment treats a
     probes-only signature table as interchangeable with the full one."""
     import pyarrow as pa
 
-    from dedup_domains_spark.functions.signatures import (
-        _batch_probes_arrow, _batch_signatures_arrow,
-    )
+    from dedup_domains_spark.functions.signatures import _batch_signatures_arrow
 
     cfg = DedupConfig()
     corpus = gen_code_corpus(120)
     arr = pa.array(corpus.files.content.tolist(), type=pa.string())
     full = _batch_signatures_arrow(arr, cfg)
-    probe = _batch_probes_arrow(arr, cfg)
+    probe = _batch_signatures_arrow(arr, cfg, fields=("probes",))
     for fld in ("n_tokens", "n_shingles", "probes"):
         assert probe.field(fld).equals(full.field(fld)), fld
     assert [f.name for f in probe.type] == ["n_tokens", "n_shingles", "probes"]
     # empty batch shape
-    empty = _batch_probes_arrow(pa.array([], type=pa.string()), cfg)
+    empty = _batch_signatures_arrow(
+        pa.array([], type=pa.string()), cfg, fields=("probes",)
+    )
     assert len(empty) == 0
 
 
@@ -266,9 +272,10 @@ def test_containment_df_cap_matches_python_twin(spark, monkeypatch, regime):
         monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 0)
     cfg = DedupConfig(containment_max_doc_freq=3)
     docs = _containment_docs(spark)
-    sig = add_signatures(docs, cfg, probes_only=True, repartition=4).localCheckpoint()
-    got = {(r.small_id, r.big_id)
-           for r in containment.containment_candidates(docs, sig, cfg).collect()}
+    sig = add_signatures(docs, cfg, fields=("probes",), repartition=4).localCheckpoint()
+    cand = containment.containment_candidates(
+        docs, sig, cfg, probe_filter=containment.collect_probe_filter(sig, cfg))
+    got = {(r.small_id, r.big_id) for r in cand.collect()}
 
     rows = {r.uid: r for r in sig.collect()}
     shingles = {
@@ -317,13 +324,14 @@ def test_containment_regime_switch_plans_shuffle_join(spark, monkeypatch):
 
     cfg = DedupConfig(min_containee_tokens=8)
     docs = _containment_docs(spark)
-    sig = add_signatures(docs, cfg, probes_only=True, repartition=4).localCheckpoint()
-    broadcast = containment.contained_pairs(docs, sig, cfg)
+    sig = add_signatures(docs, cfg, fields=("probes",), repartition=4).localCheckpoint()
+    probe_filter = containment.collect_probe_filter(sig, cfg)
+    broadcast = containment.contained_pairs(docs, sig, cfg, probe_filter=probe_filter)
     joins = shingle_joins(broadcast)
     assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], joins
     monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 10)
     assert containment.collect_probe_filter(sig, cfg) is None
-    shuffled = containment.contained_pairs(docs, sig, cfg)
+    shuffled = containment.contained_pairs(docs, sig, cfg, probe_filter=None)
     joins = shingle_joins(shuffled)
     assert len(joins) == 1 and "SortMergeJoin" in joins[0], joins
 

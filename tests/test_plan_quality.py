@@ -62,7 +62,9 @@ def test_signature_stage_repartitions(spark):
 def test_containment_probe_side_broadcasts(spark):
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import containment_candidates
+    from dedup_domains_spark.operators.containment import (
+        collect_probe_filter, containment_candidates,
+    )
     from dedup_domains_spark.sources.code_corpus import with_row_identity
 
     cfg = DedupConfig()
@@ -75,7 +77,8 @@ def test_containment_probe_side_broadcasts(spark):
     )
     df = with_row_identity(docs)
     sig = add_signatures(df.select("uid", "content"), cfg)
-    cand = containment_candidates(df, sig, cfg)
+    cand = containment_candidates(
+        df, sig, cfg, probe_filter=collect_probe_filter(sig, cfg))
     plan = _formatted(cand)
     # probes broadcast to the postings (the huge side)
     assert "BroadcastHashJoin" in plan, plan
@@ -90,17 +93,21 @@ def test_containment_postings_read_in_one_udf_pass(spark):
 
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import containment_candidates
+    from dedup_domains_spark.operators.containment import (
+        collect_probe_filter, containment_candidates,
+    )
 
     cfg = DedupConfig()
     df = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").alias("uid"), F.col("text").alias("content")
     )
-    sig = add_signatures(df, cfg, probes_only=True).localCheckpoint()
+    sig = add_signatures(df, cfg, fields=("probes",)).localCheckpoint()
+    probe_filter = collect_probe_filter(sig, cfg)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = _formatted(containment_candidates(df, sig, cfg))
+        plan = _formatted(
+            containment_candidates(df, sig, cfg, probe_filter=probe_filter))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
@@ -114,7 +121,9 @@ def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
     accumulating spill in a recurring incremental loop)."""
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import contained_pairs
+    from dedup_domains_spark.operators.containment import (
+        collect_probe_filter, contained_pairs,
+    )
     from dedup_domains_spark.sources.code_corpus import with_row_identity
 
     cfg = DedupConfig()
@@ -136,7 +145,8 @@ def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
     before = _disk_only_ids()  # session is shared — other tests may cache
     df = with_row_identity(docs)
     sig = add_signatures(df.select("uid", "content"), cfg)
-    contained_pairs(df, sig, cfg).count()
+    contained_pairs(
+        df, sig, cfg, probe_filter=collect_probe_filter(sig, cfg)).count()
     leaked = _disk_only_ids() - before
     assert leaked == set(), f"retained DISK_ONLY blocks: {leaked}"
 
@@ -240,34 +250,6 @@ def test_bucketed_corpus_table_elides_join_shuffle(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         spark.sql("DROP TABLE IF EXISTS corpus_bucketed")
-
-
-def test_embedding_near_dup_no_cartesian(spark):
-    """The bucketed embedding near-dup path must never degrade to an O(n²)
-    cartesian/nested-loop join (VERDICT r01 item 2)."""
-    from dedup_domains_spark.plans.queries import QUERIES
-
-    df = QUERIES["embedding_near_dup_pairs"].spark_fn(spark, SF)
-    plan = _formatted(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-def test_semdedup_within_cell_join_shape(spark):
-    """semdedup_cells: the only all-pairs structure allowed is the
-    vector-by-centroid scoring (tiny broadcast side, like ann_ivf_topk);
-    the member-by-member comparison must be an equi-join on the cell key —
-    at scale the cell is the shuffle key and k bounds the in-cell
-    quadratic, so a CartesianProduct among members would be the O(n²)
-    failure the operator exists to avoid."""
-    from dedup_domains_spark.plans.queries import QUERIES
-
-    df = QUERIES["semdedup_cells"].spark_fn(spark, SF)
-    plan = _formatted(df)
-    assert "CartesianProduct" not in plan, plan
-    # the within-cell pair join keys on cent_id (an equi-join), visible as a
-    # hash/sort-merge join keyed on cent_id in the formatted plan
-    assert "cent_id" in plan, plan
 
 
 def test_exact_dedup_single_shuffle(spark):

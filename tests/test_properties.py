@@ -1,7 +1,8 @@
 """Property-based and randomized-oracle tests.
 
 1. The vectorized byte-level tokenizer must agree with its regex
-   specification (``\\w+|[^\\w\\s]``) on token COUNTS for ASCII text
+   specification (``\\w+|[^\\w\\s]`` over UTF-8 bytes, every byte >= 0x80
+   a word byte) on token COUNTS, null entries counting as empty text
    (hypothesis-generated).
 2. Randomized domain tables: the Spark domain-mode dedup must match an
    independent in-test oracle implementing the reference's semantics
@@ -19,31 +20,47 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from dedup_domains_spark.functions.tokenize_np import batch_token_hashes
+from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments_arrow
 
-_SPEC = re.compile(r"\w+|[^\w\s]", re.ASCII)
+# bytes pattern: \w and \s are ASCII-only, and any byte >= 0x80 is a word byte
+_SPEC = re.compile(rb"[\w\x80-\xff]+|[^\w\s\x80-\xff]")
+_K = 5
 
-ascii_text = st.text(
-    alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E), max_size=400
+texts_or_null = st.one_of(
+    st.none(),
+    st.text(
+        alphabet=st.one_of(
+            st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+            st.sampled_from("\t\n\u00e9\u00df\u4e2d\U0001f600"),
+        ),
+        max_size=400,
+    ),
 )
 
 
-@given(st.lists(ascii_text, min_size=1, max_size=20))
+def _segments(texts):
+    import pyarrow as pa
+
+    return batch_shingle_segments_arrow(pa.array(texts, type=pa.string()), _K)
+
+
+@given(st.lists(texts_or_null, min_size=1, max_size=20))
 @settings(max_examples=200, deadline=None)
 def test_tokenizer_counts_match_regex_spec(texts):
-    th, doc_of = batch_token_hashes(texts)
-    counts = np.bincount(doc_of, minlength=len(texts))
+    _, _, _, n_tokens = _segments(texts)
     for i, t in enumerate(texts):
-        assert counts[i] == len(_SPEC.findall(t)), repr(t)
+        want = len(_SPEC.findall((t or "").encode("utf-8")))
+        assert n_tokens[i] == want, repr(t)
 
 
-@given(ascii_text, ascii_text)
+@given(texts_or_null, texts_or_null)
 @settings(max_examples=100, deadline=None)
 def test_token_hash_equality_iff_token_equality_mostly(a, b):
-    """Identical texts hash identically; token hashes are order-preserving."""
-    th1, _ = batch_token_hashes([a, a])
-    half = len(th1) // 2
-    assert list(th1[:half]) == list(th1[half:])
+    """Identical texts tokenize and shingle identically wherever they sit in
+    a batch."""
+    sh, off, cnt, n_tokens = _segments([a, b, a])
+    assert n_tokens[0] == n_tokens[2]
+    assert list(sh[off[0]:off[0] + cnt[0]]) == list(sh[off[2]:off[2] + cnt[2]])
 
 
 # ---------------------------------------------------------------------------

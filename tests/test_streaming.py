@@ -61,6 +61,28 @@ def test_stream_exact_dedup(spark, stream_source_dir, tmp_path):
     assert "content_sha256" in got.columns
 
 
+def test_stream_signatures_match_batch(spark, stream_source_dir, tmp_path):
+    """stream_signatures runs the batch signature kernel: every streamed row
+    carries the signature columns add_signatures gives the same row."""
+    from dedup_domains_spark.functions.signatures import add_signatures
+
+    cols = ["repo", "path", "commit", "n_tokens", "n_shingles", "minhash",
+            "simhash", "probes"]
+    batch = spark.read.parquet(stream_source_dir)
+    src = spark.readStream.schema(batch.schema).parquet(stream_source_dir)
+    _run_available_now(stream_signatures(src), str(tmp_path), "sig_stream")
+
+    def rows(df):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(cols).collect()
+        )
+
+    want = rows(add_signatures(batch, DedupConfig()))
+    assert len(want) == batch.count()
+    assert rows(spark.sql("select * from sig_stream")) == want
+
+
 def test_stream_signatures_and_band_dedup(spark, stream_source_dir, tmp_path):
     src = (
         spark.readStream.schema(

@@ -21,8 +21,9 @@ def test_zip_imports_standalone(tmp_path):
         "dedup_domains_spark.operators.containment, "
         "dedup_domains_spark.plans.pipeline, "
         "dedup_domains_spark.streaming.dedup_stream; "
-        "from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments; "
-        "sh, off, cnt, nt = batch_shingle_segments(['a b c d e f g h'], 7); "
+        "import pyarrow as pa; "
+        "from dedup_domains_spark.functions.tokenize_np import batch_shingle_segments_arrow; "
+        "sh, off, cnt, nt = batch_shingle_segments_arrow(pa.array(['a b c d e f g h']), 7); "
         "assert cnt[0] == 2, cnt; print('ZIPOK')"
     )
     r = subprocess.run(
