@@ -38,9 +38,10 @@ class DedupConfig:
     use_exact_jaccard: bool = False    # exact shingle-set Jaccard instead of estimate
 
     # --- containment (parent-domain subsumption analog, D2) ---
-    containment_probe_shingles: int = 8    # bottom-s sketch probes per doc
     containment_max_doc_freq: int = 1000   # keep postings whose DF is at most this
-    min_containee_tokens: int = 32         # don't bother subsuming tiny docs
+    # don't bother subsuming tiny docs; also sets the winnowing window,
+    # min_containee_tokens - shingle_k + 1 shingles (functions/signatures)
+    min_containee_tokens: int = 32
     # verify strategy for candidate (containee, container) pairs:
     #   "scan"         — independent C-level substring scan per pair
     #   "suffix_array" — one suffix array per container, binary search per
@@ -66,6 +67,12 @@ class DedupConfig:
             raise ValueError(
                 f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) "
                 f"must equal num_perm ({self.num_perm})"
+            )
+        if self.min_containee_tokens < self.shingle_k:
+            raise ValueError(
+                f"min_containee_tokens ({self.min_containee_tokens}) must be "
+                f"at least shingle_k ({self.shingle_k}): a containee needs "
+                f"one whole winnowing window"
             )
         if self.containment_verify not in ("scan", "suffix_array"):
             raise ValueError(

@@ -1,5 +1,5 @@
-"""Vectorized signature computation — shingling, MinHash, SimHash, bottom-k
-containment probes — in ONE Arrow batch pass over ``content``.
+"""Vectorized signature computation — shingling, MinHash, SimHash, winnowed
+containment fingerprints — in ONE Arrow batch pass over ``content``.
 
 This is the generalization of the reference's per-row label decomposition
 (reference src/domain.c:236-318) to code shingles (SURVEY.md §2.3, T1).
@@ -33,7 +33,7 @@ _P31 = np.uint64(_MERSENNE31)
 # full struct would pay the 128-permutation MinHash loop and the SimHash
 # bit transpose for fields it drops. add_signatures(fields=...) emits only
 # the requested signature fields and the kernel skips the arithmetic behind
-# the omitted ones: containment needs only probes (tokenize + head-slice),
+# the omitted ones: containment needs only fingerprints (tokenize + winnow),
 # the SimHash block sweep needs only simhash (skips the perm loop), the LSH
 # band sweep needs only minhash (skips the bit transpose). Every emitted
 # field is bit-identical across variants — same tokenizer, same math.
@@ -41,13 +41,13 @@ _FIELD_TYPES = {
     # int32, not long: every MinHash value is < 2^31-1 (mod-Mersenne31
     # universal hashing), and minhash is the fattest column crossing the
     # candidate/verify shuffles — 128 values/doc at 4 bytes instead of 8
-    # halves the dominant shuffle payload at 10^12-file scale. probes stay
-    # int64 (they are raw 64-bit shingle hashes).
+    # halves the dominant shuffle payload at 10^12-file scale. fingerprints
+    # stay int64 (they are raw 64-bit shingle hashes).
     "minhash": ArrayType(IntegerType()),
     "simhash": LongType(),
-    "probes": ArrayType(LongType()),
+    "fingerprints": ArrayType(LongType()),
 }
-_ALL_FIELDS = ("minhash", "simhash", "probes")
+_ALL_FIELDS = ("minhash", "simhash", "fingerprints")
 
 
 def _sig_struct(fields: tuple[str, ...]) -> StructType:
@@ -60,10 +60,11 @@ def _sig_struct(fields: tuple[str, ...]) -> StructType:
     )
 
 
-# NOTE: the full shingle set is deliberately NOT emitted/cached — materializing
-# ~500 longs/doc through Arrow and the block cache costs far more (heap
-# pressure poisons every downstream stage) than re-deriving postings with
-# explode_shingles_udf where containment needs them.
+# NOTE: the full shingle set is deliberately NOT emitted/cached — ~500
+# longs/doc through Arrow and the block cache would cost heap pressure in
+# every downstream stage. Containment reads the winnowed fingerprints
+# instead (about 2/(w+1) of the positional shingles), and its postings come
+# from them, so content is tokenized once.
 
 
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -144,17 +145,36 @@ def _minhash_simhash(
     return sig, sim.view(np.int64) if want_simhash else None
 
 
-def _segment_take_indices(
-    offsets: np.ndarray, take: np.ndarray
-) -> np.ndarray:
-    """Flat gather indices selecting the first take[i] elements of each
-    segment starting at offsets[i] — vectorized per-doc head-slice."""
-    total = int(take.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    ends = np.cumsum(take)
-    within = np.arange(total, dtype=np.int64) - np.repeat(ends - take, take)
-    return np.repeat(offsets.astype(np.int64), take) + within
+def _winnow(pos: np.ndarray, n_tokens: np.ndarray, k: int, w: int
+            ) -> tuple[np.ndarray, np.ndarray]:
+    """Winnowing (Schleimer, Wilkerson and Aiken, SIGMOD 2003) over the
+    positional shingles: each doc's fingerprints are the distinct minima of
+    its w-shingle windows, sorted. -> (flat int64 values, counts per doc).
+    A doc with fewer than w positional shingles has none.
+
+    Sliding minimum after van Herk / Gil-Werman: cut the flat sequence into
+    blocks of w; the window starting at i is min(suffix-min of i's block
+    at i, prefix-min of the next block at i + w - 1). Windows that cross a
+    doc boundary are dropped, as the tokenizer drops crossing shingles."""
+    ndocs = len(n_tokens)
+    pdoc = np.repeat(np.arange(ndocs), np.maximum(n_tokens - k + 1, 0))
+    n = len(pos)
+    if n < w:
+        return np.empty(0, np.int64), np.zeros(ndocs, np.int64)
+    blocks = np.full(-(-n // w) * w, np.iinfo(np.uint64).max, np.uint64)
+    blocks[:n] = pos
+    blocks = blocks.reshape(-1, w)
+    prefix = np.minimum.accumulate(blocks, axis=1).ravel()
+    suffix = np.minimum.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
+    m = n - w + 1
+    valid = pdoc[:m] == pdoc[w - 1:]
+    mins = np.minimum(suffix[:m], prefix[w - 1:n])[valid]
+    mdoc = pdoc[:m][valid]
+    order = np.lexsort((mins, mdoc))
+    mins, mdoc = mins[order], mdoc[order]
+    keep = np.ones(len(mins), dtype=bool)
+    keep[1:] = (mins[1:] != mins[:-1]) | (mdoc[1:] != mdoc[:-1])
+    return mins[keep].view(np.int64), np.bincount(mdoc[keep], minlength=ndocs)
 
 
 def _batch_signatures_arrow(arr, cfg: DedupConfig,
@@ -162,19 +182,21 @@ def _batch_signatures_arrow(arr, cfg: DedupConfig,
     """Arrow-native signature batch: pyarrow string Array in, pyarrow
     StructArray out. Zero-copy on BOTH sides — the tokenizer reads the
     Arrow UTF-8 buffer directly (no Python str materialization, no
-    re-encode) and minhash/probes are emitted as ListArrays built from the
-    flat numpy outputs (no per-row list building, no pandas assembly).
+    re-encode) and minhash/fingerprints are emitted as ListArrays built
+    from the flat numpy outputs (no per-row list building, no pandas
+    assembly).
 
     ``fields`` limits the emitted signature columns AND the arithmetic:
     without "minhash" the 128-permutation loop is skipped, without
-    "simhash" the bit transpose is skipped, without "probes" the
-    head-slice gather is skipped. Emitted values are bit-identical across
-    variants (same tokenizer output feeds the same math)."""
+    "simhash" the bit transpose is skipped, without "fingerprints" the
+    winnow is skipped. Emitted values are bit-identical across variants
+    (same tokenizer output feeds the same math)."""
     import pyarrow as pa
 
     ndocs = len(arr)
-    flat, offsets, counts, n_tokens = batch_shingle_segments_arrow(
-        arr, cfg.shingle_k
+    want_fp = "fingerprints" in fields
+    flat, offsets, counts, n_tokens, *pos = batch_shingle_segments_arrow(
+        arr, cfg.shingle_k, positional=want_fp
     )
     want_mh, want_sh = "minhash" in fields, "simhash" in fields
     sig = simhashes = None
@@ -202,14 +224,17 @@ def _batch_signatures_arrow(arr, cfg: DedupConfig,
     if want_sh:
         children.append(pa.array(simhashes, type=pa.int64()))
         names.append("simhash")
-    if "probes" in fields:
-        take = np.minimum(counts, cfg.containment_probe_shingles)
-        probe_vals = flat.view(np.int64)[_segment_take_indices(offsets, take)]
+    if want_fp:
+        # w = the shingles of a containee of exactly min_containee_tokens
+        # tokens: every containee holds a whole window, so all its
+        # fingerprints are fingerprints of any doc it lies in
+        w = cfg.min_containee_tokens - cfg.shingle_k + 1
+        fp, fp_counts = _winnow(pos[0], n_tokens, cfg.shingle_k, w)
         children.append(pa.ListArray.from_arrays(
-            pa.array(np.concatenate(([0], np.cumsum(take))).astype(np.int32)),
-            pa.array(probe_vals, type=pa.int64()),
+            pa.array(np.concatenate(([0], np.cumsum(fp_counts))).astype(np.int32)),
+            pa.array(fp, type=pa.int64()),
         ))
-        names.append("probes")
+        names.append("fingerprints")
     return pa.StructArray.from_arrays(children, names=names)
 
 
@@ -217,11 +242,11 @@ def add_signatures(
     df: DataFrame, cfg: DedupConfig, repartition: int | None = None,
     fields: tuple[str, ...] = _ALL_FIELDS,
 ) -> DataFrame:
-    """Attach (n_tokens, n_shingles, minhash, simhash, probes) — or, with
-    ``fields=(...)`` (subset of minhash/simhash/probes), just the named
-    signature columns, with the kernel skipping the arithmetic behind the
-    omitted ones: no "minhash" drops the 128-permutation loop, no
-    "simhash" drops the bit transpose, no "probes" drops the head-slice.
+    """Attach (n_tokens, n_shingles, minhash, simhash, fingerprints) — or,
+    with ``fields=(...)`` (subset of minhash/simhash/fingerprints), just the
+    named signature columns, with the kernel skipping the arithmetic behind
+    the omitted ones: no "minhash" drops the 128-permutation loop, no
+    "simhash" drops the bit transpose, no "fingerprints" drops the winnow.
     Emitted values are bit-identical across variants, so any field-pruned
     table is interchangeable with the full one for the fields it carries.
 
@@ -257,47 +282,3 @@ def add_signatures(
         .select("*", "_sig.*")
         .drop("_sig")
     )
-
-
-def explode_shingles_udf(cfg: DedupConfig, keep_only: np.ndarray | None = None):
-    """pandas_udf: content -> array of distinct 64-bit shingle hashes (as
-    signed longs). Used only by the containment inverted index — derived
-    map-side, flows straight into the postings join, never cached.
-
-    keep_only: optional sorted int64 array (the distinct containment-probe
-    shingles); when given, only matching hashes are emitted, shrinking the
-    posting mass executor-side before any shuffle. The array ships in the
-    UDF closure — the broadcast regime, where the probe set is
-    driver-sized by definition (operators/containment.collect_probe_filter)."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(ArrayType(LongType()))
-    def _sh(texts):
-        import pyarrow as pa
-
-        flat, offsets, counts, _ = batch_shingle_segments_arrow(
-            texts, cfg.shingle_k
-        )
-        signed = flat.view(np.int64)
-        if keep_only is None or len(keep_only) == 0:
-            if keep_only is not None:
-                signed = signed[:0]
-                counts = np.zeros_like(counts)
-            out_off = np.concatenate(([0], np.cumsum(counts)))
-        else:
-            # membership via searchsorted on the sorted filter (whole-batch)
-            pos = np.searchsorted(keep_only, signed)
-            pos[pos >= len(keep_only)] = 0
-            hit = keep_only[pos] == signed
-            kept = (
-                np.add.reduceat(hit, offsets) if len(signed) else
-                np.zeros(len(counts), dtype=np.int64)
-            )
-            out_off = np.concatenate(([0], np.cumsum(kept)))
-            signed = signed[hit]
-        return pa.ListArray.from_arrays(
-            pa.array(out_off.astype(np.int32)),
-            pa.array(signed, type=pa.int64()),
-        )
-
-    return _sh

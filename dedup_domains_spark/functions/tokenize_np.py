@@ -124,8 +124,8 @@ _CHUNK_DOCS = 128
 
 
 def batch_shingle_segments_arrow(
-    arr, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    arr, k: int, positional: bool = False
+) -> tuple[np.ndarray, ...]:
     """pyarrow string Array -> (shingles uint64 flat sorted-unique per doc,
     offsets int64 per doc, counts int64 per doc, n_tokens int64 per doc).
 
@@ -135,13 +135,18 @@ def batch_shingle_segments_arrow(
     ascending (unsigned). Docs with fewer than k tokens get one fallback
     shingle (polynomial over all their tokens; empty doc -> splitmix(0)),
     so exact duplicates always co-bucket. Large batches are processed in
-    cache-resident sub-batches of _CHUNK_DOCS docs (see note above)."""
+    cache-resident sub-batches of _CHUNK_DOCS docs (see note above).
+
+    ``positional=True`` appends a fifth array: every doc's k-token shingles
+    in text order, before the per-doc sort and dedupe, docs back to back.
+    Doc i contributes max(n_tokens[i] - k + 1, 0) of them (no fallback
+    shingle), so the segments follow from n_tokens alone."""
     import pyarrow as pa
 
     ndocs = len(arr)
     if ndocs == 0:
         e64, ei = np.empty(0, np.uint64), np.empty(0, np.int64)
-        return e64, ei, ei.copy(), ei.copy()
+        return (e64, ei, ei.copy(), ei.copy()) + ((e64.copy(),) if positional else ())
     if arr.null_count:
         import pyarrow.compute as pc
 
@@ -158,18 +163,21 @@ def batch_shingle_segments_arrow(
         c1 = min(c0 + _CHUNK_DOCS, ndocs)
         th, doc_of = _token_hashes_from_buffer(data, off[c0:c1 + 1])
         parts.append(_shingle_segments_from_tokens(th, doc_of, c1 - c0, k))
-    if len(parts) == 1:
-        return parts[0]
     sh = np.concatenate([p[0] for p in parts])
     counts = np.concatenate([p[2] for p in parts])
     n_tokens = np.concatenate([p[3] for p in parts])
     offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    if positional:
+        return sh, offsets, counts, n_tokens, np.concatenate([p[4] for p in parts])
     return sh, offsets, counts, n_tokens
 
 
 def _shingle_segments_from_tokens(
     th: np.ndarray, doc_of: np.ndarray, ndocs: int, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, ...]:
+    """Per-doc sorted-unique shingles of one sub-batch, plus its positional
+    shingles as the fifth element. ``doc_of`` is non-decreasing (tokens come
+    in text order), so each doc's tokens and windows are contiguous."""
     n_tokens = np.bincount(doc_of, minlength=ndocs).astype(np.int64)
 
     T = len(th)
@@ -185,20 +193,24 @@ def _shingle_segments_from_tokens(
         sh = np.empty(0, dtype=np.uint64)
         sh_doc = np.empty(0, dtype=np.int64)
 
-    # fallback for short docs: one polynomial shingle over all their tokens
+    positional = sh
+
+    # fallback for short docs: one polynomial shingle over all their tokens.
+    # The Horner form sum(x_j * _POLY^(n-1-j)) is a weighted sum, and a
+    # short doc has at most k-1 tokens, so a k-entry power table covers it.
     short = np.nonzero(n_tokens < k)[0]
     if len(short) > 0:
-        tok_order = np.argsort(doc_of, kind="stable")
-        tok_sorted = th[tok_order]
-        tok_offsets = np.concatenate(([0], np.cumsum(n_tokens)))
-        extra = np.empty(len(short), dtype=np.uint64)
-        for i, d in enumerate(short):
-            seg = tok_sorted[tok_offsets[d]:tok_offsets[d + 1]]
-            v = np.uint64(0)
-            for x in seg:
-                v = v * _POLY + x
-            extra[i] = _splitmix(v)
-        sh = np.concatenate([sh, extra])
+        with np.errstate(over="ignore"):
+            powers = np.cumprod(np.concatenate(
+                ([np.uint64(1)], np.full(k - 1, _POLY, dtype=np.uint64))
+            ))
+            tok = np.nonzero(n_tokens[doc_of] < k)[0]
+            d = doc_of[tok]
+            tok_start = np.concatenate(([0], np.cumsum(n_tokens)[:-1]))
+            expo = n_tokens[d] - 1 - (tok - tok_start[d])
+            extra = np.zeros(len(short), dtype=np.uint64)
+            np.add.at(extra, np.searchsorted(short, d), th[tok] * powers[expo])
+        sh = np.concatenate([sh, _splitmix(extra)])
         sh_doc = np.concatenate([sh_doc, short.astype(np.int64)])
 
     # segmented sort + dedupe: order by (doc, shingle)
@@ -212,4 +224,4 @@ def _shingle_segments_from_tokens(
 
     counts = np.bincount(sh_doc, minlength=ndocs).astype(np.int64)
     offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    return sh, offsets, counts, n_tokens
+    return sh, offsets, counts, n_tokens, positional

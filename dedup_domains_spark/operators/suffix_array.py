@@ -2,9 +2,9 @@
 reference's parent-domain subsumption rule (src/domaintree.c:330-339: a record
 wholly covered by another is dropped), for the code-scale pipeline.
 
-Why a suffix array at all: the probe inverted index (operators/containment.py)
-produces candidate (small, big) pairs in which one container doc is typically
-probed by MANY containee candidates (boilerplate carriers, license files,
+Why a suffix array at all: the fingerprint inverted index
+(operators/containment.py) produces candidate (small, big) pairs in which one
+container doc is typically probed by MANY containee candidates (boilerplate carriers, license files,
 vendored headers). Verifying each candidate with an independent `small in big`
 scan is O(sum |big| * candidates_per_big); building one suffix array per
 container amortizes that to O(|big| log |big|) once plus
@@ -165,17 +165,13 @@ def suffix_verify_containment(
 
 
 def suffix_contained_pairs(
-    df: DataFrame, sig_df: DataFrame, cfg, id_col: str = "uid",
-    repartition: int | None = None, *, probe_filter,
+    df: DataFrame, sig_df: DataFrame, cfg, id_col: str = "uid"
 ) -> DataFrame:
-    """Probe-index candidates (operators/containment.containment_candidates)
+    """Fingerprint-index candidates (operators/containment.containment_candidates)
     verified by per-container suffix arrays: the full D2-analog containment
-    operator with the suffix-array verify path. ``repartition`` and
-    ``probe_filter`` mean what they mean for contained_pairs."""
+    operator with the suffix-array verify path."""
     from dedup_domains_spark.operators.containment import containment_candidates
 
-    cand = containment_candidates(
-        df, sig_df, cfg, id_col, repartition=repartition,
-        probe_filter=probe_filter,
+    return suffix_verify_containment(
+        containment_candidates(sig_df, cfg, id_col), df, id_col
     )
-    return suffix_verify_containment(cand, df, id_col)

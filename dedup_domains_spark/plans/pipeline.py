@@ -7,9 +7,10 @@ reference's single pass (main.c:110-183):
   survivors + cluster map + lineage + metrics.
 
 Scale shape:
-  * ``content`` is touched by exactly four stages (signature UDF,
-    containment postings explode, exact containment verify, final survivor
-    join); every wide shuffle carries (uid, hashes, signature) only —
+  * ``content`` is touched by exactly three stages (signature UDF, exact
+    containment verify, final survivor join); containment candidates come
+    from the signature pass's winnowed fingerprints, and every wide shuffle
+    carries (uid, hashes, signature) only —
     SURVEY.md §4's shuffle-volume rule.
   * near-dup stages run on exact-dedup representatives, not raw rows: at
     web scale exact dups are the bulk of the mass and collapse first
@@ -157,16 +158,13 @@ def _build_pipeline(
     # ---- signatures on exact representatives only ----
     sig_df = add_signatures(
         exact_reps.select("uid", "content"), cfg, repartition=0
-    ).select("uid", "n_tokens", "n_shingles", "minhash", "simhash", "probes")
+    ).select("uid", "n_tokens", "n_shingles", "minhash", "simhash", "fingerprints")
     sig_df = ckpt.stage(sig_df, "signatures").cache()
     # eager: four consumers fan out from sig_df (bands, blocks, verify twice,
-    # containment probes) — materialize once, linearly, before they race.
-    # The containment probe collection IS the materializing action (it scans
-    # every sig_df partition) — one driver barrier instead of two. Imported
-    # here, at call time, so a traced run can wrap it in its own module.
-    from dedup_domains_spark.operators.containment import collect_probe_filter
-
-    probe_filter = collect_probe_filter(sig_df, cfg)
+    # containment postings) — materialize once, linearly, before they race.
+    # The populated cache also gives the containment join real size
+    # statistics to choose broadcast or sort-merge from.
+    sig_df.count()
 
     # ---- candidate generation: fused LSH bands ∪ SimHash blocks ----
     candidates = fused_candidate_pairs(sig_df, cfg)
@@ -180,14 +178,11 @@ def _build_pipeline(
     near = ckpt.stage(near.select("id_a", "id_b"), "near_pairs")
 
     # ---- D2 analog: exact-substring containment ----
-    # repartition=0: exact_reps is already balanced (repartitioned at
-    # creation above) — skip the operator's defensive content shuffle.
     pairs_fn = (
         suffix_contained_pairs if cfg.containment_verify == "suffix_array"
         else contained_pairs
     )
-    contained = pairs_fn(exact_reps, sig_df, cfg, repartition=0,
-                         probe_filter=probe_filter)
+    contained = pairs_fn(exact_reps, sig_df, cfg)
     contained = ckpt.stage(contained, "contained_pairs").cache()
 
     # ---- edge union: near + containment + exact-dup membership ----

@@ -1458,7 +1458,7 @@ def minhash_lsh_pairs(spark, sf_dir):
 
     cfg = DedupConfig()
     # fan-out node: both band-table filters + both estimate joins read sig.
-    # fields=("minhash",): nothing here reads simhash/probes, so the kernel
+    # fields=("minhash",): nothing here reads simhash/fingerprints, so the kernel
     # skips the bit transpose + head-slice (guide §4 — don't compute what
     # you throw away); content is projected away so the checkpoint blocks
     # hold (uid, minhash) instead of the full corpus text (guide §2.3).
@@ -1502,7 +1502,7 @@ def simhash_pairs(spark, sf_dir):
 
     cfg = DedupConfig()
     # fan-out node: both block-table filters + both simhash joins read sig.
-    # fields=("simhash",): nothing here reads minhash/probes, so the kernel
+    # fields=("simhash",): nothing here reads minhash/fingerprints, so the kernel
     # skips the 128-permutation MinHash loop (guide §4); content is
     # projected away so the checkpoint holds (uid, simhash) only.
     sig = _materialize(
@@ -1834,13 +1834,13 @@ def scalar_functions(spark, sf_dir):
      AND length(a.text) < length(b.text)
      AND position(a.text IN b.text) > 0
     """,
-    "D2: probe inverted-index containment (scale path) vs brute-force oracle",
+    "D2: fingerprint inverted-index containment (scale path) vs brute-force oracle",
 )
 def containment_probe_pairs(spark, sf_dir):
-    """The SCALE-PATH containment operator (bottom-s probe sketch → inverted
+    """The SCALE-PATH containment operator (winnowed fingerprints → inverted
     index join → substring verify, operators/containment.py) checked against
-    the brute-force cross-join oracle: the probe path must find exactly the
-    pairs the O(n²) twin finds. This is the query the bench times; the
+    the brute-force cross-join oracle: the fingerprint path must find exactly
+    the pairs the O(n²) twin finds. This is the query the bench times; the
     cartesian variant (containment_pairs) remains only as the oracle twin."""
     from dedup_domains_spark.operators.containment import contained_pairs
 
@@ -1855,32 +1855,23 @@ def _containment_over_docs(spark, sf_dir, pairs_fn):
     r06: the operator is keyed on doc_id (id_col) directly — the old
     uid=xxhash64(repo,path,commit) keying added two remap joins at the end
     plus an md5/xxhash projection inside every scan subtree, for a key the
-    operator only needs to be unique. The oracled path (probe sketch →
-    inverted index → DF cap → full-house → substring verify) is unchanged."""
+    operator only needs to be unique. The oracled path (winnowed
+    fingerprints → inverted index → DF cap → full-house → substring verify)
+    is the pipeline's."""
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import collect_probe_filter
 
     cfg = DedupConfig(min_containee_tokens=8)
     df = _t(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("content")
     )
-    # fan-out node: probe collection (toPandas), probe explode, and the
-    # container-size join all read sig — without materialization the
-    # signature UDF runs 3x (once per consumer). fields=("probes",):
-    # containment never reads minhash/simhash, so the kernel skips the
-    # 128-perm loop. LAZY checkpoint (r06): the first action against sig is
-    # the probe collection, which scans every partition (the distinct's
-    # partial aggregate sits below the limit), so it doubles as the
-    # materializing job — one collect barrier instead of two, the same
-    # fusion run_pipeline uses. Later consumers read the populated blocks.
-    sig = add_signatures(
-        df, cfg, fields=("probes",),
+    # fan-out node: both sides of the posting self-join read sig, so it is
+    # materialized, without content. fields=("fingerprints",): containment
+    # never reads minhash/simhash, so the kernel skips the 128-perm loop.
+    sig = _materialize(add_signatures(
+        df, cfg, fields=("fingerprints",),
         repartition=spark.sparkContext.defaultParallelism,
-    ).localCheckpoint(eager=False)
-    probe_filter = collect_probe_filter(sig, cfg)
-    return pairs_fn(
-        df, sig, cfg, id_col="doc_id", probe_filter=probe_filter
-    ).select("small_id", "big_id")
+    ).drop("content"))
+    return pairs_fn(df, sig, cfg, id_col="doc_id").select("small_id", "big_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1896,11 +1887,11 @@ def _containment_over_docs(spark, sf_dir, pairs_fn):
      AND length(a.text) < length(b.text)
      AND position(a.text IN b.text) > 0
     """,
-    "D2: probe candidates + per-container SUFFIX-ARRAY verify vs brute force",
+    "D2: fingerprint candidates + per-container SUFFIX-ARRAY verify vs brute force",
 )
 def suffix_containment_pairs(spark, sf_dir):
-    """Same probe-index candidate generation as containment_probe_pairs, but
-    verified with the suffix-array path (operators/suffix_array.py): one
+    """Same fingerprint-index candidate generation as containment_probe_pairs,
+    but verified with the suffix-array path (operators/suffix_array.py): one
     Manber-Myers suffix array per container, binary search per containee —
     the many-candidates-per-container regime. Must find exactly the pairs
     the O(n^2) brute-force oracle finds (reference rule D2,

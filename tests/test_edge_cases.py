@@ -16,7 +16,7 @@ def test_empty_batch_signatures():
     out = _batch_signatures_arrow(pa.array([], type=pa.string()), DedupConfig())
     assert len(out) == 0
     assert [f.name for f in out.type] == [
-        "n_tokens", "n_shingles", "minhash", "simhash", "probes"
+        "n_tokens", "n_shingles", "minhash", "simhash", "fingerprints"
     ]
 
 
@@ -127,3 +127,11 @@ def test_config_rejects_bad_containment_verify():
 
     with _pytest.raises(ValueError, match="containment_verify"):
         DedupConfig(containment_verify="suffix-array")
+
+
+def test_config_rejects_containee_shorter_than_shingle():
+    """A containee must span one whole winnowing window of
+    min_containee_tokens - shingle_k + 1 shingles."""
+    with pytest.raises(ValueError, match="min_containee_tokens"):
+        DedupConfig(shingle_k=7, min_containee_tokens=6)
+    assert DedupConfig(shingle_k=7, min_containee_tokens=7)

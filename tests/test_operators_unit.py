@@ -91,9 +91,10 @@ def test_minhash_estimate_tracks_true_jaccard():
 
 
 def test_probes_only_batch_matches_full_signatures():
-    """The probes-only kernel must be bit-identical to the full path on the
-    fields it shares (n_tokens, n_shingles, probes) — containment treats a
-    probes-only signature table as interchangeable with the full one."""
+    """The fingerprints-only kernel (containment's probes) must be
+    bit-identical to the full path on the fields it shares (n_tokens,
+    n_shingles, fingerprints) — containment treats a fingerprints-only
+    signature table as interchangeable with the full one."""
     import pyarrow as pa
 
     from dedup_domains_spark.functions.signatures import _batch_signatures_arrow
@@ -102,13 +103,13 @@ def test_probes_only_batch_matches_full_signatures():
     corpus = gen_code_corpus(120)
     arr = pa.array(corpus.files.content.tolist(), type=pa.string())
     full = _batch_signatures_arrow(arr, cfg)
-    probe = _batch_signatures_arrow(arr, cfg, fields=("probes",))
-    for fld in ("n_tokens", "n_shingles", "probes"):
+    probe = _batch_signatures_arrow(arr, cfg, fields=("fingerprints",))
+    for fld in ("n_tokens", "n_shingles", "fingerprints"):
         assert probe.field(fld).equals(full.field(fld)), fld
-    assert [f.name for f in probe.type] == ["n_tokens", "n_shingles", "probes"]
+    assert [f.name for f in probe.type] == ["n_tokens", "n_shingles", "fingerprints"]
     # empty batch shape
     empty = _batch_signatures_arrow(
-        pa.array([], type=pa.string()), cfg, fields=("probes",)
+        pa.array([], type=pa.string()), cfg, fields=("fingerprints",)
     )
     assert len(empty) == 0
 
@@ -258,34 +259,42 @@ def _containment_docs(spark):
 
 
 @pytest.mark.parametrize("regime", ["broadcast", "shuffle"])
-def test_containment_df_cap_matches_python_twin(spark, monkeypatch, regime):
+def test_containment_df_cap_matches_python_twin(spark, regime):
     """containment_candidates against a pure-Python twin of its rule:
-    postings with DF above containment_max_doc_freq are dropped, and a
-    containee needs every surviving probe in a larger container. The corpus
-    makes the twin differ when the cap is removed or written as ``<``."""
-    from dedup_domains_spark.functions.signatures import (
-        add_signatures, explode_shingles_udf,
-    )
-    from dedup_domains_spark.operators import containment
+    fingerprint postings with DF above containment_max_doc_freq are
+    dropped, and a containee needs every surviving fingerprint in a larger
+    container. The corpus makes the twin differ when the cap is removed or
+    written as ``<``. The join carries no hint, so each regime sets
+    Catalyst's broadcast threshold and checks the join it planned."""
+    import re
 
-    if regime == "shuffle":
-        monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 0)
+    from dedup_domains_spark.functions.signatures import add_signatures
+    from dedup_domains_spark.operators.containment import containment_candidates
+
     cfg = DedupConfig(containment_max_doc_freq=3)
     docs = _containment_docs(spark)
-    sig = add_signatures(docs, cfg, fields=("probes",), repartition=4).localCheckpoint()
-    cand = containment.containment_candidates(
-        docs, sig, cfg, probe_filter=containment.collect_probe_filter(sig, cfg))
-    got = {(r.small_id, r.big_id) for r in cand.collect()}
+    sig = add_signatures(docs, cfg, fields=("fingerprints",), repartition=4
+                         ).drop("content").localCheckpoint()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64m" if regime == "broadcast" else "-1")
+    try:
+        cand = containment_candidates(sig, cfg)
+        plan = cand._sc._jvm.PythonSQLUtils.explainString(
+            cand._jdf.queryExecution(), "formatted")
+        got = {(r.small_id, r.big_id) for r in cand.collect()}
+    finally:
+        spark.conf.set(key, saved)
+    joins = [b.split("\n", 1)[0] for b in plan.split("\n\n")
+             if re.search(r"Left keys \[\d+\]: \[[^]]*\bshingle#", b)]
+    want_join = "BroadcastHashJoin" if regime == "broadcast" else "SortMergeJoin"
+    assert len(joins) == 1 and want_join in joins[0], joins
 
     rows = {r.uid: r for r in sig.collect()}
-    shingles = {
-        r.uid: set(r.sh) for r in docs.select(
-            "uid", explode_shingles_udf(cfg)(F.col("content")).alias("sh")
-        ).collect()
-    }
+    fps = {u: set(r.fingerprints) for u, r in rows.items()}
     df = {}
-    for sh in shingles.values():
-        for s in sh:
+    for fp in fps.values():
+        for s in fp:
             df[s] = df.get(s, 0) + 1
 
     def twin(keep):
@@ -293,9 +302,9 @@ def test_containment_df_cap_matches_python_twin(spark, monkeypatch, regime):
         for a, ra in rows.items():
             if ra.n_tokens < cfg.min_containee_tokens:
                 continue
-            probes = {p for p in ra.probes if keep(df[p])}
+            probes = {p for p in fps[a] if keep(df[p])}
             out |= {(a, b) for b, rb in rows.items()
-                    if probes and b != a and probes <= shingles[b]
+                    if probes and b != a and probes <= fps[b]
                     and rb.n_shingles > ra.n_shingles}
         return out
 
@@ -304,39 +313,3 @@ def test_containment_df_cap_matches_python_twin(spark, monkeypatch, regime):
     assert want != twin(lambda d: True)            # the cap matters here
     assert want != twin(lambda d: d < cap)         # and so does "<="
     assert got == want
-
-
-def test_containment_regime_switch_plans_shuffle_join(spark, monkeypatch):
-    """Past SHUFFLE_ABOVE_PROBES distinct probes, contained_pairs plans a
-    shuffle join on shingle (no probe-side BroadcastHashJoin) and returns
-    the same pairs as the broadcast regime. Either regime joins postings
-    to probes once."""
-    import re
-
-    from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators import containment
-
-    def shingle_joins(df):
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        return [b.split("\n", 1)[0] for b in plan.split("\n\n")
-                if re.search(r"Left keys \[\d+\]: \[[^]]*\bshingle#", b)]
-
-    cfg = DedupConfig(min_containee_tokens=8)
-    docs = _containment_docs(spark)
-    sig = add_signatures(docs, cfg, fields=("probes",), repartition=4).localCheckpoint()
-    probe_filter = containment.collect_probe_filter(sig, cfg)
-    broadcast = containment.contained_pairs(docs, sig, cfg, probe_filter=probe_filter)
-    joins = shingle_joins(broadcast)
-    assert len(joins) == 1 and "BroadcastHashJoin" in joins[0], joins
-    monkeypatch.setattr(containment, "SHUFFLE_ABOVE_PROBES", 10)
-    assert containment.collect_probe_filter(sig, cfg) is None
-    shuffled = containment.contained_pairs(docs, sig, cfg, probe_filter=None)
-    joins = shingle_joins(shuffled)
-    assert len(joins) == 1 and "SortMergeJoin" in joins[0], joins
-
-    def pairs(df):
-        return {(r.small_id, r.big_id) for r in df.collect()}
-
-    want = pairs(broadcast)
-    assert want and pairs(shuffled) == want

@@ -8,12 +8,14 @@ containee and keeps the container, and the per-row sha256 invariant.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from dedup_domains_spark.config import DedupConfig
 from dedup_domains_spark.datagen import gen_code_corpus
 from dedup_domains_spark.plans.pipeline import assert_sha_invariant, run_pipeline
+from dedup_domains_spark.sources.code_corpus import with_row_identity
 
 N_ROWS = 400
 
@@ -23,7 +25,6 @@ def test_pipeline_end_to_end(spark):
     files = spark.createDataFrame(corpus.files)
     res = run_pipeline(spark, files, DedupConfig())
 
-    from dedup_domains_spark.sources.code_corpus import with_row_identity
     exp = spark.createDataFrame(corpus.expected).withColumnRenamed("uid", "planted_uid")
     ident = (
         with_row_identity(files)
@@ -87,6 +88,34 @@ def test_pipeline_end_to_end(spark):
     # --- passthrough rows survive verbatim ---
     n_pass = res.survivors.filter("lang = 'binary'").count()
     assert n_pass == N_ROWS // 20  # one per block
+
+
+def test_small_excerpt_is_dropped_as_contained(spark):
+    """A verbatim excerpt of exactly min_containee_tokens (32) tokens,
+    planted in a 300-token file, is the smallest containee the winnowed
+    fingerprints must still find: it is dropped as contained and its
+    container is kept."""
+    import pandas as pd
+
+    corpus = gen_code_corpus(60).files
+    rng = np.random.default_rng(5)
+    words = [f"w{int(x)}" for x in rng.integers(0, 10**9, size=300)]
+    big, small = " ".join(words), " ".join(words[140:172])
+    assert DedupConfig().min_containee_tokens == 32
+    planted = pd.DataFrame({
+        "repo": ["plant/big", "plant/small"], "path": ["big.py", "small.py"],
+        "commit": ["b" * 40, "s" * 40], "lang": ["python", "python"],
+        "content": [big, small],
+    })
+    files = spark.createDataFrame(pd.concat([corpus, planted], ignore_index=True))
+    res = run_pipeline(spark, files, DedupConfig())
+    actions = {
+        r.repo: r.action for r in res.lineage.join(
+            with_row_identity(files).select("uid", "repo"), "uid"
+        ).filter(F.col("repo").startswith("plant/")).collect()
+    }
+    assert actions == {"plant/small": "dropped_contained",
+                       "plant/big": "kept_representative"}
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -153,8 +182,8 @@ def test_partition_stats_reconcile(spark):
 
 
 def test_pipeline_failure_restores_aqe(spark, monkeypatch):
-    """A stage that raises (CC non-convergence, the probe-filter cap) must
-    leave the session's AQE setting as the caller had it."""
+    """A stage that raises (CC non-convergence, say) must leave the
+    session's AQE setting as the caller had it."""
     import dedup_domains_spark.plans.pipeline as pipeline
 
     def _fail(*args, **kwargs):

@@ -59,58 +59,33 @@ def test_signature_stage_repartitions(spark):
     assert "RoundRobinPartitioning" in plan, plan
 
 
-def test_containment_probe_side_broadcasts(spark):
-    from dedup_domains_spark.config import DedupConfig
-    from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import (
-        collect_probe_filter, containment_candidates,
-    )
-    from dedup_domains_spark.sources.code_corpus import with_row_identity
-
-    cfg = DedupConfig()
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("source").alias("repo"),
-        F.col("doc_id").cast("string").alias("path"),
-        F.md5("text").alias("commit"),
-        "lang",
-        F.col("text").alias("content"),
-    )
-    df = with_row_identity(docs)
-    sig = add_signatures(df.select("uid", "content"), cfg)
-    cand = containment_candidates(
-        df, sig, cfg, probe_filter=collect_probe_filter(sig, cfg))
-    plan = _formatted(cand)
-    # probes broadcast to the postings (the huge side)
-    assert "BroadcastHashJoin" in plan, plan
-
-
 def test_containment_postings_read_in_one_udf_pass(spark):
-    """The DF-cap window and the probe join consume the postings once: the
-    containment_candidates plan (AQE off, as run_pipeline runs it) holds
-    exactly one ArrowEvalPython node — the postings explode — and no cached
-    relation."""
+    """The postings are the fingerprints of the one signature UDF pass:
+    over a materialized signature table the containment_candidates plan
+    (AQE off, as run_pipeline runs it) holds no ArrowEvalPython node, never
+    reads content, and computes the postings' DF-cap window once."""
     import re
 
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import (
-        collect_probe_filter, containment_candidates,
-    )
+    from dedup_domains_spark.operators.containment import containment_candidates
 
     cfg = DedupConfig()
     df = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").alias("uid"), F.col("text").alias("content")
     )
-    sig = add_signatures(df, cfg, fields=("probes",)).localCheckpoint()
-    probe_filter = collect_probe_filter(sig, cfg)
+    sig = add_signatures(df, cfg, fields=("fingerprints",)
+                         ).drop("content").localCheckpoint()
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = _formatted(
-            containment_candidates(df, sig, cfg, probe_filter=probe_filter))
+        plan = _formatted(containment_candidates(sig, cfg))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "content" not in plan, plan
+    assert len(re.findall(r"^Arguments: \[count\(1\) windowspecdefinition\(shingle#",
+                          plan, re.M)) == 1, plan
     assert "InMemoryRelation" not in plan, plan
 
 
@@ -121,9 +96,7 @@ def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
     accumulating spill in a recurring incremental loop)."""
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
-    from dedup_domains_spark.operators.containment import (
-        collect_probe_filter, contained_pairs,
-    )
+    from dedup_domains_spark.operators.containment import contained_pairs
     from dedup_domains_spark.sources.code_corpus import with_row_identity
 
     cfg = DedupConfig()
@@ -145,8 +118,7 @@ def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
     before = _disk_only_ids()  # session is shared — other tests may cache
     df = with_row_identity(docs)
     sig = add_signatures(df.select("uid", "content"), cfg)
-    contained_pairs(
-        df, sig, cfg, probe_filter=collect_probe_filter(sig, cfg)).count()
+    contained_pairs(df, sig, cfg).count()
     leaked = _disk_only_ids() - before
     assert leaked == set(), f"retained DISK_ONLY blocks: {leaked}"
 
@@ -154,14 +126,13 @@ def test_standalone_contained_pairs_leaves_no_disk_only_blocks(spark):
 def test_udf_fanout_queries_materialize_signatures(spark):
     """The UDF-heavy catalog queries materialize their signature table at
     construction (plans/queries._materialize): their FINAL plan must carry
-    zero ArrowEvalPython nodes — if the UDF reappears in the returned plan,
-    a branch re-derived signatures from source and the 3-4x concurrent
-    recompute (block cache does not dedupe in-flight work) is back.
+    no signature ArrowEvalPython node — if the UDF reappears in the
+    returned plan, a branch re-derived signatures from source and the 3-4x
+    concurrent recompute (block cache does not dedupe in-flight work) is
+    back. containment_probe_pairs keeps exactly one Python node, the
+    substring verify UDF over the candidate pairs."""
+    import re
 
-    containment_probe_pairs is excluded: its plan legitimately carries ONE
-    ArrowEvalPython — the postings shingle-explode over content, a separate
-    UDF pass read once by the DF-cap window and the probe join — so a
-    zero-node assertion can't distinguish that from a signature leak."""
     from dedup_domains_spark.plans.queries import QUERIES
 
     for name in ("minhash_lsh_pairs", "simhash_pairs"):
@@ -170,6 +141,10 @@ def test_udf_fanout_queries_materialize_signatures(spark):
             f"{name}: signature UDF leaked into the final plan — "
             f"fan-out node no longer materialized"
         )
+    plan = _formatted(QUERIES["containment_probe_pairs"].spark_fn(spark, SF))
+    nodes = re.findall(r"^\(\d+\) ArrowEvalPython.*$", plan, re.M)
+    assert len(nodes) == 1, plan
+    assert re.search(r"^Arguments: \[_contains\(", plan, re.M), plan
 
 
 def test_pipeline_job_budget(spark):

@@ -3,8 +3,12 @@
 1. The vectorized byte-level tokenizer must agree with its regex
    specification (``\\w+|[^\\w\\s]`` over UTF-8 bytes, every byte >= 0x80
    a word byte) on token COUNTS, null entries counting as empty text
-   (hypothesis-generated).
-2. Randomized domain tables: the Spark domain-mode dedup must match an
+   (hypothesis-generated); its short-doc fallback shingle is a Horner
+   polynomial, checked against a pure-Python one.
+2. Winnowed containment fingerprints: a token-aligned excerpt of at least
+   min_containee_tokens tokens has fingerprints, all of them its
+   container's.
+3. Randomized domain tables: the Spark domain-mode dedup must match an
    independent in-test oracle implementing the reference's semantics
    (max-strength election, first-wins ties, FULL-ancestor subsumption) —
    written from SURVEY.md §2 semantics, not from reference code.
@@ -61,6 +65,73 @@ def test_token_hash_equality_iff_token_equality_mostly(a, b):
     sh, off, cnt, n_tokens = _segments([a, b, a])
     assert n_tokens[0] == n_tokens[2]
     assert list(sh[off[0]:off[0] + cnt[0]]) == list(sh[off[2]:off[2] + cnt[2]])
+
+
+def _splitmix_py(z: int) -> int:
+    m = (1 << 64) - 1
+    z = (z + 0x9E3779B97F4A7C15) & m
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & m
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & m
+    return z ^ (z >> 31)
+
+
+def test_short_doc_fallback_matches_python_horner():
+    """A doc with fewer than k tokens gets one shingle, splitmix of the
+    Horner polynomial over its token hashes; computed without per-token
+    Python and without uint64 overflow warnings."""
+    import warnings
+
+    from dedup_domains_spark.functions.tokenize_np import (
+        _POLY, _token_hashes_joined,
+    )
+
+    texts = [None, "", "x", "a b c", "( ) = +",
+             "\u00e9t\u00e9 \u4e2d \U0001f600 ok", "long " * 9]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        sh, off, cnt, n_tokens = _segments(texts)
+    for i, t in enumerate(texts):
+        if n_tokens[i] >= _K:
+            continue
+        raw = (t or "").encode("utf-8") + b" "
+        th, _ = _token_hashes_joined(np.frombuffer(raw, np.uint8),
+                                     np.zeros(1, np.int64))
+        v = 0
+        for x in th.tolist():
+            v = (v * int(_POLY) + x) & ((1 << 64) - 1)
+        assert cnt[i] == 1, repr(t)
+        assert int(sh[off[i]]) == _splitmix_py(v), repr(t)
+    assert (n_tokens < _K).sum() == len(texts) - 1
+
+
+_WORDS = ["a", "b", "c", "foo", "bar_1", "(", ")", "=", "\u00e9", "if"]
+
+
+@given(st.data())
+@settings(max_examples=150, deadline=None)
+def test_excerpt_fingerprints_are_container_fingerprints(data):
+    """For any token-aligned excerpt A of a random doc B with at least
+    min_containee_tokens tokens, A has fingerprints and each is one of B's.
+    A small vocabulary makes repeated shingles and tied window minima."""
+    import pyarrow as pa
+
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.functions.signatures import _batch_signatures_arrow
+
+    cfg = data.draw(st.sampled_from([
+        DedupConfig(), DedupConfig(shingle_k=5, min_containee_tokens=9),
+        DedupConfig(shingle_k=3, min_containee_tokens=3),
+    ]))
+    m = cfg.min_containee_tokens
+    toks = data.draw(st.lists(st.sampled_from(_WORDS), min_size=m, max_size=3 * m))
+    n = data.draw(st.integers(min_value=m, max_value=len(toks)))
+    start = data.draw(st.integers(min_value=0, max_value=len(toks) - n))
+    texts = [" ".join(toks[start:start + n]), "\n".join(toks), "x y"]
+    out = _batch_signatures_arrow(pa.array(texts, type=pa.string()), cfg,
+                                  fields=("fingerprints",))
+    fa, fb = out.field("fingerprints").to_pylist()[:2]
+    assert fa, (n, toks)
+    assert set(fa) <= set(fb), (start, n, toks)
 
 
 # ---------------------------------------------------------------------------

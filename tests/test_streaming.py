@@ -67,7 +67,7 @@ def test_stream_signatures_match_batch(spark, stream_source_dir, tmp_path):
     from dedup_domains_spark.functions.signatures import add_signatures
 
     cols = ["repo", "path", "commit", "n_tokens", "n_shingles", "minhash",
-            "simhash", "probes"]
+            "simhash", "fingerprints"]
     batch = spark.read.parquet(stream_source_dir)
     src = spark.readStream.schema(batch.schema).parquet(stream_source_dir)
     _run_available_now(stream_signatures(src), str(tmp_path), "sig_stream")
