@@ -14,17 +14,22 @@ Rules implemented (SURVEY.md §2.1), with reference citations:
   O1 order-restoring output — per file ascending line numbers, regex rows
      inline (src/pfb_prune.c:639-659).
 
-Spark shape: the trie descent becomes (a) a window election per exact key and
-(b) an ancestor-explode anti-join against the FULL-key set. Both are pure
+Spark shape: the trie descent becomes (a) an ancestor-explode semi-join of
+the dedupable domains against the FULL keys — read from the input, since
+election keeps the max strength and a FULL key is any domain with a
+strength-1 row — giving the distinct subsumed domains, and (b) ONE window
+election per exact key over the rows whose domain is not subsumed. All pure
 Catalyst: whole-stage-codegen'd, shuffle on the domain / ancestor key, no
-Python in the hot path. At 100 TB: the ancestor explode is a bounded fan-out
-(avg label depth ~4), the FULL-key set is a fraction of the corpus and AQE
-picks broadcast vs shuffle join at runtime.
+Python in the hot path. The drop lineage and metrics need the election over
+every row, so they are built only when first read. At 100 TB: the ancestor
+explode is a bounded fan-out (avg label depth ~4), the FULL-key set is a
+fraction of the corpus and AQE picks broadcast vs shuffle join at runtime.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -32,9 +37,25 @@ from pyspark.sql import functions as F
 
 @dataclass
 class DomainModeResult:
+    """Domain-mode outputs. ``dropped`` and ``metrics`` are diagnostic and
+    built on first access (as ``PipelineResult.lineage`` is): a pass that
+    only writes survivors never plans the full election window they need."""
+
     survivors: DataFrame   # full rows, output-ordered (file_order, linenumber)
-    dropped: DataFrame     # rows removed, with a 'drop_reason' lineage column
-    metrics: DataFrame     # stage -> count
+    _dropped_fn: Callable[[], DataFrame] = None   # rows removed + 'drop_reason'
+    _metrics_fn: Callable[[], DataFrame] = None   # stage -> count
+
+    @property
+    def dropped(self) -> DataFrame:
+        if "_dropped" not in self.__dict__:
+            self.__dict__["_dropped"] = self._dropped_fn()
+        return self.__dict__["_dropped"]
+
+    @property
+    def metrics(self) -> DataFrame:
+        if "_metrics" not in self.__dict__:
+            self.__dict__["_metrics"] = self._metrics_fn()
+        return self.__dict__["_metrics"]
 
 
 def _ancestor_keys(labels_col):
@@ -50,86 +71,105 @@ def _ancestor_keys(labels_col):
     ).otherwise(F.array().cast("array<string>"))
 
 
+def _election_window():
+    """D1 + D3 (election half): per exact key, max strength first; ties
+    broken by insertion order (file CLI order, then line number) — the
+    deterministic total order replacing the reference's sequential
+    first-wins (SURVEY.md §4 item 4)."""
+    return Window.partitionBy("domain").orderBy(
+        F.col("match_strength").desc(), F.col("file_order").asc(),
+        F.col("linenumber").asc(),
+    )
+
+
 def dedup_dnsbl(df: DataFrame) -> DomainModeResult:
     """Run the full reference dedup over a dnsbl_lines DataFrame
     (schema: sources.dnsbl.DNSBL_SCHEMA).
     """
     df = df.cache()
-
-    ignored = df.filter(F.col("valid") != "ok").withColumn(
-        "drop_reason", F.concat(F.lit("ignored:"), F.col("valid"))
-    )
     valid = df.filter(F.col("valid") == "ok")
 
     # F2: route regex rows around the dedup entirely.
     regex_rows = valid.filter(F.col("match_strength") == 2)
     dedupable = valid.filter(F.col("match_strength") < 2)
 
-    # D1 + D3 (election half): per exact key, keep max strength; ties broken
-    # by insertion order (file CLI order, then line number) — the
-    # deterministic total order replacing the reference's sequential
-    # first-wins (SURVEY.md §4 item 4).
-    w = Window.partitionBy("domain").orderBy(
-        F.col("match_strength").desc(), F.col("file_order").asc(),
-        F.col("linenumber").asc(),
-    )
-    ranked = dedupable.withColumn("_rn", F.row_number().over(w))
-    elected = ranked.filter(F.col("_rn") == 1).drop("_rn")
-    exact_dropped = ranked.filter(F.col("_rn") > 1).drop("_rn").withColumn(
-        "drop_reason", F.lit("exact_or_weaker_duplicate")
+    # D2 + D3 (wipe half): a domain with a strict ancestor among the FULL
+    # keys is wiped, whatever its strength or position — the reference's
+    # eager drop (domaintree.c:330-339) and retroactive subtree wipe
+    # (domaintree.c:272-275) have the same fixpoint. Election keeps the max
+    # strength, so the FULL keys are exactly the domains with a strength-1
+    # dedupable row: read from the input, not from the election.
+    full_keys = dedupable.filter(F.col("match_strength") == 1).select(
+        F.col("domain").alias("_anc"))
+    subsumed_domains = (
+        dedupable.select(
+            "domain", F.explode(_ancestor_keys(F.split("domain", r"\."))).alias("_anc"))
+        .join(full_keys, "_anc", "leftsemi")
+        .select("domain").distinct()
     )
 
-    # D2 + D3 (wipe half): drop any elected row with a strict ancestor in the
-    # FULL-key set. Covers both insertion orders at once — the reference's
-    # eager drop (domaintree.c:330-339) and retroactive subtree wipe
-    # (domaintree.c:272-275) have the same fixpoint.
-    full_keys = (
-        elected.filter(F.col("match_strength") == 1)
-        .select(F.col("domain").alias("full_domain"))
+    # ONE election window, over the rows whose domain survives the wipe.
+    ranked = (
+        dedupable.join(subsumed_domains, "domain", "leftanti")
+        .withColumn("_rn", F.row_number().over(_election_window()))
     )
-    labels = F.split(F.col("domain"), r"\.")
-    with_anc = elected.withColumn("_anc", F.explode(_ancestor_keys(labels)))
-    subsumed_ids = (
-        with_anc.join(full_keys, with_anc["_anc"] == full_keys["full_domain"], "leftsemi")
-        .select("file_order", "linenumber")
-        .distinct()
-    )
-    subsumed = elected.join(subsumed_ids, ["file_order", "linenumber"], "leftsemi")\
-        .withColumn("drop_reason", F.lit("subsumed_by_full_parent"))
-    kept = elected.join(subsumed_ids, ["file_order", "linenumber"], "leftanti")
+    kept = ranked.filter(F.col("_rn") == 1).drop("_rn")
 
     # O1/A2: survivors ∪ carried-over regex rows, original order restored
     # (C semantics: regex rows inline at their line positions,
     # pfb_prune.c:639-659 + golden E2ETestRegexInput_2.fulle2e).
     survivors = kept.unionByName(regex_rows).orderBy("file_order", "linenumber")
 
-    dropped = exact_dropped.unionByName(subsumed).unionByName(ignored)
+    def _drops() -> tuple[DataFrame, DataFrame]:
+        """(exact_or_weaker_duplicate, subsumed_by_full_parent) rows, from
+        a full election over every dedupable row."""
+        ranked_all = dedupable.withColumn(
+            "_rn", F.row_number().over(_election_window()))
+        exact = ranked_all.filter(F.col("_rn") > 1).drop("_rn").withColumn(
+            "drop_reason", F.lit("exact_or_weaker_duplicate"))
+        subsumed = (
+            ranked_all.filter(F.col("_rn") == 1).drop("_rn")
+            .join(subsumed_domains, "domain", "leftsemi")
+            .select(*dedupable.columns)
+            .withColumn("drop_reason", F.lit("subsumed_by_full_parent"))
+        )
+        return exact, subsumed
 
-    # M1: per-stage metrics (reference counters at pfb_dnsbl_prune.py:233-241)
-    # in two passes over cached/derived frames: one conditional-sum agg over
-    # the input (incl. the reference's 63-byte label warning counter,
-    # src/domain.c:28,276-287 — row kept, occurrence counted) + one groupBy
-    # over the drop lineage.
-    label_warn = F.exists(
-        F.split(F.col("domain"), r"\."), lambda lbl: F.octet_length(lbl) > 63
-    ).cast("long")
-    base = df.agg(
-        F.count(F.lit(1)).alias("_input"),
-        F.sum((F.col("valid") != "ok").cast("long")).alias("_ignored"),
-        F.sum(((F.col("valid") == "ok") & (F.col("match_strength") == 2)).cast("long")).alias("_regex"),
-        F.sum(F.coalesce(label_warn, F.lit(0))).alias("_label_warn"),
-    ).selectExpr(
-        "stack(4, 'input', _input, 'ignored', _ignored, "
-        "'regex_carry_over', _regex, 'label_warn', _label_warn) as (stage, count)"
-    )
-    drops = (
-        exact_dropped.select(F.lit("exact_dropped").alias("stage"))
-        .unionByName(subsumed.select(F.lit("subsumed").alias("stage")))
-        .unionByName(kept.select(F.lit("kept").alias("stage")))
-        .groupBy("stage").count()
-    )
-    metrics = base.unionByName(drops)
-    return DomainModeResult(survivors=survivors, dropped=dropped, metrics=metrics)
+    def _dropped() -> DataFrame:
+        exact, subsumed = _drops()
+        ignored = df.filter(F.col("valid") != "ok").withColumn(
+            "drop_reason", F.concat(F.lit("ignored:"), F.col("valid")))
+        return exact.unionByName(subsumed).unionByName(ignored)
+
+    def _metrics() -> DataFrame:
+        # M1: per-stage metrics (reference counters at
+        # pfb_dnsbl_prune.py:233-241): one conditional-sum agg over the
+        # input (incl. the reference's 63-byte label warning counter,
+        # src/domain.c:28,276-287 — row kept, occurrence counted) + one
+        # groupBy over the drop lineage and the kept rows.
+        label_warn = F.exists(
+            F.split(F.col("domain"), r"\."), lambda lbl: F.octet_length(lbl) > 63
+        ).cast("long")
+        base = df.agg(
+            F.count(F.lit(1)).alias("_input"),
+            F.sum((F.col("valid") != "ok").cast("long")).alias("_ignored"),
+            F.sum(((F.col("valid") == "ok") & (F.col("match_strength") == 2)).cast("long")).alias("_regex"),
+            F.sum(F.coalesce(label_warn, F.lit(0))).alias("_label_warn"),
+        ).selectExpr(
+            "stack(4, 'input', _input, 'ignored', _ignored, "
+            "'regex_carry_over', _regex, 'label_warn', _label_warn) as (stage, count)"
+        )
+        exact, subsumed = _drops()
+        drops = (
+            exact.select(F.lit("exact_dropped").alias("stage"))
+            .unionByName(subsumed.select(F.lit("subsumed").alias("stage")))
+            .unionByName(kept.select(F.lit("kept").alias("stage")))
+            .groupBy("stage").count()
+        )
+        return base.unionByName(drops)
+
+    return DomainModeResult(survivors=survivors, _dropped_fn=_dropped,
+                            _metrics_fn=_metrics)
 
 
 def _seq():

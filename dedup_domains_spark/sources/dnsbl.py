@@ -6,20 +6,21 @@ pfb_dnsbl_prune.py:208-230) into the dnsbl_lines DataFrame schema.
 
 Validity rule = the strict Python rule (SURVEY.md §1.2): column count must be
 6 or 7; a 6-column row defaults to strength 0 (WEAK); col 6 must parse as an
-int in {0,1,2}; rows violating either are counted as *ignored*. Line framing
-normalizes \\r\\n, a final unterminated line still counts, and over-long
-lines are truncated at max_line_bytes (reference rw_pfb_csv.c:28-32,147-154,
-390-403). Labels over 255 bytes fail the row (reference src/domain.c:276-287).
+int in {0,1,2}; rows violating either are counted as *ignored*. Line framing:
+\\r\\n, a lone \\r and \\n each end a line, a leading UTF-8 BOM is dropped,
+a final unterminated line still counts, and over-long lines are cut at
+max_line_bytes BYTES (reference rw_pfb_csv.c:28-32,147-154,390-403). Labels
+over 255 bytes fail the row (reference src/domain.c:276-287).
 
-Scale shape: ``spark.read.text`` + ``input_file_name()`` + a per-file window
-over ``monotonically_increasing_id()`` reconstructs 1-based line numbers —
-the executors read and parse; the driver never opens a feed file. The id is
-(partitionIndex << 33 | rowInPartition); Spark assigns file splits to
-partition indices in split order (splitFiles emits offsets ascending and the
-size-descending packing sort is stable, so equal-size splits of one file keep
-offset order and the short tail split — the file's last — packs after them),
-so ordering by the id within a file is ordering by byte offset. All column
-parsing is Catalyst (split/element_at/rlike) — no per-row Python.
+Scale shape: each feed is read whole (``spark.read.text(wholetext=True)``)
+and split into lines in the task that read it, so a line number is the
+element's position in its file — numbered as the reference numbers them
+while it streams a feed, with no shuffle and no window. The file's CLI
+position and caller path come from literal map/array lookups on
+``input_file_name()``; the driver never opens a feed file. The trade-off:
+a feed is read by ONE task and must fit one string (under 2 GB); feeds are
+the parallel unit. All column parsing is Catalyst (split/element_at/rlike)
+— no per-row Python.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pathlib import Path
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -101,14 +102,27 @@ def parse_dnsbl_line(line: str, lenient: bool = False) -> tuple:
     return domain, listname, groupname, strength, "ok"
 
 
+def _cut_bytes(raw):
+    """The longest prefix of ``raw`` of at most MAX_LINE_BYTES UTF-8 bytes
+    (reference rw_pfb_csv.c:28-32 caps a line in bytes): a character cut by
+    the limit is dropped whole, never left as a partial byte sequence.
+    ``n`` counts the characters that START within the first MAX_LINE_BYTES
+    bytes (a binary-to-string cast does not validate, so a cut trailing
+    sequence still counts as one); only the last of them can straddle."""
+    n = F.length(F.substring(F.encode(raw, "UTF-8"), 1, MAX_LINE_BYTES).cast("string"))
+    head = F.substring(raw, F.lit(1), n)
+    return F.when(F.octet_length(head) > MAX_LINE_BYTES,
+                  F.substring(raw, F.lit(1), n - 1)).otherwise(head)
+
+
 def load_dnsbl_files(
     spark: SparkSession, paths: list[str], lenient: bool = False
 ) -> DataFrame:
     """Read N CSV feed files (in CLI order — order defines the first-wins
     tie-break, reference src/main.c:110-134) into one dnsbl_lines DataFrame.
 
-    Distributed end to end: executors scan (spark.read.text), line numbers
-    come from a per-file window, and parsing/validity are pure Catalyst.
+    Distributed end to end: executors read each feed whole and number its
+    lines in the same task, and parsing/validity are pure Catalyst.
 
     ``lenient=True`` switches the validity rule from the strict Python-tool
     schema (default; SURVEY.md §1.2) to the C binary's
@@ -122,38 +136,30 @@ def load_dnsbl_files(
         bogus here — the C binary would insert it with the raw
         ``char - '0'`` arithmetic value; no reference fixture contains one.
     """
-    # map the scan's file URI back to the caller's path + CLI position
-    uri_map = [(Path(p).absolute().as_uri(), p, order)
-               for order, p in enumerate(paths)]
-    uri_df = spark.createDataFrame(
-        pd.DataFrame(uri_map, columns=["_uri", "source_file", "file_order"])
-    ).withColumn("file_order", F.col("file_order").cast("int"))
-
-    # Line order within a file: a feed larger than maxPartitionBytes scans as
-    # SEVERAL splits, and Spark packs splits into partitions by SIZE, not by
-    # file offset — monotonically_increasing_id alone would interleave them.
-    # Ordering by (block byte offset, id-within-split) is correct for any
-    # split geometry: block_start orders the splits, the partition-local id
-    # orders rows inside each split.
-    lines = spark.read.text([u for u, _, _ in uri_map]).select(
-        F.input_file_name().alias("_uri"),
-        F.input_file_block_start().alias("_blk"),
-        F.monotonically_increasing_id().alias("_mid"),
-        F.col("value"),
+    # map the scan's file URI back to the caller's path + CLI position (a
+    # path given twice keeps its first position)
+    uris = [Path(p).absolute().as_uri() for p in paths]
+    first = {u: order for order, u in reversed(list(enumerate(uris)))}
+    uri_order = F.create_map(*[F.lit(x) for u, o in first.items() for x in (u, o)])
+    file_order = uri_order[F.input_file_name()]
+    files = spark.read.text(uris, wholetext=True).select(
+        file_order.alias("file_order"),
+        F.array(*[F.lit(p) for p in paths])[file_order].alias("source_file"),
+        F.posexplode(F.split("value", r"\r\n|\r|\n", -1)).alias("_pos", "_line"),
     )
-    w = Window.partitionBy("_uri").orderBy("_blk", "_mid")
-    lines = lines.withColumn(
-        "linenumber", F.row_number().over(w).cast("long")
-    ).drop("_blk")
 
-    # framing: strip trailing \r, truncate over-long lines, drop blank frames
-    # AFTER numbering (blank lines advance the line counter in the reference,
-    # rw_pfb_csv.c:237-416, but emit no row)
-    raw = F.regexp_replace(F.col("value"), "\r$", "")
-    raw = F.when(
-        F.octet_length(raw) > MAX_LINE_BYTES, F.substring(raw, 1, MAX_LINE_BYTES)
-    ).otherwise(raw)
-    lines = lines.withColumn("raw_line", raw).filter(F.col("raw_line") != "")
+    # framing: a leading UTF-8 BOM is dropped, over-long lines are cut at
+    # max_line_bytes, and blank frames are dropped AFTER numbering (blank
+    # lines advance the line counter in the reference, rw_pfb_csv.c:237-416,
+    # but emit no row)
+    raw = F.when(F.col("_pos") == 0, F.regexp_replace("_line", "^\ufeff", "")
+                 ).otherwise(F.col("_line"))
+    lines = files.select(
+        "file_order", "source_file",
+        (F.col("_pos") + 1).cast("long").alias("linenumber"),
+        F.when(F.octet_length(raw) > MAX_LINE_BYTES, _cut_bytes(raw))
+        .otherwise(raw).alias("raw_line"),
+    ).filter(F.col("raw_line") != "")
 
     cols = F.split(F.col("raw_line"), ",", -1)
     n = F.size(cols)
@@ -166,7 +172,8 @@ def load_dnsbl_files(
         col7 = F.element_at(cols, 7)
         c7_ok = (F.length(col7) == 1) & col7.isin("0", "1", "2")
         parsed = lines.select(
-            "_uri",
+            "source_file",
+            "file_order",
             "linenumber",
             "raw_line",
             F.when(n >= 2, domain).alias("domain"),
@@ -182,16 +189,15 @@ def load_dnsbl_files(
             .otherwise(F.lit("ok"))
             .alias("valid"),
         )
-        return parsed.join(F.broadcast(uri_df), "_uri").select(
-            *[f.name for f in DNSBL_SCHEMA.fields]
-        )
+        return parsed.select(*[f.name for f in DNSBL_SCHEMA.fields])
 
     strength_str = F.trim(F.element_at(cols, 7))
     strength_ok = strength_str.rlike(r"^-?[0-9]+$")
     strength_val = F.when(strength_ok, strength_str.cast("int"))
 
     parsed = lines.select(
-        "_uri",
+        "source_file",
+        "file_order",
         "linenumber",
         "raw_line",
         F.when(n.isin(6, 7), domain).alias("domain"),
@@ -213,9 +219,7 @@ def load_dnsbl_files(
         .otherwise(F.lit("ok"))
         .alias("valid"),
     )
-    return parsed.join(F.broadcast(uri_df), "_uri").select(
-        *[f.name for f in DNSBL_SCHEMA.fields]
-    )
+    return parsed.select(*[f.name for f in DNSBL_SCHEMA.fields])
 
 
 def dnsbl_df_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:

@@ -10,6 +10,12 @@ import pytest
 
 from dedup_domains_spark.datagen import gen_code_corpus
 
+REF = "/root/reference/tests/unit_pfb_prune"
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REF),
+    reason="the reference tree (its E2E inputs and goldens) is not present",
+)
+
 
 def test_cli_code_mode(spark, tmp_path):
     corpus_path = str(tmp_path / "corpus.parquet")
@@ -35,8 +41,9 @@ def test_cli_code_mode(spark, tmp_path):
     assert lineage.count() == 200
 
 
+@needs_reference
 def test_cli_dnsbl_mode(tmp_path):
-    ref = "/root/reference/tests/unit_pfb_prune"
+    ref = REF
     out = str(tmp_path / "dnsbl_out")
 
     from dedup_domains_spark.__main__ import main
@@ -59,12 +66,13 @@ def test_cli_dnsbl_mode(tmp_path):
     assert os.path.exists(f"{out}/E2ETest_Empty.pruned")
 
 
+@needs_reference
 def test_cli_dnsbl_directory_mode(tmp_path):
     """--dir processes *<in-ext> files in sorted order and writes
     <base><out-ext> next to them (reference pfb_dnsbl_prune.py:329-351)."""
     import shutil
 
-    ref = "/root/reference/tests/unit_pfb_prune"
+    ref = REF
     d = tmp_path / "feeds"
     d.mkdir()
     shutil.copy(f"{ref}/E2ETestInput_1.txt", d / "a.fat")
@@ -125,6 +133,7 @@ def test_cli_dnsbl_lenient_schema_and_telemetry(tmp_path):
     assert f"{feed}:4: exact_or_weaker_duplicate" in err
 
 
+@needs_reference
 def test_distributed_text_sink(spark, tmp_path):
     """write_survivors_text: one ordered part file per source, no driver
     collect (VERDICT r01 item 5 — the O2 scale path)."""
@@ -134,7 +143,7 @@ def test_distributed_text_sink(spark, tmp_path):
     from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
     from dedup_domains_spark.sources.sinks import write_survivors_text
 
-    ref = "/root/reference/tests/unit_pfb_prune"
+    ref = REF
     paths = [f"{ref}/E2ETestInput_1.txt"]
     res = dedup_dnsbl(load_dnsbl_files(spark, paths))
     out = str(tmp_path / "textsink")

@@ -321,3 +321,79 @@ def test_tfidf_vocab_never_broadcast_and_topk_prunes_early(spark):
     assert plan.count("BroadcastNestedLoopJoin Inner BuildRight") == 1, plan
     assert "IdentityBroadcastMode" in plan, plan
     assert "row_number(), 5, Partial" in plan, plan
+
+
+def _dnsbl_feeds(tmp_path, n_lines=3000):
+    """Three generated feeds whose regex rows all translate to Java."""
+    from perfbench.workloads import gen_dnsbl_prune
+
+    feeds, _ = gen_dnsbl_prune(n_lines, seed=1)
+    paths = []
+    for name, lines in feeds[:3]:
+        (tmp_path / f"{name}.fat").write_text("".join(ln + "\n" for ln in lines))
+        paths.append(str(tmp_path / f"{name}.fat"))
+    return paths
+
+
+def _dnsbl_survivors(spark, paths):
+    """The ``dnsbl --prune-regex`` CLI path up to its sink."""
+    from dedup_domains_spark.operators.domain_mode import dedup_dnsbl
+    from dedup_domains_spark.operators.regex_kill import collect_patterns, regex_kill
+    from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
+
+    df = load_dnsbl_files(spark, paths)
+    return regex_kill(dedup_dnsbl(df).survivors, collect_patterns(df))
+
+
+def test_dnsbl_sink_plan_is_one_catalyst_window(spark, tmp_path):
+    """The C-order dnsbl sink plan runs in the JVM: no Python UDF (every
+    pattern translated to one rlike), exactly one Window — the domain
+    election — and none keyed on the file (line numbers come from the
+    whole-file read, not from a per-file window)."""
+    import re
+
+    from dedup_domains_spark.operators.regex_kill import _java_regex, collect_patterns
+    from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
+
+    paths = _dnsbl_feeds(tmp_path)
+    patterns = collect_patterns(load_dnsbl_files(spark, paths))
+    assert patterns and all(_java_regex(p) for p in patterns)
+    sink = (
+        _dnsbl_survivors(spark, paths)
+        .select("file_order", "linenumber", F.col("raw_line").alias("value"))
+        .repartition("file_order").sortWithinPartitions("file_order", "linenumber")
+    )
+    plan = _formatted(sink)
+    assert "ArrowEvalPython" not in plan, plan
+    windows = re.findall(r"^\(\d+\) Window\n.*\nArguments: (.*)$", plan, re.M)
+    assert len(windows) == 1, plan
+    # Arguments: [<window expr>], [<partition keys>], [<order keys>]
+    keys = re.search(r"\], \[([^\]]*)\], \[", windows[0]).group(1)
+    assert re.fullmatch(r"domain#\d+", keys), plan
+
+
+def test_dnsbl_warm_pass_job_budget(spark, tmp_path):
+    """A warm ``dnsbl --prune-regex`` pass (load, dedup, kill, sink) runs
+    at most 8 Spark jobs: the pattern collect, which also fills the input
+    cache, and the sink write with its broadcast and shuffle stages. A
+    per-file line-number window, a Python regex pass or a repeated
+    election window each add jobs."""
+    from dedup_domains_spark.sources.sinks import write_survivor_text_files
+
+    paths = _dnsbl_feeds(tmp_path)
+    sc = spark.sparkContext
+
+    def one_pass(out):
+        n = write_survivor_text_files(
+            _dnsbl_survivors(spark, paths), paths, str(out), ".pruned")
+        spark.catalog.clearCache()
+        return n
+
+    first = one_pass(tmp_path / "cold")
+    sc.setJobGroup("dnsbl-job-budget", "dnsbl warm pass")
+    try:
+        assert one_pass(tmp_path / "warm") == first
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("dnsbl-job-budget")
+    assert 0 < len(jobs) <= 8, f"warm dnsbl pass ran {len(jobs)} jobs: {sorted(jobs)}"

@@ -30,6 +30,12 @@ from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
 REF_INPUTS = "/root/reference/tests/001_inputs"
 REF_TOOL = "/root/reference/pfb_dnsbl_prune.py"
 
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF_INPUTS),
+    reason="the reference tree (its corpus and pfb_dnsbl_prune.py) is "
+           "not present",
+)
+
 
 def _fresh_goldens(tmp_path_factory, method: str):
     d = tmp_path_factory.mktemp(f"goldens_{method}")
