@@ -43,7 +43,8 @@ class DedupConfig:
     # min_containee_tokens - shingle_k + 1 shingles (functions/signatures)
     min_containee_tokens: int = 32
     # verify strategy for candidate (containee, container) pairs:
-    #   "scan"         — independent C-level substring scan per pair
+    #   "scan"         — a Catalyst contains() predicate per pair, in the
+    #                    JVM (no Python worker)
     #   "suffix_array" — one suffix array per container, binary search per
     #                    containee (wins when many candidates share a
     #                    container, e.g. boilerplate/license carriers)

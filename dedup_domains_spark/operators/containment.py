@@ -17,7 +17,10 @@ LSH can't find containment: if small A is embedded in large B, Jaccard(A,B)
      shingles carry no containment signal and would otherwise create the
      exact mega-bucket skew the reference's trie never faced;
   4. surviving (small, big) candidates are verified by a true substring test
-     over content (Arrow batch, C-level str.find).
+     over content: a Catalyst ``contains`` predicate, which Spark folds into
+     the content join's condition. Spark searches the UTF-8 bytes, and a
+     byte match of valid UTF-8 is a code-point match, so the answer is
+     Python's ``small in big``; no Python worker runs.
 
 The candidates step never reads content: the postings are the exploded
 fingerprint column, shuffled once on the shingle key for the DF-cap window,
@@ -29,10 +32,8 @@ still meet in one window task before the cap drops them).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from dedup_domains_spark.config import DedupConfig
 
@@ -103,17 +104,12 @@ def join_pair_contents(
 def verify_containment(
     candidates: DataFrame, df: DataFrame, id_col: str = "uid"
 ) -> DataFrame:
-    """True substring check: content(small) in content(big)."""
-    j = join_pair_contents(candidates, df, id_col)
-
-    @F.pandas_udf(BooleanType())
-    def _contains(small: pd.Series, big: pd.Series) -> pd.Series:
-        return pd.Series(
-            [bool(s) and bool(b) and (s in b) for s, b in zip(small, big)]
-        )
-
+    """True substring check: content(small) in content(big). A null or
+    empty content on either side is never contained nor a container."""
+    small, big = F.col("_ct_s"), F.col("_ct_b")
     return (
-        j.filter(_contains(F.col("_ct_s"), F.col("_ct_b")))
+        join_pair_contents(candidates, df, id_col)
+        .filter((F.length(small) > 0) & (F.length(big) > 0) & big.contains(small))
         .select("small_id", "big_id")
     )
 

@@ -143,8 +143,8 @@ def suffix_verify_containment(
         if pdf.empty:
             return empty
         # null/empty contract matches the scan verifier (containment.py
-        # `bool(s) and bool(b)`): null or empty content on either side is
-        # rejected, never an error
+        # `length(...) > 0` on both sides): null or empty content on either
+        # side is rejected, never an error
         big = pdf["_ct_b"].iloc[0]
         if big is None or big == "" or (not isinstance(big, str) and not big):
             return empty

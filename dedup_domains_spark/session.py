@@ -70,7 +70,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for all pandas UDF traffic (signatures, containment verify).
+        # Arrow for all pandas UDF traffic: the signature kernel, and the
+        # suffix-array containment verify when it is chosen.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # Keep broadcast autodetection on; dims like the FULL-key set are

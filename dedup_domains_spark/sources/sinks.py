@@ -111,10 +111,11 @@ def write_results(
     downstream scans are clustered; cluster_map/lineage/metrics are plain
     tables keyed by uid.
 
-    Five actions, none a rescan: the survivors and cluster_map writes carry their row counts
-    (and the survivors' sha256 invariant) as observed metrics, one
-    aggregation counts the cached edges by kind, then the lineage write and
-    the write of the metrics rows built here on the driver."""
+    Four actions, none a rescan: the survivors and cluster_map writes carry
+    their row counts (and the survivors' sha256 invariant) as observed
+    metrics, then the lineage write and the write of the metrics rows, an
+    inline literal built here on the driver. The edge counts by kind were
+    observed inside run_pipeline (PipelineResult.edge_counts)."""
     os.makedirs(out_dir, exist_ok=True)
 
     surv_obs, cm_obs = Observation("survivors"), Observation("cluster_map")
@@ -132,10 +133,7 @@ def write_results(
         cm_obs, F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("is_rep").cast("long")).alias("reps"),
     ).write.mode("overwrite").parquet(f"{out_dir}/cluster_map")
-    edges = {
-        f"edges_{r.edge_kind}": r["count"]
-        for r in result.edges.groupBy("edge_kind").count().collect()
-    }
+    edges = {f"edges_{k}": n for k, n in result.edge_counts.items()}
     result.lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage")
 
     # every dedupable row has one cluster_map row and every cluster one
@@ -153,10 +151,15 @@ def write_results(
         **edges,
         "cc_iterations": result.cc_stats["iterations"],
     }
+    # a literal over one row: createDataFrame(list) would ship the rows
+    # through Python-RDD tasks
+    rows = F.array(*(
+        F.struct(F.lit(k).alias("stage"), F.lit(v).cast("long").alias("count"))
+        for k, v in metrics.items()
+    ))
     spark = result.survivors.sparkSession
-    spark.createDataFrame(
-        list(metrics.items()), "stage string, count long"
-    ).write.mode("overwrite").parquet(f"{out_dir}/metrics")
+    spark.range(1, numPartitions=1).select(F.inline(rows)).write.mode("overwrite").parquet(
+        f"{out_dir}/metrics")
 
     manifest = {
         "written_at": time.time(),

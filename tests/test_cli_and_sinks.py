@@ -242,3 +242,46 @@ def test_manifest_metrics_recompute_from_written_tables(spark, tmp_path):
     assert want["input"] == 200 and want["edges_exact"] > 0
     on_disk = {r.stage: r["count"] for r in spark.read.parquet(f"{out}/metrics").collect()}
     assert on_disk == manifest["metrics"]
+
+
+def test_edge_counts_repeat_in_one_session(spark, tmp_path):
+    """run_pipeline plus write_results twice over one corpus in one session,
+    without clearCache: the second run's upstream plans hit the first run's
+    caches, and its edge counts, observed on its own edge table, equal the
+    first run's and a groupBy over its edges. Each pass runs in a daemon
+    thread with a deadline, so an observation that is never filled
+    (Observation.get waits for ever) fails the test instead of hanging it."""
+    import threading
+
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.plans.pipeline import run_pipeline
+    from dedup_domains_spark.sources.sinks import write_results
+
+    files = spark.createDataFrame(gen_code_corpus(200).files)
+
+    def one_pass(out):
+        box = {}
+
+        def target():
+            try:
+                res = run_pipeline(spark, files, DedupConfig())
+                box["out"] = res, write_results(res, str(out))
+            except Exception as e:
+                box["err"] = e
+
+        t = threading.Thread(target=target, daemon=True)
+        t.start()
+        t.join(600)
+        assert not t.is_alive(), "pipeline pass still running after 600 s"
+        if "err" in box:
+            raise box["err"]
+        res, manifest = box["out"]
+        return res, {k: v for k, v in manifest["metrics"].items()
+                     if k.startswith("edges_")}
+
+    _, first = one_pass(tmp_path / "a")
+    res, second = one_pass(tmp_path / "b")
+    assert second == first
+    assert second == {f"edges_{r.edge_kind}": r["count"]
+                      for r in res.edges.groupBy("edge_kind").count().collect()}
+    assert set(first) == {"edges_near", "edges_contained", "edges_exact"}, first

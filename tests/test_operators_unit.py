@@ -173,6 +173,36 @@ def test_suffix_verify_agrees_with_scan_verify(spark):
     assert a == b == {(1, 2), (4, 1)}
 
 
+def test_verify_containment_matches_python_in(spark):
+    """The Catalyst verify (a byte search over UTF-8) keeps exactly the
+    pairs Python's ``small in big`` keeps on decoded strings, over every
+    ordered pair of crafted contents: é precomposed and decomposed, a lone
+    combining mark, CJK, emoji, a containee at the start and at the end of
+    its container, identical texts, an empty string and None. The
+    suffix-array verify keeps the same pairs."""
+    from dedup_domains_spark.operators.containment import verify_containment
+    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
+
+    texts = [
+        "café au lait", "café", "cafe\u0301", "e\u0301", "\u0301", "caf",
+        "au lait", "漢字テキストと混在", "漢字", "字テ", "在", "😀 emoji 😀x",
+        "😀", "x", "café", "", None, "\u00e9",
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame({"uid": range(len(texts)), "content": texts}),
+        "uid long, content string",
+    )
+    pairs = [(a, b) for a in range(len(texts)) for b in range(len(texts)) if a != b]
+    cand = spark.createDataFrame(pairs, "small_id long, big_id long")
+    want = {(a, b) for a, b in pairs
+            if texts[a] and texts[b] and texts[a] in texts[b]}
+    got = {tuple(r) for r in verify_containment(cand, df).collect()}
+    assert got == want
+    assert {(5, 0), (6, 0), (8, 7), (10, 7), (12, 11), (1, 14), (14, 1),
+            (4, 2), (3, 2)} <= want                # the cases are exercised
+    assert {tuple(r) for r in suffix_verify_containment(cand, df).collect()} == want
+
+
 def test_suffix_verify_mega_fanin_salted(spark):
     """A container probed by many candidates is salted into subgroups
     (ADVICE r02): with max_fanin far below the fan-in, results must be

@@ -129,8 +129,8 @@ def test_udf_fanout_queries_materialize_signatures(spark):
     no signature ArrowEvalPython node — if the UDF reappears in the
     returned plan, a branch re-derived signatures from source and the 3-4x
     concurrent recompute (block cache does not dedupe in-flight work) is
-    back. containment_probe_pairs keeps exactly one Python node, the
-    substring verify UDF over the candidate pairs."""
+    back. containment_probe_pairs holds no Python node either: its
+    substring verify is a Catalyst ``Contains`` predicate."""
     import re
 
     from dedup_domains_spark.plans.queries import QUERIES
@@ -142,9 +142,38 @@ def test_udf_fanout_queries_materialize_signatures(spark):
             f"fan-out node no longer materialized"
         )
     plan = _formatted(QUERIES["containment_probe_pairs"].spark_fn(spark, SF))
-    nodes = re.findall(r"^\(\d+\) ArrowEvalPython.*$", plan, re.M)
-    assert len(nodes) == 1, plan
-    assert re.search(r"^Arguments: \[_contains\(", plan, re.M), plan
+    assert not re.search(r"^\(\d+\) \w*EvalPython", plan, re.M), plan
+    assert "Contains(" in plan, plan
+
+
+def test_pipeline_python_stage_is_the_signature_kernel(spark, monkeypatch):
+    """The plans run_pipeline builds for the verified containment pairs and
+    for the edge table run no Python outside the signature kernel: their
+    only Python eval node is the one ``_sig`` ArrowEvalPython inside the
+    cached signature table, and the containment verify is a ``Contains``
+    predicate."""
+    import re
+
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.datagen import gen_code_corpus
+    from dedup_domains_spark.plans import pipeline
+
+    built, contained_pairs = {}, pipeline.contained_pairs
+
+    def spy(*args, **kwargs):
+        built["contained"] = contained_pairs(*args, **kwargs)
+        return built["contained"]
+
+    monkeypatch.setattr(pipeline, "contained_pairs", spy)
+    files = spark.createDataFrame(gen_code_corpus(200).files)
+    res = pipeline.run_pipeline(spark, files, DedupConfig())
+    for name, df in (("contained", built["contained"]), ("edges", res.edges)):
+        plan = _formatted(df)
+        nodes = re.findall(r"^\(\d+\) (\w*EvalPython)\n.*\nArguments: \[(\w+)\(",
+                           plan, re.M)
+        assert nodes == [("ArrowEvalPython", "_sig")], (name, plan)
+        assert len(re.findall(r"^\(\d+\) \w*EvalPython", plan, re.M)) == 1, plan
+        assert "Contains(" in plan, (name, plan)
 
 
 def test_pipeline_job_budget(spark):
@@ -189,6 +218,39 @@ def test_pipeline_job_budget(spark):
         f"barrier diet regressed (budget {budget} = 22 base + "
         f"1x{cc_iters} CC rounds + 2 headroom); job ids: {sorted(jobs)}"
     )
+
+
+def test_code_warm_pass_job_budget(spark, tmp_path):
+    """A warm code pass as the CLI runs it (load_code_corpus, run_pipeline,
+    write_results) runs at most 20 Spark jobs over a corpus whose
+    connected components finish on the driver. The edge-kind counts are
+    observed inside run_pipeline and the metrics rows are an inline
+    literal, so the sink adds no count job and no Python-RDD job."""
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.datagen import gen_code_corpus
+    from dedup_domains_spark.plans.pipeline import run_pipeline
+    from dedup_domains_spark.sources.code_corpus import load_code_corpus
+    from dedup_domains_spark.sources.sinks import write_results
+
+    src = str(tmp_path / "corpus.parquet")
+    gen_code_corpus(500).files.to_parquet(src, index=False)
+    sc = spark.sparkContext
+
+    def one_pass(out):
+        res = run_pipeline(spark, load_code_corpus(spark, src), DedupConfig())
+        manifest = write_results(res, str(out))
+        spark.catalog.clearCache()
+        return res.cc_stats["iterations"], manifest["metrics"]
+
+    first = one_pass(tmp_path / "cold")
+    sc.setJobGroup("code-job-budget", "code warm pass")
+    try:
+        assert one_pass(tmp_path / "warm") == first
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("code-job-budget")
+    assert first[0] == 0
+    assert 0 < len(jobs) <= 20, f"warm code pass ran {len(jobs)} jobs: {sorted(jobs)}"
 
 
 def test_bucketed_corpus_table_elides_join_shuffle(spark, tmp_path):
