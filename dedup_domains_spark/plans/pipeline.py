@@ -49,6 +49,7 @@ from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
 from dedup_domains_spark.operators.verify import verify_pairs_estimate, verify_pairs_exact
 from dedup_domains_spark.functions.signatures import add_signatures
 from dedup_domains_spark.plans.checkpoint import CheckpointContext, input_fingerprint
+from dedup_domains_spark.session import codegen_counters
 from dedup_domains_spark.sources.code_corpus import with_row_identity
 
 
@@ -71,6 +72,9 @@ class PipelineResult:
     _partition_stats_fn: Callable[[], DataFrame] = None
     sig_df: DataFrame | None = None
     _edge_obs: Observation | None = None
+    # codegen_counters() when run_pipeline started; the sink reports the
+    # classes compiled and compile time since then
+    codegen_start: tuple[int, float] = (0, 0.0)
 
     @property
     def edge_counts(self) -> dict[str, int]:
@@ -118,6 +122,7 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
 ) -> PipelineResult:
     cfg = cfg or DedupConfig()
+    codegen_start = codegen_counters(spark)
     # AQE re-plans at every exchange — a driver barrier the pipeline doesn't
     # need (skew handled explicitly; see DedupConfig.use_aqe). The heavy
     # stages run eagerly inside _build_pipeline under the pipeline setting;
@@ -126,11 +131,13 @@ def run_pipeline(
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", str(cfg.use_aqe).lower())
     try:
-        return _build_pipeline(
+        result = _build_pipeline(
             spark, corpus, cfg, passthrough_predicate, checkpoint_dir
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    result.codegen_start = codegen_start
+    return result
 
 
 def _build_pipeline(

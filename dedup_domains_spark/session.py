@@ -2,7 +2,10 @@
 
 Local testing runs on local[N]; the same settings map onto multi-executor
 clusters (spark-submit --py-files) — AQE, Arrow, and shuffle-partition sizing
-are the knobs that matter at 100 TB.
+are the knobs that matter at 100 TB. The generated-code cache
+(CODEGEN_CACHE_ENTRIES) is the knob that matters for a long-lived session
+that runs many passes: sized too small, every pass compiles its whole plan
+again.
 """
 
 from __future__ import annotations
@@ -10,6 +13,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# a static conf; the cache is built once per JVM, at its first codegen
+# compile). Spark's default of 100 is under one code pass. Distinct Janino
+# classes of a first pass, each shape in a fresh local[4] session:
+#   code pass, scan verify                       194
+#   code pass, suffix_array verify               211
+#   code pass, use_exact_jaccard                 193
+#   dnsbl pass, C order                           50
+#   dnsbl pass, pointer / standard order          79 / 202 over three passes
+#   all six shapes, two passes each, one session 463
+# At 100, each warm code pass evicted and recompiled 193 classes (1.2-1.4 s
+# of Janino per pass, then JIT warm-up of the new classes). 1024 holds
+# every shape at once with about 2x headroom, so a session that runs them
+# all (the test suite, the bench reps) compiles nothing on a repeat.
+CODEGEN_CACHE_ENTRIES = 1024
 
 
 def host_parallelism() -> int:
@@ -92,6 +111,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -100,3 +120,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """Janino compiles in this JVM since it started: (classes compiled,
+    total compile ms). A cache hit compiles nothing, so the difference over
+    a pass counts the classes the cache could not serve. In local mode the
+    JVM runs the tasks too, so executor-side compiles are counted."""
+    jvm = spark._jvm
+    classes = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME().getCount())
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return classes, ns / 1e6

@@ -17,6 +17,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from dedup_domains_spark.plans.pipeline import PipelineResult
+from dedup_domains_spark.session import codegen_counters
 
 
 def write_survivors_text(survivors, out_dir: str) -> None:
@@ -115,7 +116,9 @@ def write_results(
     their row counts (and the survivors' sha256 invariant) as observed
     metrics, then the lineage write and the write of the metrics rows, an
     inline literal built here on the driver. The edge counts by kind were
-    observed inside run_pipeline (PipelineResult.edge_counts)."""
+    observed inside run_pipeline (PipelineResult.edge_counts). The
+    manifest's ``codegen`` block counts the classes Janino compiled from
+    the start of run_pipeline to the end of this write."""
     os.makedirs(out_dir, exist_ok=True)
 
     surv_obs, cm_obs = Observation("survivors"), Observation("cluster_map")
@@ -161,6 +164,10 @@ def write_results(
     spark.range(1, numPartitions=1).select(F.inline(rows)).write.mode("overwrite").parquet(
         f"{out_dir}/metrics")
 
+    # Janino compiles of the pass (run_pipeline and this sink): 0 when the
+    # session's codegen cache already holds every class of the plan
+    classes, compile_ms = codegen_counters(spark)
+    classes0, compile_ms0 = result.codegen_start
     manifest = {
         "written_at": time.time(),
         "config_hash": config_hash,
@@ -168,6 +175,8 @@ def write_results(
         "partition_by": partition_by,
         "metrics": metrics,
         "sha256_invariant_violations": surv_m["violations"] or 0,
+        "codegen": {"classes_compiled": classes - classes0,
+                    "compile_ms": round(compile_ms - compile_ms0, 1)},
     }
     with open(f"{out_dir}/manifest.json", "w") as f:
         json.dump(manifest, f, indent=2)

@@ -247,8 +247,9 @@ def test_manifest_metrics_recompute_from_written_tables(spark, tmp_path):
 def test_edge_counts_repeat_in_one_session(spark, tmp_path):
     """run_pipeline plus write_results twice over one corpus in one session,
     without clearCache: the second run's upstream plans hit the first run's
-    caches, and its edge counts, observed on its own edge table, equal the
-    first run's and a groupBy over its edges. Each pass runs in a daemon
+    caches, its edge counts, observed on its own edge table, equal the
+    first run's and a groupBy over its edges, and it compiles no generated
+    class (the first run's are still cached). Each pass runs in a daemon
     thread with a deadline, so an observation that is never filled
     (Observation.get waits for ever) fails the test instead of hanging it."""
     import threading
@@ -276,12 +277,14 @@ def test_edge_counts_repeat_in_one_session(spark, tmp_path):
         if "err" in box:
             raise box["err"]
         res, manifest = box["out"]
-        return res, {k: v for k, v in manifest["metrics"].items()
-                     if k.startswith("edges_")}
+        return res, manifest["codegen"], {
+            k: v for k, v in manifest["metrics"].items() if k.startswith("edges_")}
 
-    _, first = one_pass(tmp_path / "a")
-    res, second = one_pass(tmp_path / "b")
+    _, _, first = one_pass(tmp_path / "a")
+    res, codegen, second = one_pass(tmp_path / "b")
     assert second == first
+    # the repeat reuses the first pass's generated classes
+    assert codegen["classes_compiled"] == 0, codegen
     assert second == {f"edges_{r.edge_kind}": r["count"]
                       for r in res.edges.groupBy("edge_kind").count().collect()}
     assert set(first) == {"edges_near", "edges_contained", "edges_exact"}, first

@@ -253,6 +253,48 @@ def test_code_warm_pass_job_budget(spark, tmp_path):
     assert 0 < len(jobs) <= 20, f"warm code pass ran {len(jobs)} jobs: {sorted(jobs)}"
 
 
+def test_repeat_pass_compiles_no_classes(spark, tmp_path):
+    """A repeated pass in one session reuses the first pass's generated
+    classes: the session's codegen cache (CODEGEN_CACHE_ENTRIES) holds the
+    ~200 classes of a code pass, where Spark's default of 100 evicted each
+    before the next pass asked for it. Checked on the code pass as the CLI
+    runs it (its manifest's codegen block) and on the dnsbl CLI pass."""
+    from dedup_domains_spark.__main__ import main
+    from dedup_domains_spark.config import DedupConfig
+    from dedup_domains_spark.datagen import gen_code_corpus
+    from dedup_domains_spark.plans.pipeline import run_pipeline
+    from dedup_domains_spark.session import CODEGEN_CACHE_ENTRIES, codegen_counters
+    from dedup_domains_spark.sources.code_corpus import load_code_corpus
+    from dedup_domains_spark.sources.sinks import write_results
+
+    src = str(tmp_path / "corpus.parquet")
+    gen_code_corpus(500).files.to_parquet(src, index=False)
+
+    def code_pass(out):
+        res = run_pipeline(spark, load_code_corpus(spark, src), DedupConfig())
+        manifest = write_results(res, str(out))
+        spark.catalog.clearCache()
+        return manifest["codegen"]
+
+    code_pass(tmp_path / "code_cold")
+    warm = code_pass(tmp_path / "code_warm")
+    assert warm["classes_compiled"] == 0, warm
+
+    paths = _dnsbl_feeds(tmp_path)
+
+    def dnsbl_pass(out):
+        before = codegen_counters(spark)[0]
+        assert main(["dnsbl", "--inputs", *paths, "--output", str(out),
+                     "--prune-regex", "--silent"]) == 0
+        spark.catalog.clearCache()
+        return codegen_counters(spark)[0] - before
+
+    dnsbl_pass(tmp_path / "dnsbl_cold")
+    assert dnsbl_pass(tmp_path / "dnsbl_warm") == 0
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+
+
 def test_bucketed_corpus_table_elides_join_shuffle(spark, tmp_path):
     """save_corpus_table writes the input_hint-shaped table bucketed by repo;
     a repo-keyed self-join of the catalog table must plan with NO Exchange
