@@ -4,11 +4,10 @@ entry(spark)   — flagship: the full near-dup pipeline over the documents
                  table at sf0.001 (survivors DataFrame).
 queries()      — the catalog: one entry per domain-mode rule, code-dedup
                  operator (exact, MinHash/LSH, SimHash, verify,
-                 containment, CC, pipeline), corpus-curation op and
-                 relational-breadth query over the TPC-H and events
-                 tables; each callable (spark, sf_dir) -> DF.
-                 Embedding/media search is outside the engine and not in
-                 the catalog.
+                 containment, CC, pipeline) and corpus-curation op;
+                 each callable (spark, sf_dir) -> DF. Relational
+                 breadth and embedding/media search are outside the
+                 engine and not in the catalog.
 oracle_sql()   — DuckDB-runnable ANSI SQL twin for every SQL-expressible
                  query (same column names, same rounding). Entries absent
                  here are non-SQL-expressible (signatures/LSH/full pipeline)

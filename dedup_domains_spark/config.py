@@ -52,13 +52,6 @@ class DedupConfig:
 
     # --- skew / partitioning ---
     max_bucket_size: int = 64          # LSH bucket cap before salting splits it
-    # AQE off for the pipeline by default: skew is handled EXPLICITLY
-    # (salted stars, capped buckets, broadcast hints), so AQE's only effect
-    # here is a driver re-planning barrier at every exchange — measured 30%
-    # of pipeline wall at sandbox scale (BENCH.md r02). The generic session
-    # keeps AQE on for ad-hoc queries; flip this on if a corpus has skew the
-    # explicit handling doesn't cover.
-    use_aqe: bool = False
 
     # --- clustering ---
     cc_max_iterations: int = 20        # union-find fixpoint guard
@@ -109,5 +102,3 @@ class DomainModeConfig:
     strengths_dedup: tuple = (0, 1)    # WEAK, FULL
     strength_regex: int = 2            # pass-through carry-over
 
-
-DEFAULT_CONFIG = DedupConfig()

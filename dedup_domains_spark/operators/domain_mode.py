@@ -329,7 +329,7 @@ def write_survivor_files(result: DomainModeResult, out_dir: str) -> dict[str, li
     byte-identical, ascending line order). Returns {source_file: [raw_line]}.
 
     Driver-side collect is fine for fixture-scale parity checks; the scale
-    path is ``survivors.write.partitionBy('source_file')``.
+    path is ``sources.sinks.write_survivor_text_files``.
 
     A source whose every line was pruned still gets an (empty) entry — the
     reference writes an empty output file for it (pfb_prune.c:666-728, and

@@ -57,8 +57,3 @@ class CheckpointContext:
         if not os.path.exists(marker):
             df.write.mode("overwrite").parquet(p)
         return self.spark.read.parquet(p)
-
-    def has(self, stage: str) -> bool:
-        return self.base_dir is not None and os.path.exists(
-            os.path.join(self.path(stage), "_SUCCESS")
-        )

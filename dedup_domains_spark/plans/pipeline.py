@@ -52,6 +52,14 @@ from dedup_domains_spark.plans.checkpoint import CheckpointContext, input_finger
 from dedup_domains_spark.session import codegen_counters
 from dedup_domains_spark.sources.code_corpus import with_row_identity
 
+# AQE is off while the pipeline runs: skew is handled EXPLICITLY (salted
+# stars, capped buckets, broadcast hints), so AQE's only effect here is a
+# driver re-planning barrier at every exchange — 30% of pipeline wall at
+# sandbox scale (BENCH.md r02). Re-measured with the codegen cache sized to
+# the pass (2,500-row code_mixed, local[4], 5 alternating warm pairs): off
+# 5.85 s median per warm pass against 6.75 s on, off faster in 5 of 5.
+PIPELINE_AQE = "false"
+
 
 @dataclass
 class PipelineResult:
@@ -123,13 +131,12 @@ def run_pipeline(
 ) -> PipelineResult:
     cfg = cfg or DedupConfig()
     codegen_start = codegen_counters(spark)
-    # AQE re-plans at every exchange — a driver barrier the pipeline doesn't
-    # need (skew handled explicitly; see DedupConfig.use_aqe). The heavy
-    # stages run eagerly inside _build_pipeline under the pipeline setting;
-    # the session value is restored on every exit, a raised error included,
-    # so ad-hoc queries keep their AQE behavior.
+    # The heavy stages run eagerly inside _build_pipeline under
+    # PIPELINE_AQE; the session value is restored on every exit, a raised
+    # error included, so ad-hoc queries and the sinks keep their AQE
+    # behavior.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", str(cfg.use_aqe).lower())
+    spark.conf.set("spark.sql.adaptive.enabled", PIPELINE_AQE)
     try:
         result = _build_pipeline(
             spark, corpus, cfg, passthrough_predicate, checkpoint_dir

@@ -1,9 +1,8 @@
 """Query catalog: the dedup engine's operators — domain-mode rules, code
 dedup (exact, MinHash/LSH, SimHash, verify, containment, CC, pipeline) and
-corpus curation — plus relational breadth over the TPC-H and events
-tables, exposed as (Spark DataFrame function, DuckDB oracle SQL) pairs over
-the test-data tables (one parquet file per table in each scale-factor
-directory).
+corpus curation — exposed as (Spark DataFrame function, DuckDB oracle SQL)
+pairs over the test-data tables (one parquet file per table in each
+scale-factor directory).
 
 Contract (README / __spark_entry__.py): each Spark builder takes
 (spark, sf_dir) and returns a DataFrame whose column NAMES and VALUES match
@@ -1238,147 +1237,6 @@ def connected_components_ngram(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Classic relational coverage (agg / join / window / time rollup / JSON)
-# ---------------------------------------------------------------------------
-
-@_q(
-    "tpch_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2)       AS sum_qty,
-           round(sum(l_extendedprice), 2)  AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(avg(l_discount), 4)       AS avg_disc,
-           count(*)                        AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= DATE '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-    "agg (beyond reference: SURVEY.md §2.2)",
-)
-def tpch_pricing_summary(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@_q(
-    "top_orders_per_customer",
-    """
-    SELECT o_custkey, o_orderkey, o_totalprice FROM (
-      SELECT o_custkey, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_custkey
-                                ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      FROM orders) WHERE rn <= 3
-    """,
-    "window (beyond reference)",
-)
-def top_orders_per_customer(spark, sf_dir):
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        _t(spark, sf_dir, "orders")
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn <= 3")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    )
-
-
-@_q(
-    "nation_revenue_join",
-    """
-    SELECT n.n_name AS nation, round(sum(o.o_totalprice), 2) AS revenue,
-           count(*) AS n_orders
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-    "join (beyond reference; broadcast dim)",
-)
-def nation_revenue_join(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-
-@_q(
-    "events_hourly_rollup",
-    """
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           count(*) AS n, round(avg(value), 4) AS avg_value
-    FROM events GROUP BY date_trunc('hour', ts), event_type
-    """,
-    "time rollup (streaming analog, batch)",
-)
-def events_hourly_rollup(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-        )
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.avg("value"), 4).alias("avg_value"))
-    )
-
-
-@_q(
-    "events_first_per_user",
-    """
-    SELECT user_id, event_type, event_id AS first_event_id FROM (
-      SELECT user_id, event_type, event_id,
-             row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts, event_id) AS rn
-      FROM events) WHERE rn = 1
-    """,
-    "dedup-by-key (streaming dropDuplicates analog)",
-)
-def events_first_per_user(spark, sf_dir):
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    return (
-        _t(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "event_type", F.col("event_id").alias("first_event_id"))
-    )
-
-
-@_q(
-    "events_json_extract",
-    """
-    SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-    FROM events
-    """,
-    "scalar fn: json (beyond reference)",
-)
-def events_json_extract(spark, sf_dir):
-    return _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Signature/LSH operators — planted-truth DuckDB oracles.
 #
 # MinHash/SimHash signatures themselves are not SQL-recomputable, so these
@@ -1656,172 +1514,6 @@ def pipeline_planted_recall(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Set ops / grouping sets / scalar breadth (beyond the reference, §2.2)
-# ---------------------------------------------------------------------------
-
-@_q(
-    "customer_setops",
-    """
-    (SELECT c_custkey FROM customer
-     INTERSECT
-     SELECT o_custkey AS c_custkey FROM orders)
-    EXCEPT
-    SELECT c_custkey FROM customer WHERE c_custkey % 10 = 0
-    """,
-    "set ops: INTERSECT + EXCEPT (beyond reference)",
-)
-def customer_setops(spark, sf_dir):
-    """Customers that placed an order (INTERSECT — provably non-empty on
-    this data, every order references a customer) minus a deterministic
-    subset (EXCEPT). Replaces the old customers_without_orders query, which
-    was vacuously green at 0 rows (VERDICT r01)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return c.intersect(o).exceptAll(
-        c.filter(F.col("c_custkey") % 10 == 0)
-    ).distinct()
-
-
-@_q(
-    "lineitem_rollup",
-    """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-    FROM lineitem
-    GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    """,
-    "agg: grouping sets / rollup (beyond reference)",
-)
-def lineitem_rollup(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-             F.count(F.lit(1)).alias("n"))
-    )
-
-
-@_q(
-    "orders_pivot",
-    """
-    SELECT o_orderstatus,
-           count(*) FILTER (WHERE o_orderpriority LIKE '1%') AS p1,
-           count(*) FILTER (WHERE o_orderpriority LIKE '2%') AS p2,
-           count(*) FILTER (WHERE o_orderpriority LIKE '3%') AS p3,
-           count(*) FILTER (WHERE o_orderpriority LIKE '4%') AS p4,
-           count(*) FILTER (WHERE o_orderpriority LIKE '5%') AS p5
-    FROM orders GROUP BY o_orderstatus
-    """,
-    "agg: pivot (beyond reference)",
-)
-def orders_pivot(spark, sf_dir):
-    """Priority-class counts pivoted to columns per order status — the
-    DataFrame pivot operator; the oracle is the equivalent conditional
-    aggregation."""
-    o = _t(spark, sf_dir, "orders").withColumn(
-        "prio", F.substring("o_orderpriority", 1, 1)
-    )
-    p = (
-        o.groupBy("o_orderstatus")
-        .pivot("prio", ["1", "2", "3", "4", "5"])
-        .agg(F.count(F.lit(1)))
-    )
-    return p.select(
-        "o_orderstatus",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(f"p{c}") for c in "12345"],
-    )
-
-
-@_q(
-    "lineitem_cube",
-    """
-    SELECT l_returnflag, l_linestatus, count(*) AS n,
-           round(median(l_quantity), 2) AS median_qty
-    FROM lineitem
-    GROUP BY CUBE(l_returnflag, l_linestatus)
-    """,
-    "agg: CUBE + exact median (beyond reference)",
-)
-def lineitem_cube(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.median("l_quantity"), 2).alias("median_qty"),
-        )
-    )
-
-
-@_q(
-    "events_sessionize",
-    """
-    WITH ordered AS (
-      SELECT user_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events),
-    flagged AS (
-      SELECT user_id,
-             CASE WHEN prev_ts IS NULL
-                       OR ts - prev_ts > INTERVAL 30 MINUTE THEN 1
-                  ELSE 0 END AS new_session
-      FROM ordered)
-    SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions
-    FROM flagged GROUP BY user_id
-    """,
-    "window: sessionization by inactivity gap (beyond reference)",
-)
-def events_sessionize(spark, sf_dir):
-    """Sessions = runs of events per user with <=30 min between them —
-    lag + gap flag + sum, the standard sessionization window pattern."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = _t(spark, sf_dir, "events").withColumn("prev_ts", F.lag("ts").over(w))
-    # events.ts is TIMESTAMP_NTZ — route through timestamp for epoch seconds;
-    # double keeps sub-second precision so the 30-min compare is exact like
-    # the oracle's INTERVAL compare (no whole-second truncation)
-    gap = (
-        F.col("ts").cast("timestamp").cast("double")
-        - F.col("prev_ts").cast("timestamp").cast("double")
-    )
-    flagged = e.withColumn(
-        "new_session",
-        F.when(F.col("prev_ts").isNull() | (gap > 1800), 1).otherwise(0),
-    )
-    return flagged.groupBy("user_id").agg(
-        F.sum("new_session").alias("n_sessions")
-    )
-
-
-@_q(
-    "scalar_functions",
-    """
-    SELECT o_orderkey,
-           year(o_orderdate)                         AS order_year,
-           month(o_orderdate)                        AS order_month,
-           round(sqrt(o_totalprice), 4)              AS sqrt_price,
-           round(ln(o_totalprice + 1), 4)            AS ln_price,
-           upper(substring(o_orderpriority, 1, 3))   AS prio3,
-           length(o_orderstatus)                     AS status_len,
-           abs(o_custkey - 1000)                     AS key_dist
-    FROM orders
-    """,
-    "scalar fns: date/math/string (beyond reference)",
-)
-def scalar_functions(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("order_year"),
-        F.month("o_orderdate").alias("order_month"),
-        F.round(F.sqrt("o_totalprice"), 4).alias("sqrt_price"),
-        F.round(F.log(F.col("o_totalprice") + 1), 4).alias("ln_price"),
-        F.upper(F.substring("o_orderpriority", 1, 3)).alias("prio3"),
-        F.length("o_orderstatus").alias("status_len"),
-        F.abs(F.col("o_custkey") - 1000).alias("key_dist"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Scale-path containment
 # ---------------------------------------------------------------------------
 
@@ -1899,109 +1591,6 @@ def suffix_containment_pairs(spark, sf_dir):
     from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
 
     return _containment_over_docs(spark, sf_dir, suffix_contained_pairs)
-
-
-# ---------------------------------------------------------------------------
-# Temporal joins (beyond reference: as-of + range, the time-series staples)
-# ---------------------------------------------------------------------------
-
-@_q(
-    "events_asof_orders",
-    """
-    WITH ords AS (
-      SELECT o_custkey AS user_id, o_orderdate AS ots,
-             max(o_orderkey) AS order_key
-      FROM orders GROUP BY o_custkey, o_orderdate)
-    SELECT e.event_id, e.user_id, o.order_key
-    FROM events e ASOF LEFT JOIN ords o
-      ON e.user_id = o.user_id AND e.ts >= o.ots
-    """,
-    "as-of join (most recent order at-or-before each event)",
-)
-def events_asof_orders(spark, sf_dir):
-    """As-of join WITHOUT a non-equi join: tag orders (0) and events (1),
-    union, and take last_value(order_key) IGNORE NULLS over a
-    (user, time, tag) window. One shuffle on user_id, no range-join
-    explosion, no BroadcastNestedLoop — the partition-friendly as-of
-    formulation that survives 100x scale. Order rows sort before event rows
-    at equal timestamps, giving at-or-before semantics; orders are first
-    deduped to one row per (user, ts) (max order_key) so the as-of pick is
-    deterministic on both engines."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.col("ts"),
-        F.lit(None).cast("long").alias("order_key"), F.lit(1).alias("_tag"),
-    )
-    od = (
-        _t(spark, sf_dir, "orders")
-        # explicit date→timestamp_ntz cast (ADVICE r02): events.ts is
-        # TIMESTAMP_NTZ, so coercing the date side to NTZ midnight keeps the
-        # union timezone-free by construction — no reliance on implicit
-        # union coercion or the session timezone (which get_spark pins to
-        # UTC anyway)
-        .groupBy(F.col("o_custkey").alias("user_id"),
-                 F.col("o_orderdate").cast("timestamp_ntz").alias("ts"))
-        .agg(F.max("o_orderkey").alias("order_key"))
-        .select(F.lit(None).cast("long").alias("event_id"), "user_id", "ts",
-                "order_key", F.lit(0).alias("_tag"))
-    )
-    w = (
-        Window.partitionBy("user_id").orderBy("ts", "_tag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        ev.unionByName(od)
-        .withColumn("order_key", F.last("order_key", ignorenulls=True).over(w))
-        .filter("_tag = 1")
-        .select("event_id", "user_id", "order_key")
-    )
-
-
-@_q(
-    "orders_events_range_7d",
-    """
-    SELECT o.o_orderkey, count(e.event_id) AS n_events
-    FROM orders o LEFT JOIN events e
-      ON e.user_id = o.o_custkey
-     AND e.ts > o.o_orderdate
-     AND e.ts <= o.o_orderdate + INTERVAL 7 DAY
-    GROUP BY o.o_orderkey
-    """,
-    "range join (events within 7 days after each order), time-bucketed",
-)
-def orders_events_range_7d(spark, sf_dir):
-    """Interval join WITHOUT the O(n*m) BroadcastNestedLoop a naive non-equi
-    join plans: both sides are bucketed into 7-day epochs, orders explode
-    into (bucket, bucket+1) — any event in (t, t+7d] lands in one of the
-    two — and the join is a plain equi-join on (user, bucket) with an exact
-    range filter after. Scales as a hash join on composite keys; the 2x
-    order fan-out is the entire cost."""
-    week = 7 * 24 * 3600
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderdate").alias("ots"),
-        F.floor(F.unix_timestamp("o_orderdate") / week).alias("_b0"),
-    )
-    oe = o.withColumn("_b", F.explode(F.array("_b0", F.col("_b0") + 1)))
-    e = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts",
-        F.floor(F.unix_timestamp("ts") / week).alias("_b"),
-    )
-    hits = (
-        oe.join(e, ["user_id", "_b"])
-        # full-precision timestamp bounds — unix_timestamp() floors to whole
-        # seconds, which would admit events up to 1s past the window edge
-        # that the sub-second-exact oracle rejects
-        .filter(
-            (F.col("ts") > F.col("ots"))
-            & (F.col("ts") <= F.col("ots") + F.expr("INTERVAL 7 DAYS"))
-        )
-        .groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    return (
-        o.select("o_orderkey").join(hits, "o_orderkey", "left")
-        .select("o_orderkey", F.coalesce("n_events", F.lit(0)).alias("n_events"))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -20,28 +20,6 @@ from dedup_domains_spark.plans.pipeline import PipelineResult
 from dedup_domains_spark.session import codegen_counters
 
 
-def write_survivors_text(survivors, out_dir: str) -> None:
-    """Distributed O2 sink for domain mode: one ordered text file per source
-    feed (reference pfb_prune.c:666-728 writes per-file survivors in line
-    order; here each source is written by exactly one task).
-
-    ``repartition(source)`` puts every key in exactly one task;
-    ``sortWithinPartitions`` restores line order; ``partitionBy`` then emits
-    a single part file per source directory. No driver-side collect — this
-    is the scale path behind the fixture-scale write_survivor_files."""
-    (
-        survivors.select(
-            F.regexp_extract(F.col("source_file"), r"([^/]+)$", 1).alias("source"),
-            "linenumber", "raw_line",
-        )
-        .repartition("source")
-        .sortWithinPartitions("source", "linenumber")
-        .withColumnRenamed("raw_line", "value")
-        .select("source", "value")
-        .write.mode("overwrite").partitionBy("source").text(out_dir)
-    )
-
-
 def write_survivor_text_files(
     survivors,
     inputs: list[str],
@@ -49,13 +27,16 @@ def write_survivor_text_files(
     out_ext: str,
     order_cols: tuple[str, ...] = ("linenumber",),
 ) -> int:
-    """Distributed dnsbl CLI sink with reference output naming.
+    """Distributed O2 sink for domain mode, with reference output naming
+    (reference pfb_prune.c:666-728 writes per-file survivors in line
+    order). The scale path behind the fixture-scale
+    ``domain_mode.write_survivor_files``.
 
     Executors write one ordered text part per input feed
-    (``repartition(file_order)`` + ``sortWithinPartitions`` + ``partitionBy``
-    — the write_survivors_text shape, keyed by the numeric CLI position so
-    partition directory names never need URL-decoding); the driver then only
-    RENAMES each part to ``<base><out_ext>`` (reference naming,
+    (``repartition(file_order)`` + ``sortWithinPartitions`` + ``partitionBy``,
+    keyed by the numeric CLI position so partition directory names never
+    need URL-decoding), so each feed is written by exactly one task. The
+    driver then only RENAMES each part to ``<base><out_ext>`` (reference naming,
     pfb_prune.c outputfilename / pfb_dnsbl_prune.py:331-333) and creates
     empty outputs for feeds with no survivors. No row ever passes through
     the driver. Returns the survivor line count, observed during the write.

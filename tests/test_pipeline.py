@@ -191,8 +191,15 @@ def test_pipeline_failure_restores_aqe(spark, monkeypatch):
 
     monkeypatch.setattr(pipeline, "connected_components", _fail)
     key = "spark.sql.adaptive.enabled"
+    # the caller's value must differ from the pipeline's, or a missing
+    # restore would go unseen
+    assert pipeline.PIPELINE_AQE == "false"
     before = spark.conf.get(key)
-    files = spark.createDataFrame(gen_code_corpus(60).files)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        run_pipeline(spark, files, DedupConfig(use_aqe=before != "true"))
-    assert spark.conf.get(key) == before
+    spark.conf.set(key, "true")
+    try:
+        files = spark.createDataFrame(gen_code_corpus(60).files)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run_pipeline(spark, files)
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, before)

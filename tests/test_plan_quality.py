@@ -37,14 +37,6 @@ def test_column_pruning_in_read_schema(spark):
     assert "ReadSchema: struct<l_orderkey:bigint>" in plan, plan
 
 
-def test_dim_join_broadcasts(spark):
-    from dedup_domains_spark.plans.queries import QUERIES
-
-    df = QUERIES["nation_revenue_join"].spark_fn(spark, SF)
-    plan = _formatted(df)
-    assert "BroadcastHashJoin" in plan, plan
-
-
 def test_signature_stage_repartitions(spark):
     from dedup_domains_spark.config import DedupConfig
     from dedup_domains_spark.functions.signatures import add_signatures
@@ -346,27 +338,6 @@ def test_exact_dedup_single_shuffle(spark):
     plan = _formatted(res.cluster_map)
     # the window election shuffles on content_sha256 exactly once
     assert plan.count("Exchange hashpartitioning(content_sha256") <= 2, plan
-
-
-def test_asof_join_no_nested_loop(spark):
-    """The as-of join must plan as window-over-union — no range join, no
-    BroadcastNestedLoop/CartesianProduct anywhere."""
-    from dedup_domains_spark.plans.queries import QUERIES
-
-    plan = _formatted(QUERIES["events_asof_orders"].spark_fn(spark, SF))
-    assert "BroadcastNestedLoop" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" in plan, plan
-
-
-def test_range_join_is_bucketed_equi_join(spark):
-    """The 7-day range join must be an equi-join on (user, bucket) — a hash
-    or sort-merge join — never a nested-loop over the inequality."""
-    from dedup_domains_spark.plans.queries import QUERIES
-
-    plan = _formatted(QUERIES["orders_events_range_7d"].spark_fn(spark, SF))
-    assert "BroadcastNestedLoop" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
 
 
 def test_quality_metrics_have_no_shuffle(spark):

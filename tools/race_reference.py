@@ -89,19 +89,22 @@ def time_spark(paths: list[str], reps: int = 2) -> float:
     from dedup_domains_spark import get_spark
     from dedup_domains_spark.operators.domain_mode import dedup_dnsbl
     from dedup_domains_spark.sources.dnsbl import load_dnsbl_files
-    from dedup_domains_spark.sources.sinks import write_survivors_text
+    from dedup_domains_spark.sources.sinks import write_survivor_text_files
 
     spark = get_spark("race", parallelism=32, shuffle_partitions=32)
     # warm-up: one small job through the same plan shape (JIT + python workers)
     warm = load_dnsbl_files(spark, paths[:1])
-    write_survivors_text(
-        dedup_dnsbl(warm.limit(10000)).survivors, f"{OUT}/warm_out"
+    write_survivor_text_files(
+        dedup_dnsbl(warm.limit(10000)).survivors, paths[:1],
+        f"{OUT}/warm_out", ".pruned",
     )
     best = float("inf")
     for i in range(reps):
         t0 = time.time()
         res = dedup_dnsbl(load_dnsbl_files(spark, paths))
-        write_survivors_text(res.survivors, f"{OUT}/spark_out_{i}")
+        write_survivor_text_files(
+            res.survivors, paths, f"{OUT}/spark_out_{i}", ".pruned"
+        )
         best = min(best, time.time() - t0)
     spark.stop()
     return best
@@ -114,10 +117,9 @@ def parity(n_files: int, spark_dir: str) -> bool:
     ok = True
     for fi in range(n_files):
         c = sorted(open(f"{OUT}/feed_{fi}.pruned", "rb").read().splitlines())
-        ours: list[bytes] = []
-        for part in glob.glob(f"{spark_dir}/source=feed_{fi}.fat/part-*"):
-            ours.extend(open(part, "rb").read().splitlines())
-        ours = sorted(ours)
+        ours = sorted(
+            open(f"{spark_dir}/feed_{fi}.pruned", "rb").read().splitlines()
+        )
         if c != ours:
             ok = False
             cs, os_ = set(c), set(ours)
