@@ -63,9 +63,9 @@ HEADLINE = [
     "minhash_lsh_pairs",
     "simhash_pairs",
     "ngram_jaccard_pairs",
-    # the probe inverted-index path is the operator we ship; the cartesian
-    # containment_pairs variant exists only as its brute-force oracle twin
-    # (VERDICT r01 item 4) and is deliberately not benched.
+    # the pipeline's containment operator (winnowed-fingerprint candidates,
+    # Catalyst substring verify); the brute-force cross join is its DuckDB
+    # oracle, not a catalog query
     "containment_probe_pairs",
     "connected_components_ngram",
     "code_pipeline_survivors",

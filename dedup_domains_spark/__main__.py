@@ -43,10 +43,6 @@ def main(argv: list[str] | None = None) -> int:
     pc.add_argument("--bands", type=int, default=32)
     pc.add_argument("--jaccard", type=float, default=0.5)
     pc.add_argument("--exact-jaccard", action="store_true")
-    pc.add_argument("--containment-verify", choices=["scan", "suffix_array"],
-                    default="scan",
-                    help="substring verify strategy: per-pair scan or "
-                         "per-container suffix array")
     _add_spark_args(pc)
 
     pd_ = sub.add_parser("dnsbl", help="reference-parity domain mode")
@@ -103,7 +99,6 @@ def main(argv: list[str] | None = None) -> int:
             bands=args.bands, rows_per_band=args.num_perm // args.bands,
             jaccard_threshold=args.jaccard,
             use_exact_jaccard=args.exact_jaccard,
-            containment_verify=args.containment_verify,
         )
         corpus = load_code_corpus(spark, args.input)
         res = run_pipeline(

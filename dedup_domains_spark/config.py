@@ -42,13 +42,6 @@ class DedupConfig:
     # don't bother subsuming tiny docs; also sets the winnowing window,
     # min_containee_tokens - shingle_k + 1 shingles (functions/signatures)
     min_containee_tokens: int = 32
-    # verify strategy for candidate (containee, container) pairs:
-    #   "scan"         — a Catalyst contains() predicate per pair, in the
-    #                    JVM (no Python worker)
-    #   "suffix_array" — one suffix array per container, binary search per
-    #                    containee (wins when many candidates share a
-    #                    container, e.g. boilerplate/license carriers)
-    containment_verify: str = "scan"
 
     # --- skew / partitioning ---
     max_bucket_size: int = 64          # LSH bucket cap before salting splits it
@@ -67,11 +60,6 @@ class DedupConfig:
                 f"min_containee_tokens ({self.min_containee_tokens}) must be "
                 f"at least shingle_k ({self.shingle_k}): a containee needs "
                 f"one whole winnowing window"
-            )
-        if self.containment_verify not in ("scan", "suffix_array"):
-            raise ValueError(
-                f"containment_verify must be 'scan' or 'suffix_array', "
-                f"got {self.containment_verify!r}"
             )
 
     def config_hash(self) -> str:

@@ -71,21 +71,6 @@ def min_uid_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray
     return nodes, nodes[parent]
 
 
-def _truncate(df: DataFrame, durable: bool = False) -> DataFrame:
-    """Cut lineage between rounds, lazily: the round's count materializes it.
-
-    Default is localCheckpoint, computed once (a reliable checkpoint runs
-    the plan a second time for its write pass). Its blocks die with an
-    executor, but the pipeline's durability story is the per-STAGE
-    checkpoint tables (plans/checkpoint.py). Pass durable=True (the
-    pipeline does when the caller gives a checkpoint_dir) to use reliable
-    checkpoints inside the loop as well."""
-    sc = df.sparkSession.sparkContext
-    if durable and sc._jsc.sc().checkpointDir().isDefined():
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
-
-
 def _step(adj: DataFrame, labels: DataFrame) -> DataFrame:
     """One distributed round: min label over each node's neighborhood, then
     one pointer jump (labels map node→label and every label IS a node, so
@@ -137,8 +122,7 @@ def _finish_on_driver(contracted: DataFrame, labels: DataFrame | None, dtype) ->
 
 
 def connected_components(
-    edges: DataFrame, max_iterations: int = 20, stats: dict | None = None,
-    durable: bool = False,
+    edges: DataFrame, max_iterations: int = 20, stats: dict | None = None
 ) -> DataFrame:
     """edges(id_a, id_b) -> (uid, cluster_id) for every endpoint.
 
@@ -179,7 +163,9 @@ def connected_components(
                 )).alias("_e")).select("_e.src", "_e.dst").cache()
                 labels = adj.select(F.col("src").alias("uid")).distinct().withColumn(
                     "cluster_id", F.col("uid"))
-            labels = _truncate(_step(adj, labels), durable)
+            # lazy: the round's count materializes it, and computes it once
+            # (a reliable checkpoint runs the plan again for its write)
+            labels = _step(adj, labels).localCheckpoint(eager=False)
             if contracted is not pairs:
                 contracted.unpersist()
             contracted = _contract(pairs, labels).cache()

@@ -88,27 +88,17 @@ def containment_candidates(
     )
 
 
-def join_pair_contents(
-    candidates: DataFrame, df: DataFrame, id_col: str = "uid"
-) -> DataFrame:
-    """Attach both sides' content to candidate (small_id, big_id) pairs as
-    (_ct_s, _ct_b) — shared scaffolding for every verify strategy."""
-    c = df.select(F.col(id_col).alias("_cid"), F.col("content").alias("_ct"))
-    return (
-        candidates
-        .join(c.withColumnRenamed("_cid", "small_id").withColumnRenamed("_ct", "_ct_s"), "small_id")
-        .join(c.withColumnRenamed("_cid", "big_id").withColumnRenamed("_ct", "_ct_b"), "big_id")
-    )
-
-
 def verify_containment(
     candidates: DataFrame, df: DataFrame, id_col: str = "uid"
 ) -> DataFrame:
     """True substring check: content(small) in content(big). A null or
     empty content on either side is never contained nor a container."""
+    c = df.select(F.col(id_col).alias("_cid"), F.col("content").alias("_ct"))
     small, big = F.col("_ct_s"), F.col("_ct_b")
     return (
-        join_pair_contents(candidates, df, id_col)
+        candidates
+        .join(c.withColumnRenamed("_cid", "small_id").withColumnRenamed("_ct", "_ct_s"), "small_id")
+        .join(c.withColumnRenamed("_cid", "big_id").withColumnRenamed("_ct", "_ct_b"), "big_id")
         .filter((F.length(small) > 0) & (F.length(big) > 0) & big.contains(small))
         .select("small_id", "big_id")
     )

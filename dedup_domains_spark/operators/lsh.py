@@ -2,12 +2,12 @@
 
 Band keys are computed JVM-side: ``xxhash64`` over a slice of the signature
 array — the signature pandas UDF is the only Python in the path. The band
-explode is a bounded fan-out (x bands); the shuffle key is (band, band_hash)
-and skew is handled by the shared salted-star machinery in buckets.py.
+explode is a bounded fan-out (x bands). fused_candidate_pairs shuffles the
+bands together with the SimHash blocks on (kind, k1, k2), and skew is
+handled by the shared salted-star machinery in buckets.py.
 """
 
 from __future__ import annotations
-
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,14 +44,6 @@ def lsh_band_table(
             F.expr(f"xxhash64(band, slice(minhash, band * {r} + 1, {r}))")
             .alias("band_hash"),
         )
-    )
-
-
-def lsh_candidate_pairs(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid") -> DataFrame:
-    """Candidate edges (id_a, id_b) from LSH banding; distinct, a < b."""
-    bt = lsh_band_table(sig_df, cfg, id_col)
-    return pairs_from_buckets(
-        bt, ["band", "band_hash"], id_col=id_col, max_bucket_size=cfg.max_bucket_size
     )
 
 

@@ -3,9 +3,11 @@ candidate sweep (SURVEY.md §2.3; BASELINE.json north_star).
 
 Pigeonhole blocking: split the 64-bit fingerprint into (hamming_max + 1)
 blocks; any pair within Hamming distance d shares at least one block intact.
-Bucket key = (block index, block value); the same salted-star machinery
-bounds skew. Pairs are verified exactly with ``bit_count(a XOR b) <= d``
-JVM-side before being emitted.
+Bucket key = (block index, block value). The blocks join the LSH bands in
+one bucket table (lsh.fused_candidate_pairs), whose salted-star machinery
+bounds skew. No Hamming check follows: a pair that shares a block is
+emitted without testing ``bit_count(a XOR b) <= d``, and the MinHash
+estimate verify is the acceptance gate for every candidate.
 """
 
 from __future__ import annotations
@@ -14,7 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dedup_domains_spark.config import DedupConfig
-from dedup_domains_spark.operators.buckets import pairs_from_buckets
 
 
 def simhash_block_table(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid") -> DataFrame:
@@ -37,23 +38,3 @@ def simhash_block_table(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid"
         .select(id_col, "_b.block", "_b.block_val")
     )
 
-
-def simhash_candidate_pairs(
-    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "uid"
-) -> DataFrame:
-    """Candidate edges within Hamming distance simhash_hamming_max."""
-    bt = simhash_block_table(sig_df, cfg, id_col)
-    cand = pairs_from_buckets(
-        bt, ["block", "block_val"], id_col=id_col, max_bucket_size=cfg.max_bucket_size
-    )
-    sims = sig_df.select(F.col(id_col).alias("_sid"), F.col("simhash").alias("_sh"))
-    cand = (
-        cand.join(sims.withColumnRenamed("_sid", "id_a").withColumnRenamed("_sh", "_sh_a"), "id_a")
-        .join(sims.withColumnRenamed("_sid", "id_b").withColumnRenamed("_sh", "_sh_b"), "id_b")
-        .filter(
-            F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
-            <= cfg.simhash_hamming_max
-        )
-        .select("id_a", "id_b")
-    )
-    return cand

@@ -45,7 +45,6 @@ from dedup_domains_spark.operators.containment import contained_pairs
 from dedup_domains_spark.operators.exact_dedup import exact_dedup
 from dedup_domains_spark.operators.lsh import fused_candidate_pairs
 from dedup_domains_spark.operators.representative import elect_representatives
-from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
 from dedup_domains_spark.operators.verify import verify_pairs_estimate, verify_pairs_exact
 from dedup_domains_spark.functions.signatures import add_signatures
 from dedup_domains_spark.plans.checkpoint import CheckpointContext, input_fingerprint
@@ -201,11 +200,7 @@ def _build_pipeline(
     near = ckpt.stage(near.select("id_a", "id_b"), "near_pairs")
 
     # ---- D2 analog: exact-substring containment ----
-    pairs_fn = (
-        suffix_contained_pairs if cfg.containment_verify == "suffix_array"
-        else contained_pairs
-    )
-    contained = pairs_fn(exact_reps, sig_df, cfg)
+    contained = contained_pairs(exact_reps, sig_df, cfg)
     contained = ckpt.stage(contained, "contained_pairs").cache()
 
     # ---- edge union: near + containment + exact-dup membership ----
@@ -238,7 +233,7 @@ def _build_pipeline(
     cc_stats: dict = {}
     labels = connected_components(
         edges.select("id_a", "id_b"), max_iterations=cfg.cc_max_iterations,
-        stats=cc_stats, durable=checkpoint_dir is not None,
+        stats=cc_stats,
     )
     singletons = (
         dedupable.select("uid")

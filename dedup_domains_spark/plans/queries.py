@@ -1153,43 +1153,6 @@ def incremental_near_dup(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Exact-substring containment pairs (D2 analog, SQL-expressible variant)
-# ---------------------------------------------------------------------------
-
-@_q(
-    "containment_pairs",
-    """
-    SELECT a.doc_id AS small_id, b.doc_id AS big_id
-    FROM documents a JOIN documents b
-      ON a.doc_id != b.doc_id
-     AND length(a.text) < length(b.text)
-     AND position(a.text IN b.text) > 0
-    """,
-    "D2:containment",
-)
-def containment_pairs_q(spark, sf_dir):
-    # deliberately brute force (the probe path's oracle twin) — but the
-    # streamed side of the nested-loop join inherits the single-row-group
-    # scan's ONE partition, serializing the O(n²) instr sweep on one core;
-    # repartitioning it is a pure parallelism fix (guide §2.5), not a
-    # change to the algorithm
-    d = _t(spark, sf_dir, "documents")
-    a = d.select(
-        F.col("doc_id").alias("small_id"), F.col("text").alias("ta")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    b = d.select(F.col("doc_id").alias("big_id"), F.col("text").alias("tb"))
-    return (
-        a.crossJoin(b)
-        .filter(
-            (F.col("small_id") != F.col("big_id"))
-            & (F.length("ta") < F.length("tb"))
-            & (F.instr(F.col("tb"), F.col("ta")) > 0)
-        )
-        .select("small_id", "big_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Connected components over n-gram-Jaccard edges (union-find vs recursive CTE)
 # ---------------------------------------------------------------------------
 
@@ -1530,27 +1493,18 @@ def pipeline_planted_recall(spark, sf_dir):
 )
 def containment_probe_pairs(spark, sf_dir):
     """The SCALE-PATH containment operator (winnowed fingerprints → inverted
-    index join → substring verify, operators/containment.py) checked against
-    the brute-force cross-join oracle: the fingerprint path must find exactly
-    the pairs the O(n²) twin finds. This is the query the bench times; the
-    cartesian variant (containment_pairs) remains only as the oracle twin."""
-    from dedup_domains_spark.operators.containment import contained_pairs
+    index join → DF cap → full-house → substring verify,
+    operators/containment.py, the pipeline's own path) checked against the
+    brute-force cross-join oracle: the fingerprint path must find exactly
+    the pairs the O(n²) oracle finds (reference rule D2,
+    src/domaintree.c:330-339).
 
-    return _containment_over_docs(spark, sf_dir, contained_pairs)
-
-
-def _containment_over_docs(spark, sf_dir, pairs_fn):
-    """Shared scaffolding for the containment scale-path queries: documents
-    through the real operator machinery, keyed by doc_id. The two public
-    queries differ only in the verify strategy inside pairs_fn.
-
-    r06: the operator is keyed on doc_id (id_col) directly — the old
-    uid=xxhash64(repo,path,commit) keying added two remap joins at the end
-    plus an md5/xxhash projection inside every scan subtree, for a key the
-    operator only needs to be unique. The oracled path (winnowed
-    fingerprints → inverted index → DF cap → full-house → substring verify)
-    is the pipeline's."""
+    The operator is keyed on doc_id (id_col) directly: a
+    uid = xxhash64(repo, path, commit) key would add two remap joins plus a
+    hash projection inside every scan subtree, for a key the operator only
+    needs to be unique."""
     from dedup_domains_spark.functions.signatures import add_signatures
+    from dedup_domains_spark.operators.containment import contained_pairs
 
     cfg = DedupConfig(min_containee_tokens=8)
     df = _t(spark, sf_dir, "documents").select(
@@ -1563,34 +1517,7 @@ def _containment_over_docs(spark, sf_dir, pairs_fn):
         df, cfg, fields=("fingerprints",),
         repartition=spark.sparkContext.defaultParallelism,
     ).drop("content"))
-    return pairs_fn(df, sig, cfg, id_col="doc_id").select("small_id", "big_id")
-
-
-# ---------------------------------------------------------------------------
-# Suffix-array containment (the north-rule's named verify path)
-# ---------------------------------------------------------------------------
-
-@_q(
-    "suffix_containment_pairs",
-    """
-    SELECT a.doc_id AS small_id, b.doc_id AS big_id
-    FROM documents a JOIN documents b
-      ON a.doc_id != b.doc_id
-     AND length(a.text) < length(b.text)
-     AND position(a.text IN b.text) > 0
-    """,
-    "D2: fingerprint candidates + per-container SUFFIX-ARRAY verify vs brute force",
-)
-def suffix_containment_pairs(spark, sf_dir):
-    """Same fingerprint-index candidate generation as containment_probe_pairs,
-    but verified with the suffix-array path (operators/suffix_array.py): one
-    Manber-Myers suffix array per container, binary search per containee —
-    the many-candidates-per-container regime. Must find exactly the pairs
-    the O(n^2) brute-force oracle finds (reference rule D2,
-    src/domaintree.c:330-339)."""
-    from dedup_domains_spark.operators.suffix_array import suffix_contained_pairs
-
-    return _containment_over_docs(spark, sf_dir, suffix_contained_pairs)
+    return contained_pairs(df, sig, cfg, id_col="doc_id").select("small_id", "big_id")
 
 
 # ---------------------------------------------------------------------------

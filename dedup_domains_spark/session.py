@@ -18,12 +18,13 @@ from pyspark.sql import SparkSession
 # a static conf; the cache is built once per JVM, at its first codegen
 # compile). Spark's default of 100 is under one code pass. Distinct Janino
 # classes of a first pass, each shape in a fresh local[4] session:
-#   code pass, scan verify                       194
-#   code pass, suffix_array verify               211
+#   code pass (Catalyst containment verify)      194
 #   code pass, use_exact_jaccard                 193
 #   dnsbl pass, C order                           50
 #   dnsbl pass, pointer / standard order          79 / 202 over three passes
 #   all six shapes, two passes each, one session 463
+# (the six shapes were taken with a suffix-array containment verify, 211
+# classes on its own, which the engine no longer has)
 # At 100, each warm code pass evicted and recompiled 193 classes (1.2-1.4 s
 # of Janino per pass, then JIT warm-up of the new classes). 1024 holds
 # every shape at once with about 2x headroom, so a session that runs them
@@ -84,13 +85,16 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", exec_pythonpath)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(parallelism))
-        # AQE: runtime coalescing + skew-join splitting — the first line of
-        # defense against Zipf-skewed band buckets at scale.
+        # AQE (runtime coalescing + skew-join splitting) governs the sinks
+        # and the dnsbl pass. run_pipeline turns it off for its own stages
+        # (plans/pipeline.PIPELINE_AQE), whose skew is handled explicitly,
+        # and restores this value on exit.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for all pandas UDF traffic: the signature kernel, and the
-        # suffix-array containment verify when it is chosen.
+        # Arrow for all pandas traffic: the signature kernel, the regex-kill
+        # fallback UDF, the Bloom prefilter, the streaming state and the
+        # driver union-find's toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # Keep broadcast autodetection on; dims like the FULL-key set are

@@ -77,58 +77,6 @@ def test_bloom_prefilter_empty_corpus(spark):
     assert out.count() == 10
 
 
-def test_suffix_verify_empty_candidates(spark):
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
-
-    df = spark.createDataFrame([(1, "abc")], ["uid", "content"])
-    cand = spark.createDataFrame([], "small_id long, big_id long")
-    assert suffix_verify_containment(cand, df).count() == 0
-
-
-def test_suffix_array_unicode_content(spark):
-    """Multi-byte UTF-8 content: the byte-level suffix array must agree with
-    Python's substring semantics (utf-8 byte containment == str containment
-    for whole-string patterns)."""
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
-
-    docs = [
-        (1, "naïve café ☕"),
-        (2, "prefix naïve café ☕ suffix 日本語"),
-        (3, "日本語テキスト"),
-    ]
-    df = spark.createDataFrame(docs, ["uid", "content"])
-    cand = spark.createDataFrame([(1, 2), (3, 2), (1, 3)], ["small_id", "big_id"])
-    got = {tuple(r) for r in suffix_verify_containment(cand, df).collect()}
-    assert got == {(1, 2)}
-
-
-def test_suffix_verify_null_and_empty_content(spark):
-    """Null/empty content must be REJECTED, never raise — the same contract
-    as the scan verifier (containment.py `bool(s) and bool(b)`)."""
-    from dedup_domains_spark.operators.containment import verify_containment
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
-
-    df = spark.createDataFrame(
-        [(1, "abc def"), (2, None), (3, ""), (4, "xx abc def yy")],
-        "uid long, content string",
-    )
-    cand = spark.createDataFrame(
-        [(1, 4), (2, 4), (3, 4), (1, 2), (1, 3)], ["small_id", "big_id"]
-    )
-    a = {tuple(r) for r in verify_containment(cand, df).collect()}
-    b = {tuple(r) for r in suffix_verify_containment(cand, df).collect()}
-    assert a == b == {(1, 4)}
-
-
-def test_config_rejects_bad_containment_verify():
-    import pytest as _pytest
-
-    from dedup_domains_spark.config import DedupConfig
-
-    with _pytest.raises(ValueError, match="containment_verify"):
-        DedupConfig(containment_verify="suffix-array")
-
-
 def test_config_rejects_containee_shorter_than_shingle():
     """A containee must span one whole winnowing window of
     min_containee_tokens - shingle_k + 1 shingles."""

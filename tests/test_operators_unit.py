@@ -115,73 +115,16 @@ def test_probes_only_batch_matches_full_signatures():
 
 
 # ---------------------------------------------------------------------------
-# Suffix array (operators/suffix_array.py)
+# Containment verify (operators/containment.py)
 # ---------------------------------------------------------------------------
-
-def test_suffix_array_matches_sorted_suffixes():
-    import random
-    import numpy as np
-    from dedup_domains_spark.operators.suffix_array import build_suffix_array
-
-    rng = random.Random(11)
-    for _ in range(60):
-        n = rng.randint(0, 120)
-        s = bytes(rng.choice(b"abAB {}();\n") for _ in range(n))
-        sa = build_suffix_array(s)
-        truth = sorted(range(n), key=lambda i: s[i:])
-        assert list(sa) == truth
-
-
-def test_sa_contains_matches_python_in():
-    import random
-    from dedup_domains_spark.operators.suffix_array import (
-        build_suffix_array, sa_contains,
-    )
-
-    rng = random.Random(12)
-    for _ in range(40):
-        s = bytes(rng.choice(b"xyz ") for _ in range(rng.randint(1, 80)))
-        sa = build_suffix_array(s)
-        for _ in range(15):
-            m = rng.randint(0, 6)
-            if rng.random() < 0.5 and len(s) > m:
-                start = rng.randint(0, len(s) - m)
-                p = s[start:start + m]
-            else:
-                p = bytes(rng.choice(b"xyzw ") for _ in range(m))
-            assert sa_contains(s, sa, p) == (p in s)
-
-
-def test_suffix_verify_agrees_with_scan_verify(spark):
-    """Per-container suffix-array verify must keep exactly the pairs the
-    plain-scan verifier keeps."""
-    from dedup_domains_spark.operators.containment import verify_containment
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
-
-    docs = [
-        (1, "def f(x): return x + 1"),
-        (2, "header\ndef f(x): return x + 1\nfooter"),
-        (3, "completely different content here"),
-        (4, "return x"),
-    ]
-    df = spark.createDataFrame(docs, ["uid", "content"])
-    cand = spark.createDataFrame(
-        [(1, 2), (3, 2), (4, 1), (4, 3)], ["small_id", "big_id"]
-    )
-    a = {tuple(r) for r in verify_containment(cand, df).collect()}
-    b = {tuple(r) for r in suffix_verify_containment(cand, df).collect()}
-    assert a == b == {(1, 2), (4, 1)}
-
 
 def test_verify_containment_matches_python_in(spark):
     """The Catalyst verify (a byte search over UTF-8) keeps exactly the
     pairs Python's ``small in big`` keeps on decoded strings, over every
     ordered pair of crafted contents: é precomposed and decomposed, a lone
     combining mark, CJK, emoji, a containee at the start and at the end of
-    its container, identical texts, an empty string and None. The
-    suffix-array verify keeps the same pairs."""
+    its container, identical texts, an empty string and None."""
     from dedup_domains_spark.operators.containment import verify_containment
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
 
     texts = [
         "café au lait", "café", "cafe\u0301", "e\u0301", "\u0301", "caf",
@@ -200,15 +143,13 @@ def test_verify_containment_matches_python_in(spark):
     assert got == want
     assert {(5, 0), (6, 0), (8, 7), (10, 7), (12, 11), (1, 14), (14, 1),
             (4, 2), (3, 2)} <= want                # the cases are exercised
-    assert {tuple(r) for r in suffix_verify_containment(cand, df).collect()} == want
 
 
-def test_suffix_verify_mega_fanin_salted(spark):
-    """A container probed by many candidates is salted into subgroups
-    (ADVICE r02): with max_fanin far below the fan-in, results must be
-    identical to the unsalted path — every true containee kept, every
-    non-containee dropped, no duplicates."""
-    from dedup_domains_spark.operators.suffix_array import suffix_verify_containment
+def test_verify_containment_mega_fanin(spark):
+    """One container probed by many candidates (a boilerplate or license
+    carrier): every true containee is kept, every non-containee dropped,
+    and no pair is emitted twice."""
+    from dedup_domains_spark.operators.containment import verify_containment
 
     carrier = " ".join(f"tok{i}" for i in range(400))
     docs = [(1000, carrier)]
@@ -221,10 +162,7 @@ def test_suffix_verify_mega_fanin_salted(spark):
         [(i, 1000) for i in range(60)] + [(100 + i, 1000) for i in range(60)],
         ["small_id", "big_id"],
     )
-    got = sorted(
-        tuple(r) for r in
-        suffix_verify_containment(cand, df, max_fanin=16).collect()
-    )
+    got = sorted(tuple(r) for r in verify_containment(cand, df).collect())
     assert got == [(i, 1000) for i in range(60)]
 
 

@@ -153,20 +153,6 @@ def test_checkpoint_resume_sees_in_place_overwrite(spark, tmp_path):
     assert rerun != old
 
 
-def test_suffix_verify_pipeline_matches_scan(spark):
-    """containment_verify='suffix_array' must yield the same survivor set as
-    the default scan verify — the two verify paths are interchangeable."""
-    corpus = gen_code_corpus(150)
-    files = spark.createDataFrame(corpus.files)
-    scan = run_pipeline(spark, files, DedupConfig())
-    sfx = run_pipeline(
-        spark, files, DedupConfig(containment_verify="suffix_array")
-    )
-    a = {tuple(r) for r in scan.survivors.select("repo", "path", "commit").collect()}
-    b = {tuple(r) for r in sfx.survivors.select("repo", "path", "commit").collect()}
-    assert a == b
-
-
 def test_partition_stats_reconcile(spark):
     """Per-partition stats must sum to the stage totals and expose the skew
     profile of the cached stages."""

@@ -89,7 +89,6 @@ def main() -> None:
         master=f"local-cluster[{args.workers},{args.cores},{worker_mb}]",
         extra_conf={"spark.executor.memory": f"{args.executor_mem_mb}m"},
     )
-    spark.sparkContext.setCheckpointDir("/dev/shm/spark-tmp/ckpt_scale")
     cfg = DedupConfig()
 
     # warm JIT/python workers so the timed run measures steady state
